@@ -11,20 +11,27 @@ loosely attached to a dup cluster scores near the teleport floor).
 The same operator runs over any (doc_a, doc_b) edge relation — citation
 links, hyperlinks — which is where the 100 TB case lives.
 
-Scale shape — the classic iterative join-agg, same discipline as
-:func:`pgverify_spark.operators.dedup.dup_clusters`:
+PageRank — global (:func:`pagerank`), weighted
+(:func:`pagerank_weighted`) and personalized
+(:func:`pagerank_personalized`) — is ONE kernel, :func:`_rank_walk`;
+the three walks differ only in the contribution expression (the
+weight column) and the init/teleport terms (a literal, or a CASE over
+the seed predicate).  Scale shape — the classic iterative join-agg,
+same discipline as :func:`pgverify_spark.operators.dedup.dup_clusters`:
 
-- edges are symmetrized + deduped ONCE and checkpointed; every
-  iteration re-reads in-memory id-only blocks;
-- one iteration = one equi-join (ranks onto edge sources) + one
-  aggregation (contributions per destination), both hash shuffles on
-  bare ids with map-side combine — 2 shuffles/round, rows ∝ |E|;
-- per-round ``localCheckpoint(eager=True)`` truncates the logical plan
-  so Catalyst analysis cost stays constant per round (measured
-  load-bearing in dup_clusters, same mechanism here; on a dynamic
-  cluster swap for a reliable checkpoint dir);
-- out-degrees ride ON the edge relation (joined once, before the
-  loop), so the per-round join touches exactly two relations.
+- one edge build (:func:`_edge_cache`): the pairs are checkpointed,
+  symmetrized, hash-exchanged ONCE on the source id, then parallel
+  edges merge and the out-degree window runs in-partition — 1
+  Exchange, no Join, persisted; every round re-reads its in-memory
+  id-only blocks, with the out-degree riding ON each edge row;
+- one round = one ranks-side shuffle-hash join onto the cache + one
+  aggregation (contributions per destination) with map-side combine,
+  rows ∝ |E|;
+- the rank chain stays lazy and is truncated by an eager
+  ``localCheckpoint`` only every ``_CHECKPOINT_EVERY`` rounds.
+
+The triangle statistics and the k-core peel share one oriented
+(low, high) edge relation instead; the peel checkpoints every round.
 
 Cross-engine exactness: ranks are integer PARTS-PER-MILLION and each
 contribution is ``(rank_ppm * damping_pm) DIV (1000 * degree)`` —
@@ -54,111 +61,147 @@ _INIT_PPM = 1_000_000
 #: (~24 B/row -> ~48 MB partitions, guide §2.2's sizing).
 _EDGE_ROWS_PER_PART = 2_000_000
 
-
-def _edge_partitions(src: DataFrame) -> int:
-    """Width of the edge-build exchange, derived from the materialized
-    pair count (``src`` is an eager localCheckpoint, so ``count()`` is
-    a block-stats read, not a scan) — never a constant (r12; was
-    ``defaultParallelism``).  FLOOR at the core count: the dedup /
-    degree-aggregate / join consumers hash and compare every edge row,
-    which is CPU work that wants all cores — a 1-partition edge build
-    at sf0.1 measured +0.4..+0.6 s per pagerank entry on the frozen
-    bench protocol (the no-floor variant's profiler-based claim did
-    not replicate).  At 100 TB this yields rows/2M well-sized
-    partitions, far above the floor."""
-    return _edge_partitions_from_count(src.sparkSession, src.count())
+#: The rank chain stays lazy (one action evaluates the whole unrolled
+#: tree); every this many rounds it is truncated with an eager
+#: localCheckpoint so Catalyst analysis cost stays bounded on deep runs
+#: (dup_clusters' measured per-round plan growth started past ~10
+#: rounds).  Never engages at the registry's 3-4 rounds.
+_CHECKPOINT_EVERY = 8
 
 
-def _edge_partitions_from_count(spark, n_pairs: int, floor: int | None = None) -> int:
-    """:func:`_edge_partitions` from an already-known pair count, so
-    callers that need the count anyway (the empty-graph check) read the
-    checkpoint's block stats ONCE instead of twice (r12 batch 7).
-
-    ``floor`` defaults to the core count — right for the BALANCED
-    build, whose consumers (distinct dedup, degree aggregate, join)
-    hash and compare every edge row: CPU work that wants cores (the
-    no-floor variant measured +0.4..0.6 s per entry in r12).  The
-    DEDUPED build passes ``floor=2``: its only build consumer is an
-    in-partition count/sum window, and the per-round rank
-    join/aggregate it pins the width of are shuffle-light id
-    relations — a small graph wants few well-fed tasks, not core-count
-    stage scheduling four rounds deep (r13 interleaved A/B, min of 3
-    alternating reps at sf0.1: plain 3.75→2.93 s, weighted 5.13→3.07,
-    personalized 3.82→2.58; every replicate ordered the same way).
-    Floor 2, not 1: ``repartition(1, key)`` normalizes to
-    SinglePartition, which DROPS the hash partitioning the per-round
-    join and the weighted build's in-partition groupBy(s, t) consume
-    (see dedup.dup_clusters).  At scale rows/2M dominates either
-    floor."""
-    par = spark.sparkContext.defaultParallelism if floor is None else floor
-    return max(par, min(n_pairs // _EDGE_ROWS_PER_PART + 1, 1 << 20))
+def _edge_partitions_from_count(n_pairs: int) -> int:
+    """Width of the edge-build exchange, derived from the pair count —
+    never a constant: rows/2M partitions, floor 2.  The per-round rank
+    join/aggregate inherit this width, and a small graph wants few
+    well-fed tasks (r13 interleaved A/B at sf0.1 against a core-count
+    floor: plain 3.75→2.93 s, weighted 5.13→3.07, personalized
+    3.82→2.58).  Floor 2, not 1: ``repartition(1, key)`` normalizes to
+    SinglePartition, which DROPS the hash partitioning the in-partition
+    merge, the degree window and the per-round join consume (see
+    dedup.dup_clusters).  At scale rows/2M dominates."""
+    return max(2, min(n_pairs // _EDGE_ROWS_PER_PART + 1, 1 << 20))
 
 
-def _edge_cache_deduped(sym: DataFrame, nparts: int, weighted: bool) -> DataFrame:
-    """Single-exchange (edges ⋈ degrees)-equivalent cache for callers
-    that GUARANTEE the symmetrized pair stream is duplicate-free
-    (``deduped_pairs=True`` — see :func:`pagerank`): one hash exchange
-    on ``s`` at the size-derived width, then everything else runs
-    in-partition (guide §2.4, r12 batch 7):
+def _edge_cache(sym: DataFrame, nparts: int, weighted: bool) -> DataFrame:
+    """The (edges ⋈ degrees) relation every rank round reads, built with
+    ONE hash exchange on ``s`` at ``nparts``; everything after it runs
+    in-partition (guide §2.4):
 
-    - unweighted: the degree is a ``count`` window over ``partition by
-      s`` — no dedup aggregate (input is duplicate-free by contract),
-      no degree exchange (the window's required distribution is the
-      partitioning just established), no join;
-    - weighted: parallel edges (possible even for deduped inputs via
-      48-bit term-hash collisions) merge through ``groupBy(s, t)``,
-      which ALSO plans without an exchange — HashPartitioning(s)
-      satisfies ClusteredDistribution(s, t) — then the out-strength is
-      a ``sum(w)`` window over the same partitioning.
+    - parallel edges merge through ``groupBy(s, t)`` — ``distinct``
+      unweighted, ``sum(w)`` weighted (repeated or reversed input pairs,
+      48-bit term-hash collisions).  HashPartitioning(s) satisfies
+      ClusteredDistribution(s, t), so the merge plans no exchange;
+    - the out-degree (``count``) or out-strength (``sum(w)``) is a
+      window over ``partition by s`` — the partitioning just
+      established, so no degree exchange and no join.
 
-    vs the balanced build: 4 Exchanges + 1 join → 1 Exchange + 1
-    in-partition Window (plan-asserted in tests/test_pipeline_ops.py::
-    test_pagerank_deduped_build_equivalence_and_plan).  This
-    is NOT the reverted batch-1 shape: that one hash-partitioned a
-    possibly-duplicate-heavy raw multiset (skew hazard on hot nodes)
-    and forced the degree join off the planner's broadcast choice;
-    here the input is duplicate-free by contract, so per-task rows
-    equal the FINAL cache's rows — the exact distribution the trailing
-    repartition produced before — and there is no join left to force.
-    Output columns: s, t, d (+ w when weighted), hash-partitioned on
-    ``s`` at ``nparts`` — identical to the balanced build's cache."""
+    1 Exchange, no Join (plan-asserted in tests/test_pipeline_ops.py::
+    test_pagerank_edge_cache_plan), correct for any input multiset.
+    Output columns: s, t, d (+ w when weighted), persisted."""
     from pyspark.sql import Window
 
     part = sym.repartition(nparts, "s")
-    win = Window.partitionBy("s")
     if weighted:
-        merged = part.groupBy("s", "t").agg(F.expr("sum(w)").alias("w"))
-        return merged.withColumn("d", F.sum("w").over(win)).persist()
-    return part.withColumn("d", F.count(F.lit(1)).over(win)).persist()
+        merged, d = part.groupBy("s", "t").agg(F.expr("sum(w)").alias("w")), F.sum("w")
+    else:
+        merged, d = part.distinct(), F.count(F.lit(1))
+    return merged.withColumn("d", d.over(Window.partitionBy("s"))).persist()
 
 
-def pagerank(
+def _rank_walk(
     pairs: DataFrame,
-    iterations: int = 4,
-    checkpoint_every: int = 8,
-    deduped_pairs: bool = False,
+    iterations: int,
+    weighted: bool = False,
+    seed_sql: str | None = None,
 ) -> DataFrame:
+    """The one rank kernel behind :func:`pagerank`,
+    :func:`pagerank_weighted` and :func:`pagerank_personalized`:
+    checkpoint the pairs, symmetrize, build :func:`_edge_cache`, then
+    ``iterations`` synchronous rounds of
+
+        rank'(v) = tele(v) + sum over edges u->v of contrib(u, v)
+
+    where ``contrib`` is ``(rank(u) * 850) DIV (1000 * deg(u))``, with a
+    ``* w(u,v)`` factor and the out-strength as ``deg`` when
+    ``weighted``; ``tele`` and the initial rank are the literals
+    150000 / 1e6 ppm, or — with ``seed_sql`` — a CASE over the seed
+    predicate scaled to full mass (see :func:`pagerank_personalized`).
+
+    Physical shape: the edge cache is persisted once; each round is one
+    ranks-side shuffle-hash join onto it + one map-side-combined
+    aggregate per destination — rows ∝ |E|, id-only.  Shuffle-hash, not
+    broadcast: the planner's per-round broadcast re-collects and
+    re-ships a nodes-sized table every round, and past broadcast size it
+    is the only viable strategy anyway.  Empty input returns zero rows
+    without running the loop (and before any seed check)."""
+    from pgverify_spark.operators.util import release_cached_deps, tag_cached_deps
+
+    w = ("w",) if weighted else ()
+    src = pairs.selectExpr("doc_a", "doc_b", *w).localCheckpoint(eager=True)
+    # the eager checkpoint just materialized the caller's pair pipeline —
+    # any persisted intermediates tagged on it (doc_term_edges' shingle
+    # table) are no longer needed by anything downstream
+    release_cached_deps(pairs)
+    # one block-stats count serves the exchange width AND the
+    # empty-graph check
+    n_pairs = src.count()
+    sym = src.selectExpr("doc_a AS s", "doc_b AS t", *w).unionByName(
+        src.selectExpr("doc_b AS s", "doc_a AS t", *w)
+    )
+    ed = _edge_cache(sym, _edge_partitions_from_count(n_pairs), weighted)
+    if n_pairs == 0:
+        ed.unpersist()
+        return ed.selectExpr("s AS node_id", "CAST(s AS BIGINT) AS rank_ppm")
+    nodes = ed.selectExpr("s AS node").distinct()
+    if seed_sql is None:
+        init, tele = f"CAST({_INIT_PPM} AS BIGINT)", f"CAST({_TELEPORT_PPM} AS BIGINT)"
+    else:
+        counts = nodes.selectExpr(
+            "CAST(count(1) AS BIGINT) AS nv",
+            f"CAST(sum(CASE WHEN {seed_sql} THEN 1 ELSE 0 END) AS BIGINT) AS ns",
+        ).first()
+        nv, ns = int(counts["nv"]), int(counts["ns"] or 0)
+        if ns == 0:
+            ed.unpersist()
+            raise ValueError(
+                f"personalized PageRank needs a non-empty seed set: "
+                f"{seed_sql!r} matched no node"
+            )
+
+        def on_seeds(lit: int) -> str:
+            # plain concatenation, never str.format on a template holding
+            # user SQL: a brace character inside seed_sql (a string
+            # literal like '{"k":1}') would raise at plan-build time
+            return (
+                f"CASE WHEN {seed_sql} THEN CAST({lit} AS BIGINT) "
+                "ELSE CAST(0 AS BIGINT) END"
+            )
+
+        init, tele = on_seeds((_INIT_PPM * nv) // ns), on_seeds((_TELEPORT_PPM * nv) // ns)
+    contrib = f"(rank_ppm * {DAMPING_PM}{' * w' if weighted else ''}) div (1000 * d)"
+    ranks = nodes.selectExpr("node", f"{init} AS rank_ppm")
+    for rnd in range(1, iterations + 1):
+        r = ranks.hint("shuffle_hash")
+        ranks = (
+            ed.join(r, ed["s"] == r["node"])
+            .groupBy("t")
+            .agg(F.expr(f"sum({contrib})").alias("c"))
+            # two projections: the seed CASE reads the column `node`
+            .selectExpr("t AS node", "c")
+            .selectExpr("node", f"CAST({tele} + c AS BIGINT) AS rank_ppm")
+        )
+        if rnd % _CHECKPOINT_EVERY == 0 and rnd < iterations:
+            ranks = ranks.localCheckpoint(eager=True)
+    return tag_cached_deps(ranks.selectExpr("node AS node_id", "rank_ppm"), ed)
+
+
+def pagerank(pairs: DataFrame, iterations: int = 4) -> DataFrame:
     """Integer-exact PageRank over an undirected pair graph.
 
     Input: (doc_a, doc_b) pairs — any BIGINT node ids (documents,
     shingle-term nodes, URLs...); extra columns are ignored; edges are
     symmetrized and deduplicated, so every endpoint has degree >= 1 and
     there are no dangling nodes by construction.
-
-    ``deduped_pairs=True`` is the caller's guarantee that the
-    SYMMETRIZED pair stream is already duplicate-free — true for any
-    bipartite edge relation whose forward direction is distinct (the
-    registry's doc-term graphs: ``_shingled`` dedupes shingle ints per
-    doc, and doc ids < TERM_NODE_OFFSET <= term ids means the reversed
-    direction can never collide with the forward one).  It switches the
-    edge build to :func:`_edge_cache_deduped` (4 Exchanges + 1 join →
-    1 Exchange); the output is identical because the skipped
-    ``distinct`` is a no-op on duplicate-free input.  **The contract is
-    not runtime-checked** (a distinct-count probe would cost the very
-    exchange the flag removes): passing a stream with duplicate
-    symmetrized pairs silently inflates degrees and double-counts the
-    duplicate edges' contributions — WRONG RANKS, no error.  When in
-    doubt, leave the default (False): the balanced build dedups.
 
     Output: (node_id, rank_ppm BIGINT) for every node in a pair, after
     exactly ``iterations`` synchronous update rounds of
@@ -178,92 +221,11 @@ def pagerank(
     sum would wrap silently there while the DuckDB twin's
     HUGEINT->BIGINT cast errors; inside the bound both are exact.)
 
-    Checkpoint cadence: the (edges ⋈ degrees) relation is checkpointed
-    ONCE and every round re-reads its in-memory blocks; the rank chain
-    itself stays LAZY and one action evaluates the whole unrolled tree
-    (per-round eager checkpoints were measured 2.5x slower at sf0.1 —
-    each one is a scheduled job + materialization barrier, pure
-    overhead at small round counts, and Catalyst re-plans a depth-4
-    tree in microseconds).  Plan growth only matters for LONG chains
-    (dup_clusters' measured 3s→8s per-round growth started past ~10
-    rounds), so ``checkpoint_every`` truncates the chain every N rounds
-    — the default only engages for deep runs."""
-    from pgverify_spark.operators.util import release_cached_deps
-
-    src = pairs.selectExpr("doc_a", "doc_b").localCheckpoint(eager=True)
-    # the eager checkpoint just materialized the caller's pair pipeline —
-    # any persisted intermediates tagged on it (doc_term_edges' shingle
-    # table) are no longer needed by anything downstream
-    release_cached_deps(pairs)
-    # One block-stats count serves the exchange width AND the
-    # empty-graph check (was a separate ed.take(1) job — r12 batch 7).
-    n_pairs = src.count()
-    nparts = _edge_partitions_from_count(
-        src.sparkSession, n_pairs, floor=2 if deduped_pairs else None
-    )
-    sym = src.selectExpr("doc_a AS s", "doc_b AS t").unionByName(
-        src.selectExpr("doc_b AS s", "doc_a AS t")
-    )
-    if deduped_pairs:
-        # single-exchange build; skew-equivalent to the balanced cache
-        # because per-task rows == final cache rows (docstring above)
-        ed = _edge_cache_deduped(sym, nparts, weighted=False)
-    else:
-        # Generic inputs keep the BALANCED build (r12 decision,
-        # measured): the distinct dedups on the uniform (s, t) hash, so
-        # a hot node's pre-dedup pair multiset (arbitrary multiplicity
-        # for unknown callers) never concentrates on one task (guide
-        # §2.5: skew beats exchange count).  persist (not checkpoint):
-        # an InMemoryRelation PRESERVES outputPartitioning, so a
-        # round's join on `s` consumes the cache co-partitioned — at
-        # 100 TB that saves one E-sized exchange PER ROUND.  Width is
-        # size-derived with a core floor — never a constant (r12).
-        edges = sym.distinct()
-        deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        ed = edges.join(deg, "s").repartition(nparts, "s").persist()
-    if n_pairs == 0:  # empty graph: zero-row output, skip the loop
-        ed.unpersist()
-        return ed.selectExpr("s AS node_id", "CAST(s AS BIGINT) AS rank_ppm")
-    ranks = (
-        ed.select("s")
-        .distinct()
-        .selectExpr("s AS node", f"CAST({_INIT_PPM} AS BIGINT) AS rank_ppm")
-    )
-    contrib = f"(rank_ppm * {DAMPING_PM}) div (1000 * d)"
-    for rnd in range(iterations):
-        # shuffle-hash on the RANKS side, not broadcast: the planner's
-        # per-round broadcast re-collects and re-ships a nodes-sized
-        # table every iteration (4 driver round-trips), while the
-        # cached ed relation is already hash-partitioned on s so the
-        # join costs one nodes-sized shuffle and ZERO ed-side exchange.
-        # Measured: iterations in isolation (cache fully materialized)
-        # 2.62s -> 2.19s at sf0.1; END-TO-END entry time is within run
-        # noise (the edge build dominates) — the hint is kept because at
-        # node counts past broadcast size it is the only viable
-        # strategy, so small-scale behavior now matches the plan shape
-        # a cluster run needs.
-        r = ranks.hint("shuffle_hash")
-        ranks = (
-            ed.join(r, ed["s"] == r["node"])
-            .groupBy("t")
-            .agg(F.expr(f"sum({contrib})").alias("c"))
-            .selectExpr("t AS node", f"CAST({_TELEPORT_PPM} + c AS BIGINT) AS rank_ppm")
-        )
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0 and rnd + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    from pgverify_spark.operators.util import tag_cached_deps
-
-    return tag_cached_deps(
-        ranks.selectExpr("node AS node_id", "rank_ppm"), ed
-    )
+    Physical shape: :func:`_rank_walk`."""
+    return _rank_walk(pairs, iterations)
 
 
-def pagerank_weighted(
-    pairs: DataFrame,
-    iterations: int = 4,
-    checkpoint_every: int = 8,
-    deduped_pairs: bool = False,
-) -> DataFrame:
+def pagerank_weighted(pairs: DataFrame, iterations: int = 4) -> DataFrame:
     """Integer-exact PageRank over a WEIGHTED undirected pair graph —
     the salience-weighted twin of :func:`pagerank` (r9 VERDICT item 5):
     a term that occurs 40 times in a document should pull 40× the rank
@@ -285,61 +247,40 @@ def pagerank_weighted(
     with per-edge weights up to ~10^4 the product stays under 2^63 for
     graphs up to ~10^9 nodes — document-corpus scale.  (Outside the
     bound Spark's non-ANSI BIGINT wraps while DuckDB's HUGEINT->BIGINT
-    cast errors; inside it both are exact.)
+    cast errors; inside it both are exact.)"""
+    return _rank_walk(pairs, iterations, weighted=True)
 
-    Physical shape is :func:`pagerank`'s verbatim: the
-    (edges ⋈ strengths) relation is persisted hash-partitioned on
-    ``s`` once; each round is one ranks-side shuffle-hash join + one
-    map-side-combined aggregation — 1 node-sized exchange and 0
-    edge-sized exchanges per round.
-    """
-    from pgverify_spark.operators.util import release_cached_deps
 
-    src = pairs.selectExpr("doc_a", "doc_b", "w").localCheckpoint(eager=True)
-    release_cached_deps(pairs)
-    n_pairs = src.count()
-    nparts = _edge_partitions_from_count(
-        src.sparkSession, n_pairs, floor=2 if deduped_pairs else None
-    )
-    sym = src.selectExpr("doc_a AS s", "doc_b AS t", "w").unionByName(
-        src.selectExpr("doc_b AS s", "doc_a AS t", "w")
-    )
-    if deduped_pairs:
-        # single-exchange build: parallel-edge merge (groupBy(s, t)) and
-        # out-strength window both run in-partition on the one exchange
-        # — deduped_pairs guarantees per-(s, t) multiplicity stays at
-        # the hash-collision level, so no pre-merge skew (see pagerank)
-        ed = _edge_cache_deduped(sym, nparts, weighted=True)
-    else:
-        # balanced (s, t)-keyed edge build for generic inputs — see
-        # pagerank's note on the reverted raw-multiset variant
-        edges = sym.groupBy("s", "t").agg(F.expr("sum(w)").alias("w"))
-        strength = edges.groupBy("s").agg(F.expr("sum(w)").alias("d"))
-        ed = edges.join(strength, "s").repartition(nparts, "s").persist()
-    if n_pairs == 0:
-        ed.unpersist()
-        return ed.selectExpr("s AS node_id", "CAST(s AS BIGINT) AS rank_ppm")
-    ranks = (
-        ed.select("s")
-        .distinct()
-        .selectExpr("s AS node", f"CAST({_INIT_PPM} AS BIGINT) AS rank_ppm")
-    )
-    contrib = f"(rank_ppm * {DAMPING_PM} * w) div (1000 * d)"
-    for rnd in range(iterations):
-        r = ranks.hint("shuffle_hash")
-        ranks = (
-            ed.join(r, ed["s"] == r["node"])
-            .groupBy("t")
-            .agg(F.expr(f"sum({contrib})").alias("c"))
-            .selectExpr("t AS node", f"CAST({_TELEPORT_PPM} + c AS BIGINT) AS rank_ppm")
-        )
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0 and rnd + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    from pgverify_spark.operators.util import tag_cached_deps
+def pagerank_personalized(
+    pairs: DataFrame, seed_sql: str, iterations: int = 4
+) -> DataFrame:
+    """Personalized PageRank: teleport mass lands ONLY on the seed set
+    — rank becomes "importance *as seen from* the seeds" instead of
+    global centrality (Haveliwala 2002, topic-sensitive PageRank; the
+    curation use: salience of terms relative to a trusted document
+    subset rather than the whole corpus).
 
-    return tag_cached_deps(
-        ranks.selectExpr("node AS node_id", "rank_ppm"), ed
-    )
+    ``seed_sql`` is a Spark/DuckDB-portable boolean expression over the
+    column literally named ``node`` (e.g. ``node < 10**15`` = document
+    nodes of the doc-term graph).  With ``nv`` nodes and ``ns`` seeds,
+    each round is
+
+        rank'(v) = tele(v) + sum over u->v of (rank(u)*850) DIV (1000*deg(u))
+        tele(v)  = (150000 * nv) DIV ns   if v is a seed, else 0
+
+    and ranks start at the teleport distribution scaled to full mass
+    (``(1e6 * nv) DIV ns`` on seeds, 0 elsewhere) — total mass stays
+    ~nv×1e6 ppm like the global walk, so ranks are comparable across
+    the two operators.  The integer floor division sheds < ns ppm of
+    mass per round — deterministic, identical in both engines.
+
+    The teleport is not a relation: ``nv`` and ``ns`` are two scalars
+    collected once (an O(1) driver transfer), so ``tele(v)`` is a
+    literal CASE over the seed predicate inlined into each round's
+    projection and into the rank init (Python's ``//`` equals SQL
+    ``div`` for the non-negative operands here).  Raises on an empty
+    seed set — a personalized walk with no seeds has no definition."""
+    return _rank_walk(pairs, iterations, seed_sql=seed_sql)
 
 
 def _oriented_edges(pairs: DataFrame) -> DataFrame:
@@ -506,114 +447,6 @@ def triangle_counts_oracle_sql(pairs_sql: str) -> str:
     )
 
 
-def pagerank_personalized(
-    pairs: DataFrame,
-    seed_sql: str,
-    iterations: int = 4,
-    checkpoint_every: int = 8,
-    deduped_pairs: bool = False,
-) -> DataFrame:
-    """Personalized PageRank: teleport mass lands ONLY on the seed set
-    — rank becomes "importance *as seen from* the seeds" instead of
-    global centrality (Haveliwala 2002, topic-sensitive PageRank; the
-    curation use: salience of terms relative to a trusted document
-    subset rather than the whole corpus).
-
-    ``seed_sql`` is a Spark/DuckDB-portable boolean expression over the
-    column literally named ``node`` (e.g. ``node < 10**15`` = document
-    nodes of the doc-term graph).  With ``nv`` nodes and ``ns`` seeds,
-    each round is
-
-        rank'(v) = tele(v) + sum over u->v of (rank(u)*850) DIV (1000*deg(u))
-        tele(v)  = (150000 * nv) DIV ns   if v is a seed, else 0
-
-    and ranks start at the teleport distribution scaled to full mass
-    (``(1e6 * nv) DIV ns`` on seeds, 0 elsewhere) — total mass stays
-    ~nv×1e6 ppm like the global walk, so ranks are comparable across
-    the two operators.  The integer floor division sheds < ns ppm of
-    mass per round — deterministic, identical in both engines.
-
-    Physical shape: :func:`pagerank`'s per-round ranks-side
-    shuffle-hash join + map-side-combined aggregate, EXACTLY — the
-    teleport is not a relation at all (r12 batch 7).  ``nv`` and ``ns``
-    are two scalars, collected once (an O(1) driver transfer, the same
-    class as the verify scalars), so ``tele(v)`` becomes a literal CASE
-    over the seed predicate inlined into each round's post-aggregate
-    projection and into the rank init.  That removes, vs the previous
-    shape: the persisted node-sized ``tele`` relation, its
-    materializing seed-check job, the broadcast of the count row, and
-    ONE node-sized join per round.  The mass arithmetic is unchanged
-    (same integers: Python's ``//`` equals SQL ``div`` for the
-    non-negative operands here).  Raises on an empty seed set — a
-    personalized walk with no seeds has no definition.
-    """
-    from pgverify_spark.operators.util import release_cached_deps, tag_cached_deps
-
-    src = pairs.selectExpr("doc_a", "doc_b").localCheckpoint(eager=True)
-    release_cached_deps(pairs)
-    n_pairs = src.count()
-    nparts = _edge_partitions_from_count(
-        src.sparkSession, n_pairs, floor=2 if deduped_pairs else None
-    )
-    sym = src.selectExpr("doc_a AS s", "doc_b AS t").unionByName(
-        src.selectExpr("doc_b AS s", "doc_a AS t")
-    )
-    if deduped_pairs:
-        ed = _edge_cache_deduped(sym, nparts, weighted=False)
-    else:
-        # balanced (s, t)-keyed edge build for generic inputs — see
-        # pagerank's note on the reverted raw-multiset variant
-        edges = sym.distinct()
-        deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        ed = edges.join(deg, "s").repartition(nparts, "s").persist()
-    if n_pairs == 0:
-        ed.unpersist()
-        return ed.selectExpr("s AS node_id", "CAST(s AS BIGINT) AS rank_ppm")
-    nodes = ed.selectExpr("s AS node").distinct()
-    counts = nodes.selectExpr(
-        "CAST(count(1) AS BIGINT) AS nv",
-        f"CAST(sum(CASE WHEN {seed_sql} THEN 1 ELSE 0 END) AS BIGINT) AS ns",
-    ).first()
-    nv, ns = int(counts["nv"]), int(counts["ns"] or 0)
-    if ns == 0:
-        ed.unpersist()
-        raise ValueError(
-            f"personalized PageRank needs a non-empty seed set: "
-            f"{seed_sql!r} matched no node"
-        )
-    tele_lit = (_TELEPORT_PPM * nv) // ns
-    init_lit = (_INIT_PPM * nv) // ns
-
-    def tele_of(lit: int) -> str:
-        # plain concatenation, never str.format on a template holding
-        # user SQL: a brace character inside seed_sql (a string literal
-        # like '{"k":1}') would raise at plan-build time (r12 ADVICE)
-        return (
-            f"CASE WHEN {seed_sql} THEN CAST({lit} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-        )
-
-    ranks = nodes.selectExpr("node", f"{tele_of(init_lit)} AS rank_ppm")
-    contrib = f"(rank_ppm * {DAMPING_PM}) div (1000 * d)"
-    for rnd in range(iterations):
-        r = ranks.hint("shuffle_hash")
-        ranks = (
-            ed.join(r, ed["s"] == r["node"])
-            .groupBy("t")
-            .agg(F.expr(f"sum({contrib})").alias("c"))
-            .selectExpr("t AS node", "c")
-            .selectExpr(
-                "node",
-                f"CAST({tele_of(tele_lit)} + c AS BIGINT) AS rank_ppm",
-            )
-        )
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0 and rnd + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return tag_cached_deps(
-        ranks.selectExpr("node AS node_id", "rank_ppm"), ed
-    )
-
-
 def pagerank_personalized_oracle_sql(
     pairs_sql: str, seed_sql: str, iterations: int = 4
 ) -> str:
@@ -734,6 +567,31 @@ def doc_term_edges(df: DataFrame) -> DataFrame:
     return tag_cached_deps(out, sh)
 
 
+def _gram_counts_sql(grams: str) -> str:
+    """Spark SQL for the ``array<struct<g, w BIGINT>>`` of per-distinct-
+    gram occurrence counts of the string array ``grams``: sort it, then
+    emit the run lengths.  ``sg`` (sorted grams) and ``b`` (run starts
+    plus the end sentinel ``size(sg) + 1``) are bound once per row via
+    single-element transform shells.  Every index read is in range for
+    any array size, including 0 and 1, independent of evaluation order:
+    the candidate starts are ``1..size(sg)`` (a slice of
+    ``sequence(0, n)``, never the descending ``sequence(1, 0)``) and
+    the predecessor index is clamped to 1."""
+    starts = (
+        "filter(slice(sequence(0, size(sg)), 2, size(sg)), "
+        "i -> i = 1 OR element_at(sg, i) <> element_at(sg, greatest(i - 1, 1)))"
+    )
+    run = (
+        "named_struct('g', element_at(sg, s), "
+        "'w', CAST(element_at(b, j + 2) - s AS BIGINT))"
+    )
+    return (
+        f"flatten(transform(array(array_sort({grams})), sg -> "
+        f"flatten(transform(array(concat({starts}, array(size(sg) + 1))), b -> "
+        f"transform(slice(b, 1, size(b) - 1), (s, j) -> {run})))))"
+    )
+
+
 def doc_term_edges_weighted(df: DataFrame) -> DataFrame:
     """(doc_a, doc_b, w) weighted doc-term edges: ``w`` is the shingle's
     OCCURRENCE count in the document — the TextRank weighting, where a
@@ -776,25 +634,8 @@ def doc_term_edges_weighted(df: DataFrame) -> DataFrame:
         .selectExpr("doc_id", f"{ngrams_sql('tokens', NGRAM_N, d)} AS grams")
         .persist()
     )
-    # array<struct<g,w>> of per-distinct-gram run lengths over the
-    # sorted gram array; `sg` (sorted grams) and `st` (run starts) are
-    # bound once per row via single-element transform shells.
-    starts = (
-        "filter(sequence(1, size(sg)), "
-        "i -> i = 1 OR element_at(sg, i) <> element_at(sg, i - 1))"
-    )
-    run = (
-        "named_struct('g', element_at(sg, s), 'w', CAST("
-        "(CASE WHEN j = size(st) - 1 THEN size(sg) + 1 "
-        "ELSE element_at(st, j + 2) END) - s AS BIGINT))"
-    )
-    gram_counts = (
-        f"flatten(transform(array(array_sort(grams)), sg -> "
-        f"flatten(transform(array({starts}), st -> "
-        f"transform(st, (s, j) -> {run})))))"
-    )
     out = (
-        grams.selectExpr("doc_id", f"inline({gram_counts})")
+        grams.selectExpr("doc_id", f"inline({_gram_counts_sql('grams')})")
         .selectExpr(
             "doc_id AS doc_a",
             f"{TERM_NODE_OFFSET} + {hex_prefix_int_sql('md5(g)', d)} AS doc_b",

@@ -2296,21 +2296,11 @@ def _pipeline_entries() -> dict[str, tuple[Callable, str]]:
         # PageRank is provably uniform — the term graph is
         # degree-irregular by nature (7k distinct ranks at sf0.01).
         # The same operator runs over any (doc_a, doc_b) edge relation
-        # (web links, citations) at 100 TB.  Perf note: ~3.5s at sf0.1
-        # vs DuckDB 0.6s is the iterative harness floor (4 rounds x
-        # [broadcast + E-sized agg exchange] + 2 materialization
-        # barriers); the gap is fixed-cost, not data-cost — 1.3x at the
-        # 10x probe (SCALE_CHECK "Round-9 operators at 10x").
+        # (web links, citations) at 100 TB.
         "pagerank_term_graph_documents": (
             _table_query(
                 "documents",
-                # deduped_pairs: doc_term_edges emits distinct
-                # (doc, term) pairs and the bipartite id spaces are
-                # disjoint, so the symmetrized stream is duplicate-free
-                # (single-exchange edge cache — graph._edge_cache_deduped)
-                lambda df: graph.pagerank(
-                    graph.doc_term_edges(df), 4, deduped_pairs=True
-                ),
+                lambda df: graph.pagerank(graph.doc_term_edges(df), 4),
             ),
             graph.pagerank_oracle_sql(
                 graph.doc_term_edges_oracle_sql("documents"), 4
@@ -2324,7 +2314,7 @@ def _pipeline_entries() -> dict[str, tuple[Callable, str]]:
             _table_query(
                 "documents",
                 lambda df: graph.pagerank_weighted(
-                    graph.doc_term_edges_weighted(df), 4, deduped_pairs=True
+                    graph.doc_term_edges_weighted(df), 4
                 ),
             ),
             graph.pagerank_weighted_oracle_sql(
@@ -2343,7 +2333,6 @@ def _pipeline_entries() -> dict[str, tuple[Callable, str]]:
                     graph.doc_term_edges(df),
                     f"node < {graph.TERM_NODE_OFFSET}",
                     3,
-                    deduped_pairs=True,
                 ),
             ),
             graph.pagerank_personalized_oracle_sql(

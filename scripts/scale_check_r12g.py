@@ -1,43 +1,20 @@
-"""Round-12 probe, part 7 (batch 7): does the single-exchange
-``deduped_pairs`` pagerank edge cache straggle on hot terms at scale?
+"""A true 100x documents corpus for the replicated-corpus scale probes
+(``scale_check_r13*.py`` import it).
 
-The batch-1 raw-multiset build was reverted over exactly this hazard,
-so the batch-7 replacement carries the burden of proof.  The
-key-shifted replicated corpora are the stress case by construction:
-every replica repeats the same text, so a term that appears in k docs
-at 1x appears in 10k/100k docs at 10x/100x — term-node degree (and
-the per-`s` partition payload the one exchange concentrates) grows
-linearly with scale while doc-node degree stays flat.  If the deduped
-build had a skew straggler, its wall would diverge from the balanced
-build's here.
-
-Measures, at 1x / 10x / 100x documents (warm, min-of-2, idle host):
-``pagerank(doc_term_edges(docs), 4)`` with deduped_pairs=True (the
-registry shape) vs False (the balanced default), same output asserted
-equal at 1x.
-
-    python scripts/scale_check_r12g.py
+scale_check's shared DST100 replicates documents at 1x (only the TPC-H
+anchor tables get real 100x rows).  ``build_docs_100`` writes 100
+key-shifted replicas of the sf0.1 documents instead, so every term's
+document frequency grows 100x — the hot-term skew stress.
 """
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scale_check import (  # noqa: E402
-    DST,
-    SRC,
-    build_replicated,
-    time_min2,
-)
+from scale_check import SRC  # noqa: E402
 
-#: scale_check's shared DST100 replicates documents at 1x (only the
-#: TPC-H anchor tables get real 100x rows) — the first run of this
-#: probe read a bogus fast "100x" cell from it.  Build a TRUE 100x
-#: documents table instead: 100 key-shifted replicas, so every term's
-#: document frequency grows 100x (the skew stress).
 DOCS100 = "/tmp/pgvs_docs_rep100"
 
 
@@ -52,52 +29,3 @@ def build_docs_100() -> None:
         f"FROM read_parquet('{SRC}/documents.parquet'), range(100) t(r)) "
         f"TO '{DOCS100}/documents.parquet' (FORMAT parquet)"
     )
-
-
-def main() -> None:
-    from pgverify_spark.operators import graph
-    from pgverify_spark.operators.util import release_cached_deps
-    from pgverify_spark.session import get_spark
-    from pgverify_spark.sources.parquet import ParquetTarget
-
-    build_replicated()
-    build_docs_100()
-    spark = get_spark("pgverify-spark-scale-r12g")
-    spark.range(1_000_000).select("id").summary().collect()
-
-    def run(sf_dir: str, deduped: bool) -> None:
-        docs = ParquetTarget("t", sf_dir).read(spark, "documents")
-        out = graph.pagerank(graph.doc_term_edges(docs), 4, deduped_pairs=deduped)
-        out.write.format("noop").mode("overwrite").save()
-        release_cached_deps(out)
-        spark.catalog.clearCache()
-
-    # warm both plan shapes
-    run("/root/testdata/sf0.001", True)
-    run("/root/testdata/sf0.001", False)
-
-    # interleave variants WITHIN each scale point (the non-interleaved
-    # first run of this probe mis-read first-run JIT/cache effects as a
-    # +31% deduped regression at 10x; the interleaved replicate reversed
-    # it — instrument note for future probes)
-    reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-    results: dict[str, dict] = {}
-    for label, sf_dir in (("1x", SRC), ("10x", DST), ("100x", DOCS100)):
-        row: dict[str, list[float]] = {"deduped": [], "balanced": []}
-        for _ in range(reps):
-            for name, d in (("deduped", True), ("balanced", False)):
-                row[name].append(round(time_min2(lambda: run(sf_dir, d)), 3))
-        results[label] = {
-            k: {"min": min(v), "all": v} for k, v in row.items()
-        }
-        print(label, json.dumps(results[label]), flush=True)
-
-    # wall growth of the registry shape across the decades
-    g10 = results["10x"]["deduped"]["min"] / results["1x"]["deduped"]["min"]
-    g100 = results["100x"]["deduped"]["min"] / results["10x"]["deduped"]["min"]
-    print(f"deduped wall growth: 1x->10x {g10:.2f}x, 10x->100x {g100:.2f}x")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

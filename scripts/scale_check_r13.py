@@ -9,11 +9,11 @@ Two changes carry at-scale claims that need stress evidence:
    any skew straggler in the round join) grow with scale.  Measures
    ``near_dedup_filter(docs, minhash_lsh_pairs(docs))`` wall at
    1x/10x/100x (warm, min-of-2, interleaved reps).
-2. pagerank's deduped edge cache floor 32 -> 2 (r13 batch 4): at 10x
+2. pagerank's edge cache floor 32 -> 2 (r13 batch 4): at 10x
    (24M pairs) the size-derived width is still floor-bound (13 parts),
    at 100x (240M pairs) rows/2M dominates — the floor must not
    straggle where it binds.  Measures ``pagerank(doc_term_edges(docs),
-   4, deduped_pairs=True)`` wall at the same scale points.
+   4)`` wall at the same scale points.
 
     python scripts/scale_check_r13.py [reps]
 """
@@ -50,12 +50,12 @@ def main() -> None:
 
     def run_pagerank(sf_dir: str) -> None:
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
-        out = graph.pagerank(graph.doc_term_edges(docs), 4, deduped_pairs=True)
+        out = graph.pagerank(graph.doc_term_edges(docs), 4)
         out.write.format("noop").mode("overwrite").save()
         release_cached_deps(out)
         spark.catalog.clearCache()
 
-    probes = {"near_dedup": run_dedup, "pagerank_deduped": run_pagerank}
+    probes = {"near_dedup": run_dedup, "pagerank": run_pagerank}
     for fn in probes.values():  # warm plan shapes
         fn("/root/testdata/sf0.001")
 

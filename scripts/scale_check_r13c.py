@@ -1,15 +1,14 @@
 """Round-13 batch-6 stress: pagerank_weighted at 10x/100x.
 
-Batch 5 stressed the plain deduped pagerank; this run covers the
+Batch 5 stressed the plain pagerank; this run covers the
 weighted sibling after the in-row gram-count rewrite (batch 6).  The
 hazard class to rule out: replicated corpora make every gram 10x/100x
 hotter — the old explode->groupBy(doc_id, gram) build concentrated hot
 gram STRINGS in a shuffle, while the in-row build's work is per-doc
 (array_sort + run-length, O(G log G) per row) and must scale with row
 count only.  Measures the full entry shape
-``pagerank_weighted(doc_term_edges_weighted(docs), 4,
-deduped_pairs=True)`` wall at 1x/10x/100x (noop sink, min-of-2,
-interleaved reps).
+``pagerank_weighted(doc_term_edges_weighted(docs), 4)`` wall at
+1x/10x/100x (noop sink, min-of-2, interleaved reps).
 
     python scripts/scale_check_r13c.py [reps]
 """
@@ -38,9 +37,7 @@ def main() -> None:
 
     def run_wpr(sf_dir: str) -> None:
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
-        out = graph.pagerank_weighted(
-            graph.doc_term_edges_weighted(docs), 4, deduped_pairs=True
-        )
+        out = graph.pagerank_weighted(graph.doc_term_edges_weighted(docs), 4)
         out.write.format("noop").mode("overwrite").save()
         release_cached_deps(out)
         spark.catalog.clearCache()

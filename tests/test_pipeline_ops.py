@@ -3635,45 +3635,46 @@ def test_pagerank_shapes(spark):
     assert graph.pagerank(empty, 4).collect() == []
 
 
-def test_pagerank_deduped_build_equivalence_and_plan(docs):
-    """r12 batch 7: ``deduped_pairs=True`` (the registry's doc-term
-    call) must return bit-identical ranks to the balanced default for
-    all three walks, and its edge cache must plan exactly ONE Exchange
-    with no Join (the 4-exchange balanced build collapsed)."""
+def test_pagerank_edge_cache_plan(docs):
+    """The one edge build: every walk's edge cache plans exactly ONE
+    Exchange and no Join, unweighted and weighted, also on an input
+    with repeated and reversed pairs — and those duplicates leave all
+    three walks' ranks unchanged (weighted: every pair repeated and
+    reversed scales every weight and out-strength by 3, which the floor
+    division cancels)."""
     from pgverify_spark.operators import graph
     from pgverify_spark.operators.util import release_cached_deps
 
     def ranks(out):
+        (ed,) = out._pgvs_cached_deps  # the persisted edge cache
+        plan = ed._jdf.queryExecution().executedPlan().toString()
+        # a cache already materialized (the personalized seed count)
+        # prints its adaptive final plan followed by the initial one
+        plan = plan.split("== Initial Plan ==")[0]
+        assert plan.count("Exchange") == 1 and "Join" not in plan
         got = {r["node_id"]: r["rank_ppm"] for r in out.collect()}
         release_cached_deps(out)
         return got
 
-    pairs = lambda: graph.doc_term_edges(docs)  # noqa: E731
-    assert ranks(graph.pagerank(pairs(), 4, deduped_pairs=True)) == ranks(
-        graph.pagerank(pairs(), 4)
-    )
-    wpairs = lambda: graph.doc_term_edges_weighted(docs)  # noqa: E731
-    assert ranks(
-        graph.pagerank_weighted(wpairs(), 3, deduped_pairs=True)
-    ) == ranks(graph.pagerank_weighted(wpairs(), 3))
-    seed = f"node < {graph.TERM_NODE_OFFSET}"
-    assert ranks(
-        graph.pagerank_personalized(pairs(), seed, 3, deduped_pairs=True)
-    ) == ranks(graph.pagerank_personalized(pairs(), seed, 3))
+    def checkpointed(pairs):
+        cp = pairs.localCheckpoint(eager=True)
+        release_cached_deps(pairs)
+        return cp
 
-    # plan shape of the single-exchange cache (unweighted + weighted)
-    src = pairs().selectExpr("doc_a", "doc_b").localCheckpoint(eager=True)
-    sym = src.selectExpr("doc_a AS s", "doc_b AS t").unionByName(
-        src.selectExpr("doc_b AS s", "doc_a AS t")
+    def with_dups(cp):  # every pair once repeated, once reversed
+        rev = cp.selectExpr("doc_b AS doc_a", "doc_a AS doc_b", *cp.columns[2:])
+        return cp.unionByName(cp).unionByName(rev)
+
+    pairs = checkpointed(graph.doc_term_edges(docs))
+    wpairs = checkpointed(graph.doc_term_edges_weighted(docs))
+    seed = f"node < {graph.TERM_NODE_OFFSET}"
+    assert ranks(graph.pagerank(with_dups(pairs), 4)) == ranks(graph.pagerank(pairs, 4))
+    assert ranks(graph.pagerank_weighted(with_dups(wpairs), 3)) == ranks(
+        graph.pagerank_weighted(wpairs, 3)
     )
-    for weighted, rel in (
-        (False, sym),
-        (True, sym.selectExpr("s", "t", "CAST(1 AS BIGINT) AS w")),
-    ):
-        ed = graph._edge_cache_deduped(rel, 8, weighted)
-        plan = ed._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1 and "Join" not in plan
-        ed.unpersist()
+    assert ranks(graph.pagerank_personalized(with_dups(pairs), seed, 3)) == ranks(
+        graph.pagerank_personalized(pairs, seed, 3)
+    )
 
 
 def test_pagerank_weighted_matches_oracle(docs, duck):
@@ -3726,6 +3727,24 @@ def test_pagerank_weighted_shapes(spark):
     # empty graph: empty output, no loop
     empty = spark.createDataFrame([], "doc_a long, doc_b long, w long")
     assert graph.pagerank_weighted(empty, 4).collect() == []
+
+
+def test_gram_counts_sql_matches_counter(spark):
+    """The weighted doc-term build's in-row run-length count equals
+    ``collections.Counter`` on literal gram arrays of size 0, 1 and 2
+    and with repeated grams — no index-0 or out-of-range read at any
+    size (an empty array once raised INVALID_INDEX_OF_ZERO)."""
+    from collections import Counter
+
+    from pgverify_spark.operators.graph import _gram_counts_sql
+
+    for grams in ([], ["a"], ["b", "a"], ["c", "a", "c", "b", "a", "c"]):
+        lit = "CAST(array({}) AS array<string>)".format(
+            ", ".join(f"'{g}'" for g in grams)
+        )
+        (row,) = spark.range(1).selectExpr(f"{_gram_counts_sql(lit)} AS gc").collect()
+        got = [(x["g"], x["w"]) for x in row["gc"]]
+        assert got == sorted(Counter(grams).items()), grams
 
 
 def test_triangle_counts_shapes_and_oracle(spark, docs, duck):
@@ -3992,6 +4011,15 @@ def test_pagerank_personalized_shapes(spark):
         for r in graph.pagerank_personalized(pairs, "node = 1", 8).collect()
     }
     assert out[1] > out[2] > out[3] > 0
+    # a repeated pair and a reversed pair are the same undirected edges:
+    # identical ranks to the clean path
+    dup = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 2), (3, 2)], "doc_a long, doc_b long"
+    )
+    assert {
+        r["node_id"]: r["rank_ppm"]
+        for r in graph.pagerank_personalized(dup, "node = 1", 8).collect()
+    } == out
     # empty seed set is a definition error, not a silent zero vector
     import pytest
 
