@@ -431,7 +431,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             for table in target.list_tables(spark, config):
                 df = target.read(spark, table)
-                tschema = target.table_schema(spark, table)
+                tschema = target.table_schema(spark, table, df=df)
                 psql = None if "ts" in df.columns else content_bucket_sql(tschema, config)
                 state = os.path.join(args.snapshot_dir, table)
                 if not os.path.isdir(state):
@@ -476,7 +476,7 @@ def main(argv: list[str] | None = None) -> int:
                 # metadata-proven unchanged.
                 bounds = snapshot_affected_day_bounds(spark, tdir, state)
             df = target.read(spark, table)
-            tschema = target.table_schema(spark, table)
+            tschema = target.table_schema(spark, table, df=df)
             # time tables partition by day; dimension tables by a
             # content-derived md5 bucket of the PK (stable across runs)
             psql = None if "ts" in df.columns else content_bucket_sql(tschema, config)
@@ -555,7 +555,7 @@ def main(argv: list[str] | None = None) -> int:
         for table in bad_tables:
             left = targets[0].read(spark, table)
             right = targets[1].read(spark, table)
-            tschema = targets[0].table_schema(spark, table)
+            tschema = targets[0].table_schema(spark, table, df=left)
             out = os.path.join(args.repair_out, table)
             apply_repair(left, right, tschema, config).write.mode(
                 "overwrite"

@@ -61,10 +61,37 @@ from pgverify_spark.operators.util import parallelize as _parallelize
 from pgverify_spark.operators.util import plan_size_bytes, scaled_partitions
 from pgverify_spark.sources.schemas import TableSchema
 
-#: Ordered fingerprint over (k, h) pairs as a single aggregate expression.
-#: array_sort on struct(k, h) orders by k then h (tie-break on row hash).
-_ORDERED_AGG = "md5(array_join(transform(array_sort(collect_list(struct(k, h))), x -> x.h), ''))"
-_NO_ROWS_AGG = f"CASE WHEN count(1) = 0 THEN 'no rows' ELSE {_ORDERED_AGG} END AS fp"
+def _ordered_digest(arr: str, field: str = "h") -> str:
+    """md5 over the ``field`` values of a struct array sorted by all of
+    its fields in order.  The sort makes the digest independent of the
+    order ``collect_list`` saw the rows in (a sort-based aggregate
+    fallback does not keep an upstream sort)."""
+    return f"md5(array_join(transform(array_sort({arr}), x -> x.{field}), ''))"
+
+
+#: Ordered fingerprint over (k, h) pairs as a single aggregate expression:
+#: ordered by k then h (tie-break on row hash).
+_ORDERED_AGG = _ordered_digest("collect_list(struct(k, h))")
+_NO_ROWS_AGG = f"CASE WHEN count(1) = 0 THEN 'no rows' ELSE {_ORDERED_AGG} END"
+#: The same digest over (p, s) partials: each partition's ordered concat
+#: ``s`` of a range-sorted (k, h) relation, keyed by partition id ``p``.
+_PARTIALS_AGG = (
+    "CASE WHEN count(1) = 0 THEN 'no rows' ELSE "
+    f"{_ordered_digest('collect_list(struct(p, s))', 's')} END"
+)
+
+
+def _bookend_half(arr: str) -> str:
+    """md5 over the per-row md5s of a (k, r)-sorted struct array; NULL
+    for an empty array, as the oracle's ``string_agg`` over no rows."""
+    return (
+        f"CASE WHEN size({arr}) = 0 THEN NULL "
+        f"ELSE md5(array_join(transform({arr}, x -> md5(x.r)), '')) END"
+    )
+
+
+def _bookend_combine(start: str, end: str) -> str:
+    return f"md5(concat(coalesce({start}, ''), coalesce({end}, '')))"
 
 
 def _exprs(schema: TableSchema, config: VerifyConfig) -> tuple[str, str, str]:
@@ -128,11 +155,7 @@ def _exact_ordered_fp(kh: DataFrame) -> DataFrame:
         .groupBy("p")
         .agg(F.concat_ws("", F.collect_list("h")).alias("s"))
     )
-    return partials.selectExpr(
-        "CASE WHEN count(1) = 0 THEN 'no rows' ELSE "
-        "md5(array_join(transform(array_sort(collect_list(struct(p, s))), x -> x.s), '')) "
-        "END AS fp"
-    )
+    return partials.selectExpr(f"{_PARTIALS_AGG} AS fp")
 
 
 def _exact_ordered_fp_streaming(kh: DataFrame) -> DataFrame:
@@ -250,9 +273,9 @@ def full_fingerprint(df: DataFrame, schema: TableSchema, config: VerifyConfig | 
     tables are small dimensions.  Same fingerprint either way.
     """
     config = config or VerifyConfig()
-    kh = _kh(df, schema, config)
     if _small(df, config):
-        return kh.selectExpr(_NO_ROWS_AGG)
+        return _small_fused(df, schema, config, ("full",)).selectExpr("fp_full AS fp")
+    kh = _kh(df, schema, config)
     if _stream_hash(df, config):
         return _exact_ordered_fp_streaming(kh)
     return _exact_ordered_fp(kh)
@@ -263,46 +286,52 @@ def bookend_fingerprint(
 ) -> DataFrame:
     """Fingerprint of the first-N and last-N rows in key order.
 
-    ``orderBy().limit()`` compiles to TakeOrderedAndProject (distributed
-    top-K: each task keeps N rows, driver merges) — no global sort, no
-    full shuffle, exactly the plan wanted at scale.  Both subsets are
-    fingerprinted in ascending order, then combined as
+    Both subsets are fingerprinted in ascending order, then combined as
     ``md5(concat(start, end))`` (query.go:259-276; the reference
     aggregates the tail subset in descending scan order — ascending here,
-    a deterministic-either-way choice applied on both compare sides).
+    a deterministic-either-way choice applied on both compare sides).  An
+    empty subset contributes NULL, i.e. nothing, exactly as the oracle's
+    ``string_agg`` over no rows.
 
     Single-hash-scan design: rows are ordered by ``(k, r)`` where ``r``
     is the canonical row *string* — binary-UTF8 comparison orders it
     identically in Spark and DuckDB, so it is a deterministic
     duplicate-key tiebreak that costs no md5 — and the per-row md5 is
-    computed only for the <= 2N surviving rows inside the final
-    aggregate.  The earlier ``(k, h)`` ordering evaluated the full-row
-    md5 for *every* row in *both* top-K passes; the reference pays the
-    same double scan (query.go:232-278), so this is an improvement, not
-    a parity deviation (the fingerprint differs from the reference's by
-    tiebreak choice either way, which only matters under duplicate keys
-    the reference handles nondeterministically).
+    computed only for the <= 2N surviving rows.  The reference pays a
+    double scan with per-row hashing (query.go:232-278), so this is an
+    improvement, not a parity deviation (the fingerprint differs from the
+    reference's by tiebreak choice either way, which only matters under
+    duplicate keys the reference handles nondeterministically).
+
+    Small inputs take the bookend column of :func:`_small_fused` (the
+    first and last N of one sorted collect).  Large inputs use
+    ``orderBy().limit()``, which compiles to TakeOrderedAndProject
+    (distributed top-K: each task keeps N rows, driver merges) — no
+    global sort, no full shuffle.
     """
     config = config or VerifyConfig()
+    if _small(df, config):
+        return _small_fused(df, schema, config, ("bookend",)).selectExpr(
+            "fp_bookend AS fp"
+        )
     n = config.bookend_limit
     k, _, _ = _exprs(schema, config)
     cols = config.typed_cols(schema.hashed_cols(config.valid_column))
     r = row_concat_sql(cols, DIALECT_SPARK, config.trunc_unit)
-    base = df if _small(df, config) else _parallelize(df)
-    kr = base.selectExpr(f"{k} AS k", f"{r} AS r")
-    agg = "md5(array_join(transform(array_sort(collect_list(struct(k, r))), x -> md5(x.r)), ''))"
+    kr = _parallelize(df).selectExpr(f"{k} AS k", f"{r} AS r")
+    half = _bookend_half("array_sort(collect_list(struct(k, r)))")
     start = (
         kr.orderBy(F.col("k").asc(), F.col("r").asc())
         .limit(n)
-        .selectExpr(f"{agg} AS fp_start")
+        .selectExpr(f"{half} AS fp_start")
     )
     end = (
         kr.orderBy(F.col("k").desc(), F.col("r").desc())
         .limit(n)
-        .selectExpr(f"{agg} AS fp_end")
+        .selectExpr(f"{half} AS fp_end")
     )
     return start.crossJoin(end).selectExpr(
-        "md5(concat(coalesce(fp_start, ''), coalesce(fp_end, ''))) AS fp"
+        f"{_bookend_combine('fp_start', 'fp_end')} AS fp"
     )
 
 
@@ -313,18 +342,27 @@ def sparse_fingerprint(
 
     Selection: first 48 bits of ``md5(plain_key)`` modulo ``sparse_mod``
     == 0 (the reference's signed-64-bit variant has no portable spelling;
-    see ``hex_prefix_int_sql``).  The filter is evaluated before any
-    shuffle, so at scale only ~n/mod rows reach the ordered aggregate.
-    The reference filters per-PK-column with IN-subqueries
-    (query.go:190-203) — semantically a semi-join on the same sampled key
-    set; a direct filter avoids the self-join entirely.
+    see ``hex_prefix_int_sql``).  The reference filters per-PK-column
+    with IN-subqueries (query.go:190-203) — semantically a semi-join on
+    the same sampled key set; a direct filter avoids the self-join
+    entirely.
+
+    Small inputs take the sparse column of :func:`_small_fused` (the
+    ordered collect restricted to the sampled rows).  Large inputs
+    filter before any shuffle, so only ~n/mod rows reach the ordered
+    aggregate.
     """
     config = config or VerifyConfig()
-    k, h, k_plain = _exprs(schema, config)
     size = plan_size_bytes(df)
-    base = df if size <= config.small_input_bytes else _parallelize(df)
-    sampled = base.selectExpr(f"{k} AS k", f"{h} AS h", f"md5({k_plain}) AS hk").filter(
-        f"({hex_prefix_int_sql('hk', DIALECT_SPARK)} % {config.sparse_mod}) = 0"
+    if size <= config.small_input_bytes:
+        return _small_fused(df, schema, config, ("sparse",)).selectExpr(
+            "fp_sparse AS fp"
+        )
+    k, h, k_plain = _exprs(schema, config)
+    sampled = (
+        _parallelize(df)
+        .selectExpr(f"{k} AS k", f"{h} AS h", f"{_sampled_sql(k_plain, config)} AS s")
+        .filter("s")
     )
     # Plan choice on the SAMPLED size (~input/mod): below the threshold
     # the single-reduce ordered agg wins — the sort-based plan's range
@@ -332,8 +370,15 @@ def sparse_fingerprint(
     # it (sampled rows no longer fit one reducer) switch to the
     # distributed sort, which computes the byte-identical fingerprint.
     if size // max(1, config.sparse_mod) <= config.small_input_bytes:
-        return sampled.selectExpr(_NO_ROWS_AGG)
+        return sampled.selectExpr(f"{_NO_ROWS_AGG} AS fp")
     return _exact_ordered_fp(sampled.select("k", "h"))
+
+
+def _sampled_sql(k_plain: str, config: VerifyConfig) -> str:
+    """Sparse mode's row selection: md5-of-plain-key prefix mod
+    ``sparse_mod`` == 0."""
+    sel = hex_prefix_int_sql(f"md5({k_plain})", DIALECT_SPARK)
+    return f"(({sel} % {config.sparse_mod}) = 0)"
 
 
 def bucketed_fingerprint(
@@ -355,28 +400,41 @@ def bucketed_fingerprint(
         f"{h} AS h",
         f"({hex_prefix_int_sql(f'md5({k_plain})', DIALECT_SPARK)} % {b}) AS bucket",
     )
-    # One shuffle on bucket + Tungsten sort within partitions; each
-    # bucket's rows are then contiguous and ordered, so the grouped
-    # collect_list concat sees them in (k, h) order.  Explicit
-    # size-derived width (util.scaled_partitions): the ordered-concat
-    # aggregate is CPU-heavy per row and AQE byte-coalescing would
+    # One shuffle on bucket; each bucket's digest sorts its own (k, h)
+    # pairs, so it does not depend on the order the aggregate collects
+    # them in (a sort-based aggregate fallback — more than 128 buckets
+    # in one task — does not keep an upstream sortWithinPartitions).
+    # Explicit size-derived width (util.scaled_partitions): the ordered-
+    # concat aggregate is CPU-heavy per row and AQE byte-coalescing would
     # serialize it onto one task at small scale (measured 2.1 s ->
     # 3.2 s under parallelismFirst=false before the pin).
     per_bucket = (
         kh.repartition(scaled_partitions(df), "bucket")
-        .sortWithinPartitions("bucket", "k", "h")
         .groupBy("bucket")
-        .agg(F.md5(F.concat_ws("", F.collect_list("h"))).alias("bh"))
+        .agg(F.expr(_ORDERED_AGG).alias("bh"))
     )
     return per_bucket.selectExpr(
         "CASE WHEN count(1) = 0 THEN 'no rows' ELSE "
-        "md5(array_join(transform(array_sort(collect_list(struct(bucket, bh))), x -> x.bh), '')) "
-        "END AS fp"
+        f"{_ordered_digest('collect_list(struct(bucket, bh))', 'bh')} END AS fp"
     )
 
 
 #: Modulus for the additive fingerprint: Mersenne prime 2^61 - 1.
 ADDITIVE_MOD = 2_305_843_009_213_693_951
+
+
+def _hv_sql(h: str) -> str:
+    """Additive term of row hash ``h``: its 48-bit integer prefix as an
+    exact decimal (sums of it cannot overflow)."""
+    return f"CAST({hex_prefix_int_sql(h, DIALECT_SPARK)} AS DECIMAL(38,0))"
+
+
+def _additive_sql(count: str, hsum: str) -> str:
+    """``count:sum`` output of the additive fingerprint."""
+    return (
+        f"concat_ws(':', CAST({count} AS STRING), "
+        f"CAST(CAST({hsum} % {ADDITIVE_MOD} AS DECIMAL(38,0)) AS STRING))"
+    )
 
 
 def additive_fingerprint(
@@ -396,14 +454,10 @@ def additive_fingerprint(
     config = config or VerifyConfig()
     cols = config.typed_cols(schema.hashed_cols(config.valid_column))
     h = row_hash_sql(cols, DIALECT_SPARK, config.trunc_unit)
-    h48 = hex_prefix_int_sql("hm", DIALECT_SPARK)
     return (
         df.selectExpr(f"{h} AS hm")
-        .selectExpr(f"CAST({h48} AS DECIMAL(38,0)) AS hv")
-        .selectExpr(
-            "concat_ws(':', CAST(count(1) AS STRING), "
-            f"CAST(CAST(sum(hv) % {ADDITIVE_MOD} AS DECIMAL(38,0)) AS STRING)) AS fp"
-        )
+        .selectExpr(f"{_hv_sql('hm')} AS hv")
+        .selectExpr(f"{_additive_sql('count(1)', 'sum(hv)')} AS fp")
     )
 
 
@@ -428,10 +482,11 @@ def partitioned_fingerprint(
     dimension).
 
     Plan shape: same as :func:`bucketed_fingerprint` with a *semantic*
-    partition key — one hash shuffle on part, Tungsten sort within
-    partitions, grouped ordered concat.  A calendar partition can be
-    arbitrarily large (unlike the uniform md5 buckets), so for skewed
-    timelines compose both: partition by day, bucket within day.
+    partition key — one hash shuffle on part, then a per-group sorted
+    digest (the streamed reduce sorts within partitions instead).  A
+    calendar partition can be arbitrarily large (unlike the uniform md5
+    buckets), so for skewed timelines compose both: partition by day,
+    bucket within day.
     """
     config = config or VerifyConfig()
     if partition_sql is None:
@@ -454,9 +509,7 @@ def _partitioned_fp_from_kh(
     ``width_src`` is the original source relation, used only for the
     size-derived exchange width and the streamed-reduce auto-select."""
     # explicit size-derived width, same rationale as bucketed_fingerprint
-    sorted_kh = kh.repartition(
-        scaled_partitions(width_src), "part"
-    ).sortWithinPartitions("part", "k", "h")
+    clustered = kh.repartition(scaled_partitions(width_src), "part")
     if not small and _stream_hash(width_src, config):
         # Same heap wall as the exact full fingerprint, per PARTITION:
         # collect_list buffers one whole calendar partition per group
@@ -466,10 +519,11 @@ def _partitioned_fp_from_kh(
         # within one task after the repartition, so one Arrow pass
         # emits (part, fp) rows at O(batch) memory.  Identical digests
         # (property-tested).
-        return _partitioned_fp_streaming(sorted_kh)
-    return sorted_kh.groupBy("part").agg(
-        F.md5(F.concat_ws("", F.collect_list("h"))).alias("fp")
-    )
+        return _partitioned_fp_streaming(
+            clustered.sortWithinPartitions("part", "k", "h")
+        )
+    # order-explicit per-group digest, as in bucketed_fingerprint
+    return clustered.groupBy("part").agg(F.expr(_ORDERED_AGG).alias("fp"))
 
 
 def _partitioned_fp_streaming(sorted_kh: DataFrame) -> DataFrame:
@@ -1189,50 +1243,60 @@ FINGERPRINT_OPS = {
     "cardinality": cardinality_fingerprint,
 }
 
-#: Modes computable from ONE (k, h) scan in a single aggregate pass.
+#: Modes computable from ONE (k, h) scan in a single aggregate pass, at
+#: any input size.
 FUSABLE_MODES = ("full", "rowcount", "additive")
+#: Modes computable from one scan and one aggregate on a small input
+#: (``_small``), whose whole projection fits one reducer: bookend's first
+#: and last N and sparse's sample come from the same aggregate.
+SMALL_FUSABLE_MODES = FUSABLE_MODES + ("sparse", "bookend")
+
+
+def fusable_modes(df: DataFrame, config: VerifyConfig) -> tuple[str, ...]:
+    """The modes :func:`fused_fingerprints` can compute together on
+    ``df``: ``SMALL_FUSABLE_MODES`` on a small input (``_small``),
+    ``FUSABLE_MODES`` otherwise."""
+    return SMALL_FUSABLE_MODES if _small(df, config) else FUSABLE_MODES
 
 
 def fused_fingerprints(
-    df: DataFrame, schema: TableSchema, config: VerifyConfig, modes: tuple[str, ...]
+    df: DataFrame,
+    schema: TableSchema,
+    config: VerifyConfig,
+    modes: tuple[str, ...],
 ) -> DataFrame:
     """One-scan computation of several fingerprint modes at once.
 
-    ``full``, ``rowcount`` and ``additive`` all aggregate the same
-    per-row (key, hash) projection — running them as separate operators
-    scans the table once *per mode*, which at 100 TB triples the
-    dominant cost (the reference's default mode set pays one in-database
-    scan per mode the same way).  This fuses them into one projection +
+    Run as separate operators, each mode scans the table once — the
+    reference's default mode set pays one in-database scan per mode the
+    same way (query.go:122-283).  This fuses them into one projection +
     one aggregate producing one column per mode (``fp_<mode>``);
-    ``plans/verify.py`` slices per-mode cells off the single row.  Each
-    column is byte-identical to the standalone operator's output (
-    asserted in tests), so fused and unfused targets stay comparable.
+    ``plans/verify.py`` turns the single row into one cell per mode.
+    Each column is byte-identical to the standalone operator's output
+    (asserted in tests against the oracle and the large-input plans), so
+    fused and unfused targets stay comparable.
+
+    The input size picks the plan and the fusable set
+    (:func:`fusable_modes`):
+
+    - small input: every mode in ``SMALL_FUSABLE_MODES`` from one
+      projection and one two-stage aggregate (:func:`_small_fused`) —
+      the only small-input implementation of full, sparse and bookend;
+    - large input: ``FUSABLE_MODES`` only, on ``full_fingerprint``'s
+      plan (distributed range sort with per-partition partials, or the
+      streamed reduce) with the count/sum terms riding along.  Bookend
+      keeps its top-K plan and sparse its filter-first plan.
 
     The additive term needs no second scan: its 48-bit integer derives
     from the same row hash ``h`` the ordered concat consumes.
-
-    Plan shape: identical to ``full_fingerprint`` alone (small input →
-    two-stage single-reduce agg; large → distributed range sort with
-    per-partition partials) with count/sum terms riding along, i.e. the
-    marginal cost of the extra modes is a few aggregate buffers.
     """
+    fusable = fusable_modes(df, config)
     for m in modes:
-        if m not in FUSABLE_MODES:
-            raise ValueError(f"mode {m!r} is not fusable; fusable: {FUSABLE_MODES}")
-    h48 = hex_prefix_int_sql("h", DIALECT_SPARK)
-    hv = f"CAST({h48} AS DECIMAL(38,0))"
-    additive = (
-        "concat_ws(':', CAST(count(1) AS STRING), "
-        f"CAST(CAST(sum({hv}) % {ADDITIVE_MOD} AS DECIMAL(38,0)) AS STRING))"
-    )
+        if m not in fusable:
+            raise ValueError(f"mode {m!r} is not fusable; fusable: {fusable}")
+    if fusable == SMALL_FUSABLE_MODES:
+        return _small_fused(df, schema, config, modes)
     kh = _kh(df, schema, config)
-    if _small(df, config):
-        aggs = {
-            "full": f"CASE WHEN count(1) = 0 THEN 'no rows' ELSE {_ORDERED_AGG} END",
-            "rowcount": "CAST(count(1) AS STRING)",
-            "additive": additive,
-        }
-        return kh.selectExpr(*[f"{aggs[m]} AS fp_{m}" for m in modes])
     if _stream_hash(df, config):
         # memory-bounded variant (see _streamed_fused): same scan, same
         # sort, chunked Python concat + one streaming reduce
@@ -1241,7 +1305,7 @@ def fused_fingerprints(
     # carry (concat, count, hv-sum); the final reduce derives every mode
     partials = (
         kh.sort("k", "h")
-        .selectExpr("spark_partition_id() AS p", "h", f"{hv} AS hv")
+        .selectExpr("spark_partition_id() AS p", "h", f"{_hv_sql('h')} AS hv")
         .groupBy("p")
         .agg(
             F.concat_ws("", F.collect_list("h")).alias("s"),
@@ -1250,17 +1314,69 @@ def fused_fingerprints(
         )
     )
     aggs = {
-        "full": (
-            "CASE WHEN count(1) = 0 THEN 'no rows' ELSE "
-            "md5(array_join(transform(array_sort(collect_list(struct(p, s))), x -> x.s), '')) END"
-        ),
+        "full": _PARTIALS_AGG,
         "rowcount": "CAST(coalesce(sum(cnt), 0) AS STRING)",
-        "additive": (
-            "concat_ws(':', CAST(coalesce(sum(cnt), 0) AS STRING), "
-            f"CAST(CAST(sum(hsum) % {ADDITIVE_MOD} AS DECIMAL(38,0)) AS STRING))"
-        ),
+        "additive": _additive_sql("coalesce(sum(cnt), 0)", "sum(hsum)"),
     }
     return partials.selectExpr(*[f"{aggs[m]} AS fp_{m}" for m in modes])
+
+
+def _small_fused(
+    df: DataFrame, schema: TableSchema, config: VerifyConfig, modes: tuple[str, ...]
+) -> DataFrame:
+    """``fp_<mode>`` for ``modes`` (any of ``SMALL_FUSABLE_MODES``) from
+    one projection and one two-stage aggregate over a small input.
+
+    The projection carries only what the modes read: the key ``k``, the
+    canonical row string ``r`` (bookend), the row hash ``h`` (``md5(r)``
+    when ``r`` is projected) and sparse's ``sampled`` flag.  The
+    aggregate keeps one row count and up to three lists: the (k, h)
+    pairs (full), the sampled (k, h) pairs (sparse,
+    ``FILTER (WHERE sampled)``) and the sorted (k, r) pairs (bookend,
+    which md5s only the first and last N of them).  Every mode but
+    bookend is final in the aggregate's output; bookend's sorted list is
+    sliced in one projection after it, so it is sorted once.
+    """
+    k, h, k_plain = _exprs(schema, config)
+    want = set(modes)
+    hashed = want & {"full", "sparse", "additive"}
+    proj = []
+    if want & {"full", "sparse", "bookend"}:
+        proj.append(f"{k} AS k")
+    if "bookend" in want:
+        cols = config.typed_cols(schema.hashed_cols(config.valid_column))
+        proj.append(f"{row_concat_sql(cols, DIALECT_SPARK, config.trunc_unit)} AS r")
+    elif hashed:
+        proj.append(f"{h} AS h")
+    if "sparse" in want:
+        proj.append(f"{_sampled_sql(k_plain, config)} AS sampled")
+    rows = df.selectExpr(*proj)
+    if want == {"sparse"}:
+        # alone, sparse filters first (the optimizer pushes the filter
+        # below the projection, so only the sampled rows are hashed)
+        rows = rows.filter("sampled")
+    if "bookend" in want and hashed:
+        rows = rows.selectExpr("*", "md5(r) AS h")
+    sampled_kh = "collect_list(struct(k, h)) FILTER (WHERE sampled)"
+    outs = {
+        "full": _NO_ROWS_AGG,
+        "rowcount": "CAST(count(1) AS STRING)",
+        "additive": _additive_sql("count(1)", f"sum({_hv_sql('h')})"),
+        "sparse": (
+            f"CASE WHEN count(1) FILTER (WHERE sampled) = 0 THEN 'no rows' "
+            f"ELSE {_ordered_digest(sampled_kh)} END"
+        ),
+        "bookend": "array_sort(collect_list(struct(k, r)))",
+    }
+    fps = rows.selectExpr(*[f"{outs[m]} AS fp_{m}" for m in modes])
+    if "bookend" not in want:
+        return fps
+    n = config.bookend_limit
+    start = f"slice(fp_bookend, 1, {n})"
+    end = f"slice(fp_bookend, greatest(size(fp_bookend) - {n} + 1, 1), {n})"
+    return fps.withColumn(
+        "fp_bookend", F.expr(_bookend_combine(_bookend_half(start), _bookend_half(end)))
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,23 +5,28 @@ goroutine per target, per table introspect columns + run each test mode,
 merge scalar outputs into a mutex-guarded ``Results`` map, then check
 consistency and render a pivoted report.
 
-Spark inversion: each (target, table, mode) fingerprint is a 1-row
-DataFrame; all of them are combined with ``unionByName`` into ONE logical
-plan, so a single action executes every fingerprint and Spark's scheduler
-provides the cross-target/cross-table parallelism the reference got from
-goroutines (``verify.go:66-77``).  The merge step (``results.go:46-69``)
-disappears into the union; the consistency check (``results.go:72-98``)
-becomes a grouped distinct-count; the ASCII report (``results.go:101-166``)
-becomes a pivot.
+Spark inversion: each (target, table) computes its fingerprints as one
+1-row DataFrame, one ``fp_<mode>`` column per mode, turned into one row
+per cell by ``stack``; all of them are combined with ``unionByName`` into
+ONE logical plan, so a single action executes every fingerprint and
+Spark's scheduler provides the cross-target/cross-table parallelism the
+reference got from goroutines (``verify.go:66-77``).  The merge step
+(``results.go:46-69``) disappears into the union; the consistency check
+(``results.go:72-98``) becomes a grouped distinct-count; the ASCII report
+(``results.go:101-166``) becomes a pivot.
 
-Scale: the union plan contains one scan per (table, mode).  Per-table
-caching of the (k, h) projection is deliberately NOT default — at 100 TB
-re-scanning parquet is usually cheaper than caching; pass
-``cache_tables=True`` for small JDBC sources where the scan dominates.
+Scale: the reference runs one in-database scan per (table, mode).  Here
+each table is read once per target, and its fusable modes share one scan
+and one aggregate (``fingerprint.fused_fingerprints``): on a small table
+all four default modes, on a large one full, rowcount and additive, while
+bookend keeps its top-K plan and sparse its filter-first plan.  Each
+fused group is one union branch, so its final reduce runs once for all
+of its cells.
 """
 
 from __future__ import annotations
 
+import inspect
 from dataclasses import dataclass
 from functools import reduce
 
@@ -31,11 +36,12 @@ from pyspark.sql import functions as F
 from pgverify_spark.config import ERROR_OUTPUT, VerifyConfig
 from pgverify_spark.operators.fingerprint import (
     FINGERPRINT_OPS,
-    FUSABLE_MODES,
+    fusable_modes,
     fused_fingerprints,
 )
 from pgverify_spark.session import ensure_required_confs
 from pgverify_spark.sources.parquet import ParquetTarget
+from pgverify_spark.sources.schemas import TableSchema
 
 RESULT_COLUMNS = ("target", "schema", "tbl", "mode", "output")
 
@@ -64,8 +70,49 @@ class VerifyResult:
         return _report_from_rows(self.results.sparkSession, self.rows)
 
 
-#: (target, schema, table, mode) identity of one fingerprint sub-plan.
+#: (target, schema, table, mode) identity of one result cell.
 Cell = tuple[str, str, str, str]
+#: One union branch: the cells it computes and its
+#: (target, schema, tbl, mode, output) relation, one row per cell.
+Branch = tuple[tuple[Cell, ...], DataFrame]
+
+_RESULT_DDL = "target string, schema string, tbl string, mode string, output string"
+
+
+def _fingerprint_groups(
+    df: DataFrame, schema: TableSchema, config: VerifyConfig
+) -> list[tuple[tuple[str, ...], DataFrame]]:
+    """One table's fingerprints as (modes, 1-row ``fp_<mode>`` relation)
+    groups.  When more than one requested mode is fusable on this input
+    (``fingerprint.fusable_modes``) they form one group (one scan, one
+    aggregate); every other mode is a group of its own."""
+    fusable = fusable_modes(df, config)
+    fused = tuple(m for m in config.test_modes if m in fusable)
+    groups = []
+    if len(fused) > 1:
+        groups.append((fused, fused_fingerprints(df, schema, config, fused)))
+    else:
+        fused = ()
+    for mode in config.test_modes:
+        if mode not in fused:
+            fp = FINGERPRINT_OPS[mode](df, schema, config)
+            groups.append(((mode,), fp.selectExpr(f"fp AS fp_{mode}")))
+    return groups
+
+
+def _check_schema_protocol(target) -> None:
+    """Raise when ``target.table_schema`` cannot take the ``df`` that
+    verify passes it.  A target written against the older
+    ``table_schema(spark, table)`` signature would otherwise fail inside
+    the per-table error handling and read "(err)" in every cell with no
+    cause recorded."""
+    params = inspect.signature(target.table_schema).parameters.values()
+    if not any(p.name == "df" or p.kind is p.VAR_KEYWORD for p in params):
+        raise TypeError(
+            f"{type(target).__name__}.table_schema must accept a df keyword "
+            "argument: verify calls table_schema(spark, table, df=df) with "
+            "the DataFrame it read the table into"
+        )
 
 
 def _target_results(
@@ -74,58 +121,49 @@ def _target_results(
     config: VerifyConfig,
     name: str | None = None,
     plan_cache: dict | None = None,
-) -> list[tuple[Cell, DataFrame]]:
-    """Per-target fingerprint sub-plans (runTestsOnTarget, verify.go:90-106),
-    each carrying its cell identity so a runtime failure can be pinned to
-    the cell (the reference seeds every cell with "(err)" up front for
-    the same reason, verify.go:108-136).  ``name`` is the reporting name
-    (the configured alias when present, verify.go:46-48).
+) -> list[Branch]:
+    """Per-target union branches (runTestsOnTarget, verify.go:90-106),
+    each carrying its cells' identities so a runtime failure can be
+    pinned to them (the reference seeds every cell with "(err)" up front
+    for the same reason, verify.go:108-136).  ``name`` is the reporting
+    name (the configured alias when present, verify.go:46-48).
 
     ``plan_cache`` (shared across the targets of one ``verify()`` call)
-    memoizes the *untagged* fingerprint DataFrames by the target's own
-    ``cache_identity(table)`` (plus the mode tuple): two targets reading
-    the same table the same way produce byte-identical sub-plans, and
-    building the canonical-hash expression tree is the dominant
+    memoizes the *untagged* fingerprint groups by the target's own
+    ``cache_identity(table)`` (plus the plan-shaping config): two targets
+    reading the same table the same way produce byte-identical sub-plans,
+    and building the canonical-hash expression tree is the dominant
     driver-side cost of a small verify run.  Execution-side this is the
     same dedup Spark's ReusedExchange would do; caching just skips the
     redundant plan *construction*."""
     name = target.name if name is None else name
-    parts: list[tuple[Cell, DataFrame]] = []
+    if not getattr(target, "use_pushdown", False):
+        _check_schema_protocol(target)
+    branches: list[Branch] = []
+
+    def local(table, outputs):
+        # a branch whose outputs are already known: pushdown scalars or
+        # the seeded "(err)" of a table that failed before execution
+        cells = tuple((name, target.schema, table, m) for m in outputs)
+        rows = [(*cell, outputs[cell[3]]) for cell in cells]
+        return cells, spark.createDataFrame(rows, _RESULT_DDL)
+
     for table in target.list_tables(spark, config):
-        tag = lambda fp_df, mode, t=table: fp_df.select(
-            F.lit(name).alias("target"),
-            F.lit(target.schema).alias("schema"),
-            F.lit(t).alias("tbl"),
-            F.lit(mode).alias("mode"),
-            F.col("fp").alias("output"),
-        )
         if getattr(target, "use_pushdown", False):
             # Reference-style execution: the fingerprint SQL runs inside
             # the target database and one scalar comes back per cell
             # (sources/pushdown.py); Spark never reads the table.  Modes
             # the PG builders don't cover fall through to "(err)".
+            outputs = {}
             for mode in config.test_modes:
                 try:
-                    fp = target.pushdown_fingerprint(spark, table, mode, config)
+                    outputs[mode] = target.pushdown_fingerprint(
+                        spark, table, mode, config
+                    )
                 except Exception:
-                    fp = ERROR_OUTPUT
-                cell = (name, target.schema, table, mode)
-                parts.append(
-                    (cell, tag(spark.createDataFrame([(fp,)], "fp string"), mode))
-                )
+                    outputs[mode] = ERROR_OUTPUT
+            branches.append(local(table, outputs))
             continue
-
-        def err_cells(t=table):
-            # no PK / unreadable table: the reference skips it with an
-            # error, leaving the seeded "(err)" output in place
-            # (verify.go:108-136, 194-198)
-            return [
-                (
-                    (name, target.schema, t, mode),
-                    tag(spark.createDataFrame([(ERROR_OUTPUT,)], "fp string"), mode),
-                )
-                for mode in config.test_modes
-            ]
 
         try:
             # Memoization is gated on the target declaring its own cache
@@ -150,43 +188,38 @@ def _target_results(
                 if identity is None
                 else (identity, config.plan_cache_key())
             )
-            fps: dict[str, DataFrame] | None = None
+            groups = None
             if plan_cache is not None and cache_key is not None:
-                fps = plan_cache.get(cache_key)
-            if fps is None:
-                schema = target.table_schema(spark, table)
+                groups = plan_cache.get(cache_key)
+            if groups is None:
+                # one read per (target, table): the schema is introspected
+                # from the same DataFrame the fingerprints scan
                 df = target.read(spark, table)
-                # Mode fusion: full/rowcount/additive all aggregate the
-                # same (k, h) projection, so when >1 of them is requested
-                # they run as ONE scan + one aggregate
-                # (fused_fingerprints); each cell's branch projects its
-                # fp_<mode> column, and exchange reuse computes the shared
-                # subplan once within the union's single action.  At
-                # 100 TB this removes one full table scan per extra fused
-                # mode — the dominant cost of a verify run.
-                fused = tuple(m for m in config.test_modes if m in FUSABLE_MODES)
-                fps = {}
-                if len(fused) > 1:
-                    fdf = fused_fingerprints(df, schema, config, fused)
-                    for mode in fused:
-                        fps[mode] = fdf.selectExpr(f"fp_{mode} AS fp")
-                else:
-                    fused = ()
-                for mode in config.test_modes:
-                    if mode not in fused:
-                        fps[mode] = FINGERPRINT_OPS[mode](df, schema, config)
+                schema = target.table_schema(spark, table, df=df)
+                groups = _fingerprint_groups(df, schema, config)
                 if plan_cache is not None and cache_key is not None:
-                    plan_cache[cache_key] = fps
-            table_parts = [
-                ((name, target.schema, table, mode), tag(fp_df, mode))
-                for mode, fp_df in fps.items()
-            ]
+                    plan_cache[cache_key] = groups
         except Exception:
-            # schema inference / plan build already failed (missing PK,
-            # corrupt footer, unsupported type)
-            table_parts = err_cells()
-        parts.extend(table_parts)
-    return parts
+            # read / schema inference / plan build already failed (missing
+            # PK, corrupt footer, unsupported type): the reference skips
+            # the table with an error, leaving the seeded "(err)" output
+            # in place (verify.go:108-136, 194-198)
+            branches.append(
+                local(table, dict.fromkeys(config.test_modes, ERROR_OUTPUT))
+            )
+            continue
+        for modes, fp_df in groups:
+            pairs = ", ".join(f"'{m}', fp_{m}" for m in modes)
+            branches.append((
+                tuple((name, target.schema, table, m) for m in modes),
+                fp_df.select(
+                    F.lit(name).alias("target"),
+                    F.lit(target.schema).alias("schema"),
+                    F.lit(table).alias("tbl"),
+                    F.expr(f"stack({len(modes)}, {pairs}) AS (mode, output)"),
+                ),
+            ))
+    return branches
 
 
 def verify(
@@ -196,6 +229,13 @@ def verify(
     plan_cache: dict | None = None,
 ) -> VerifyResult:
     """Run every (target, table, mode) fingerprint and check consistency.
+
+    A target reads each table once: ``read(spark, table)``, then
+    ``table_schema(spark, table, df=...)`` over that DataFrame (every
+    in-package target accepts ``df``; a duck-typed target must too, and
+    verify raises ``TypeError`` up front when it does not).
+    Pushdown targets (``use_pushdown``) answer
+    ``pushdown_fingerprint(spark, table, mode, config)`` instead.
 
     ``plan_cache``: optionally pass a dict that OUTLIVES this call to
     reuse fingerprint sub-plans across repeated verify() runs of the
@@ -223,7 +263,7 @@ def verify(
         names = list(config.aliases)
     else:
         names = [t.name for t in targets]
-    parts: list[tuple[Cell, DataFrame]] = []
+    branches: list[Branch] = []
     # Shared across targets (and, when the caller passed one, across
     # verify() calls): races are benign (two threads may build the
     # same entry; last write wins with an equivalent plan).
@@ -234,10 +274,10 @@ def verify(
             lambda tn: _target_results(spark, tn[0], config, tn[1], plan_cache),
             zip(targets, names),
         ):
-            parts.extend(sub)
-    if not parts:
+            branches.extend(sub)
+    if not branches:
         raise ValueError("no tables to verify")
-    plan = reduce(DataFrame.unionByName, [df for _, df in parts])
+    plan = reduce(DataFrame.unionByName, [df for _, df in branches])
     # One action executes every fingerprint (the union's independent
     # branches run as concurrent stages).  The outcome is tiny by
     # construction — one scalar per (target, table, mode) — so collect it
@@ -248,19 +288,17 @@ def verify(
         rows = plan.collect()
     except Exception:
         # A runtime failure (corrupt file, unreadable column) aborts the
-        # whole union action; re-run cells individually so the failure is
-        # pinned to its cell as the "(err)" sentinel while every healthy
-        # cell still reports — the reference's seeded-error semantics
-        # (results.go:12, verify.go:131).
+        # whole union action; re-run branches individually so the failure
+        # is pinned to its branch's cells as the "(err)" sentinel while
+        # every healthy cell still reports — the reference's seeded-error
+        # semantics (results.go:12, verify.go:131).
         rows = []
-        for cell, df in parts:
+        for cells, df in branches:
             try:
                 rows.extend(df.collect())
             except Exception:
-                rows.append((*cell, ERROR_OUTPUT))
-    results = spark.createDataFrame(
-        [tuple(r) for r in rows], "target string, schema string, tbl string, mode string, output string"
-    )
+                rows.extend((*cell, ERROR_OUTPUT) for cell in cells)
+    results = spark.createDataFrame([tuple(r) for r in rows], _RESULT_DDL)
     # Error-check the rows already in hand — re-collecting the local
     # relation would launch a (tiny but real) extra Spark job.
     errors = _errors_from_rows(rows, expected_targets=names)

@@ -75,11 +75,11 @@ class ParquetTarget(_ParquetTarget):
             self._frames[key] = got
         return got
 
-    def table_schema(self, spark, table):
+    def table_schema(self, spark, table, df=None):
         key = (spark.sparkContext.applicationId, self.path, table)
         got = self._schemas.get(key)
         if got is None:
-            got = super().table_schema(spark, table)
+            got = super().table_schema(spark, table, df=df)
             self._schemas[key] = got
         return got
 
@@ -5244,64 +5244,64 @@ def _derived_view_orc_entry() -> dict[str, tuple[Callable, str]]:
 #: driver landing CORRECTNESS_r{N} mid-round cannot fail the suite
 #: retroactively — but a rotation left one full round stale (files
 #: newer than N present) does fail.  Bump when rotating.
-_DRIVER_PRIORITY_ROUND = 12
+_DRIVER_PRIORITY_ROUND = 14
 
 _DRIVER_PRIORITY = (
     # Derived rotation (see module docstring): regenerate with
     # `python -m pgverify_spark.rotation --write` after a new
     # CORRECTNESS file lands or a new entry is registered.
-    "quantile_ivm_capped_events",  # last green r—never
-    "quantile_ivm_jdbc_events",  # last green r—never
-    "repeated_spans_documents",  # last green r—never
-    "cut_repeated_spans_documents",  # last green r—never
-    "incremental_repeated_spans_documents",  # last green r—never
-    "weighted_sample_documents",  # last green r—never
-    "timetravel_read_orders",  # last green r—never
-    "schema_drift_orders",  # last green r—never
-    "quantile_trailing_capped_events",  # last green r—never
-    "streaming_quantile_trailing_capped_events",  # last green r—never
-    "full_fingerprint_part",  # last green r7
-    "verify_report_lineitem_pair",  # last green r7
-    "kmeans_assign_embeddings",  # last green r7
-    "quality_filter_documents",  # last green r7
-    "stratified_sample_documents",  # last green r7
-    "topk_ngrams_documents",  # last green r7
-    "event_transitions_events",  # last green r7
-    "chunk_documents",  # last green r7
-    "pack_sequences_documents",  # last green r7
-    "hash_split_documents",  # last green r7
-    "assign_shards_documents",  # last green r7
-    "mixture_sample_documents",  # last green r7
-    "equidepth_histogram_orders",  # last green r7
-    "salted_join_revenue",  # last green r7
-    "cohort_retention_events",  # last green r7
-    "moving_average_events",  # last green r7
-    "daily_anomalies_events",  # last green r7
-    "daily_trend_slope_events",  # last green r7
-    "funnel_events",  # last green r7
-    "asof_join_events",  # last green r7
-    "length_percentiles_documents",  # last green r7
-    "corpus_mix_report_documents",  # last green r7
-    "tfidf_top_terms_documents",  # last green r7
-    "vocab_coverage_documents",  # last green r7
-    "bpe_apply_documents",  # last green r7
-    "bpe_token_counts_documents",  # last green r7
-    "bpe_pack_sequences_documents",  # last green r7
-    "bigram_lm_scores_documents",  # last green r7
-    "scrub_pii_documents",  # last green r7
-    "curate_corpus_documents",  # last green r7
-    "length_histogram_documents",  # last green r7
-    "random_project_embeddings",  # last green r7
-    "label_outliers_embeddings",  # last green r7
-    "gramian_embeddings",  # last green r7
-    "quantize_int8_embeddings",  # last green r7
-    "quantized_topk_embeddings",  # last green r7
-    "fuzzy_join_pairs_part",  # last green r7
-    "kmv_distinct_documents",  # last green r7
-    "kmv_distinct_events",  # last green r7
-    "full_fingerprint_lineitem",  # last green r10
+    "key_distribution_lineitem",  # last green r7
+    "heavy_hitters_lineitem",  # last green r7
+    "fk_integrity_report",  # last green r7
+    "streaming_dedup_documents",  # last green r7
+    "streaming_funnel_events",  # last green r7
+    "streaming_kmv_distinct_documents",  # last green r7
+    "streaming_bloom_decontaminate_documents",  # last green r7
+    "streaming_lm_scores_documents",  # last green r7
+    "streaming_lsh_ingest_dedup_documents",  # last green r7
+    "bookend_fingerprint_lineitem",  # last green r8
+    "sparse_fingerprint_lineitem",  # last green r8
+    "bucketed_fingerprint_lineitem",  # last green r8
+    "additive_fingerprint_lineitem",  # last green r8
+    "column_diff_orders",  # last green r8
+    "distribution_drift_orders",  # last green r8
+    "snapshot_verify_events",  # last green r8
+    "snapshot_update_events",  # last green r8
+    "verify_report_parquet_vs_jdbc",  # last green r8
+    "dup_clusters_star_documents",  # last green r8
+    "benford_audit_orders",  # last green r8
+    "fd_check_orders",  # last green r8
+    "constraint_report_orders",  # last green r8
+    "dedup_lines_documents",  # last green r8
+    "corpus_dedup_lines_documents",  # last green r8
+    "lsh_recall_eval_documents",  # last green r8
+    "ann_recall_embeddings",  # last green r8
+    "semantic_dedup_filter_documents",  # last green r8
+    "near_dedup_filter_best_documents",  # last green r8
+    "embedding_ingest_dedup_embeddings",  # last green r8
+    "hashed_text_topk_documents",  # last green r8
+    "gopher_gate_documents",  # last green r8
+    "reservoir_sample_events",  # last green r8
+    "hourly_rollup_events",  # last green r8
+    "fill_gaps_hourly_events",  # last green r8
+    "debounce_events",  # last green r8
+    "daily_rollup_events",  # last green r8
+    "grouped_topk_revenue_lineitem",  # last green r8
+    "bpe_pair_counts_documents",  # last green r8
+    "strip_html_documents",  # last green r8
+    "normalize_unicode_documents",  # last green r8
+    "curate_corpus_report_documents",  # last green r8
+    "clean_web_corpus_documents",  # last green r8
+    "interval_join_rollup_events",  # last green r8
+    "sampled_quantiles_orders",  # last green r8
+    "sampled_quantiles_by_lang_documents",  # last green r8
+    "countmin_freq_events",  # last green r8
+    "tpch_q3_shipping_priority",  # last green r8
+    "tpch_q5_local_supplier_volume",  # last green r8
+    "bpe_merges_documents",  # last green r8
     "rowcount_fingerprint_lineitem",  # last green r11
     "tpch_q1_pricing_summary",  # last green r11
+    "full_fingerprint_lineitem",  # last green r13
 )
 
 

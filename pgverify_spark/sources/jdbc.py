@@ -182,9 +182,17 @@ class JDBCTarget:
                 )
         return reader.load()
 
-    def table_schema(self, spark: SparkSession, table: str) -> TableSchema:
+    def table_schema(
+        self, spark: SparkSession, table: str, df: DataFrame | None = None
+    ) -> TableSchema:
+        """Column types from the read's JDBC schema, PK from the catalog.
+        ``df``: this table's DataFrame when the caller already read it,
+        which saves the schema round trip (and the bounds query of a
+        partitioned read)."""
         pk = self.primary_key(spark, table)
-        cols = logical_types(self.read(spark, table), ns_hint_cols=())
+        if df is None:
+            df = self.read(spark, table)
+        cols = logical_types(df, ns_hint_cols=())
         return TableSchema(table, tuple(cols), pk)
 
     def pushdown_fingerprint(

@@ -89,12 +89,18 @@ class ParquetTarget:
             self.primary_key(table),
         )
 
-    def table_schema(self, spark: SparkSession, table: str) -> TableSchema:
+    def table_schema(
+        self, spark: SparkSession, table: str, df: DataFrame | None = None
+    ) -> TableSchema:
         """Introspect logical schema (the reference's column introspection,
-        ``verify.go:152-198``, with parquet's self-describing schema)."""
+        ``verify.go:152-198``, with parquet's self-describing schema).
+        ``df``: this table's DataFrame when the caller already read it, so
+        the files are listed and their footers read once."""
         pk = self.primary_key(table)
         if pk is None:
             raise ValueError(f"no primary key configured for table {table!r}")
         ns_hint = ("ts",) if table == "events" else ()
-        cols = logical_types(self.read(spark, table), ns_hint_cols=ns_hint)
+        if df is None:
+            df = self.read(spark, table)
+        cols = logical_types(df, ns_hint_cols=ns_hint)
         return TableSchema(table, tuple(cols), tuple(pk))

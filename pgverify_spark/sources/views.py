@@ -81,9 +81,13 @@ class ViewTarget:
     def primary_key(self, view: str) -> tuple[str, ...]:
         return tuple(self.views[view][1])
 
-    def table_schema(self, spark: SparkSession, view: str) -> TableSchema:
+    def table_schema(
+        self, spark: SparkSession, view: str, df: DataFrame | None = None
+    ) -> TableSchema:
         # no nanos hint: a view's bigint column named "ts" is a derived
         # value, not a nanosAsLong-read TIMESTAMP(NANOS) parquet column
         # (micros timestamps surface as timestamp_ntz on their own)
-        cols = logical_types(self.read(spark, view), ns_hint_cols=())
+        if df is None:
+            df = self.read(spark, view)
+        cols = logical_types(df, ns_hint_cols=())
         return TableSchema(view, tuple(cols), self.primary_key(view))

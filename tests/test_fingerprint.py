@@ -6,6 +6,9 @@ agreement replaces PG-vs-CRDB agreement; mutation tests replicate
 shuffled-input invariance replicates integration_test.go:260.
 """
 
+import dataclasses
+import os
+
 import pytest
 
 from pgverify_spark.config import VerifyConfig
@@ -13,8 +16,11 @@ from pgverify_spark.functions.timecol import US_PER_DAY, bucket_sql
 from pgverify_spark.operators.fingerprint import (
     FINGERPRINT_OPS,
     bookend_fingerprint,
+    bucketed_fingerprint,
     fingerprint_oracle_sql,
     full_fingerprint,
+    partitioned_fingerprint,
+    partitioned_fingerprint_oracle_sql,
     rowcount,
     sparse_fingerprint,
 )
@@ -25,6 +31,12 @@ MODES = ["full", "bookend", "sparse", "rowcount", "bucketed", "additive", "cardi
 TABLES = ["lineitem", "orders", "customer", "events", "documents", "embeddings", "region"]
 
 CFG = VerifyConfig(bookend_limit=100, sparse_mod=10, fingerprint_buckets=64)
+
+#: sf0.01 testdata tables carried in the repository (orders: 15 000 rows)
+SF001_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "perfbench", "testdata", "sf0.01",
+)
 
 
 def _spark_fp(spark, sf_dir, table, mode, cfg=CFG):
@@ -71,8 +83,10 @@ def test_mutation_detected_by_every_mode(spark, sf_dir):
         assert a != b, f"mode {mode} missed the mutation"
 
 
-def test_empty_table_sentinel(spark, sf_dir):
-    """Empty input -> 'no rows' (verify.go:247-248)."""
+def test_empty_table_sentinel(spark, duck, sf_dir):
+    """Empty input -> 'no rows' (verify.go:247-248).  Bookend has no
+    sentinel: its two empty subsets are NULL, as the oracle's
+    ``string_agg`` over no rows, so it reads md5('') on both plan paths."""
     target = ParquetTarget("t", sf_dir)
     df = target.read(spark, "region").filter("r_regionkey < 0")
     schema = target.table_schema(spark, "region")
@@ -81,6 +95,39 @@ def test_empty_table_sentinel(spark, sf_dir):
     assert additive_fingerprint(df, schema, CFG).collect()[0].fp == "0"
     assert sparse_fingerprint(df, schema, CFG).collect()[0].fp == "no rows"
     assert rowcount(df).collect()[0].fp == "0"
+    empty = "(SELECT * FROM region WHERE r_regionkey < 0) t"
+    want = duck.execute(
+        fingerprint_oracle_sql("bookend", empty, TESTDATA_TABLES["region"], CFG)
+    ).fetchone()[0]
+    assert want == "d41d8cd98f00b204e9800998ecf8427e"
+    for cfg in (CFG, dataclasses.replace(CFG, small_input_bytes=0)):
+        assert bookend_fingerprint(df, schema, cfg).collect()[0].fp == want
+
+
+def test_bucketed_default_buckets_match_oracle(spark):
+    """At the default 1024 buckets one task aggregates more than 128
+    buckets, and the sort-based aggregate fallback drops any upstream
+    sortWithinPartitions order: each group's digest must order its own
+    (k, h) pairs.  Checked on sf0.01 orders for bucketed and for the
+    aggregate path of partitioned_fingerprint."""
+    import duckdb
+
+    cfg = VerifyConfig()
+    assert cfg.fingerprint_buckets == 1024
+    path = os.path.join(SF001_DIR, "orders.parquet")
+    df = ParquetTarget("t", SF001_DIR).read(spark, "orders")
+    schema = TESTDATA_TABLES["orders"]
+    duck = duckdb.connect()
+    table = f"read_parquet('{path}')"
+    want = duck.execute(fingerprint_oracle_sql("bucketed", table, schema, cfg)).fetchone()[0]
+    assert bucketed_fingerprint(df, schema, cfg).collect()[0].fp == want
+    part = "o_orderkey % 1024"
+    want_parts = duck.execute(
+        partitioned_fingerprint_oracle_sql(table, schema, cfg, part)
+    ).fetchall()
+    got_parts = partitioned_fingerprint(df, schema, cfg, part).collect()
+    assert sorted(map(tuple, got_parts)) == sorted(want_parts)
+    duck.close()
 
 
 def test_hash_primary_keys_variant(spark, duck, sf_dir):
@@ -129,21 +176,21 @@ def test_exclude_columns(spark, duck, sf_dir):
     assert a != _spark_fp(spark, sf_dir, "orders", "full", CFG)
 
 
-def test_fused_fingerprints_match_standalone_ops(spark, sf_dir):
+def test_fused_fingerprints_match_standalone_ops(spark, duck, sf_dir):
     """Fused one-scan (full, rowcount, additive) must be byte-identical
     to the standalone operators on both plan paths (small single-reduce
     and distributed sort), on duplicate-key data, and on empty input —
-    a fused target must stay comparable with an unfused/pushdown one."""
-    import dataclasses
+    a fused target must stay comparable with an unfused/pushdown one.
+    The small-input set (adding sparse and bookend) must equal the
+    oracle on nation, on duplicate-key orders and on empty input, and
+    its sparse and bookend must equal their large-input plans."""
+    from pyspark.sql import functions as F
 
-    from pgverify_spark.config import VerifyConfig
     from pgverify_spark.operators.fingerprint import (
-        FINGERPRINT_OPS,
         FUSABLE_MODES,
+        SMALL_FUSABLE_MODES,
         fused_fingerprints,
     )
-    from pgverify_spark.sources.parquet import ParquetTarget
-    from pgverify_spark.sources.schemas import TESTDATA_TABLES
 
     src = ParquetTarget("t", sf_dir)
     for table in ("lineitem", "nation"):  # dup-key fact + tiny dim
@@ -163,6 +210,36 @@ def test_fused_fingerprints_match_standalone_ops(spark, sf_dir):
     fused = fused_fingerprints(empty, schema, VerifyConfig(), FUSABLE_MODES).collect()[0]
     for mode in FUSABLE_MODES:
         assert fused[f"fp_{mode}"] == FINGERPRINT_OPS[mode](empty, schema, VerifyConfig()).collect()[0].fp
+
+    # small-input fused set: every orders key twice, with differing rows
+    orders = src.read(spark, "orders")
+    dup_orders = orders.unionByName(
+        orders.withColumn("o_orderpriority", F.concat("o_orderpriority", F.lit("x")))
+    )
+    cases = (
+        ("nation", src.read(spark, "nation"), "nation"),
+        (
+            "orders",
+            dup_orders,
+            "(SELECT * FROM orders UNION ALL "
+            "SELECT * REPLACE (o_orderpriority || 'x' AS o_orderpriority) FROM orders) t",
+        ),
+        ("nation", empty, "(SELECT * FROM nation WHERE n_nationkey < 0) t"),
+    )
+    cfg, large = VerifyConfig(), VerifyConfig(small_input_bytes=0)
+    for table, df, oracle_from in cases:
+        schema = TESTDATA_TABLES[table]
+        fused = fused_fingerprints(df, schema, cfg, SMALL_FUSABLE_MODES).collect()[0]
+        for mode in SMALL_FUSABLE_MODES:
+            want = duck.execute(
+                fingerprint_oracle_sql(mode, oracle_from, schema, cfg)
+            ).fetchone()[0]
+            assert fused[f"fp_{mode}"] == want, (oracle_from, mode)
+        for mode in ("bookend", "sparse"):
+            got = FINGERPRINT_OPS[mode](df, schema, large).collect()[0].fp
+            assert got == fused[f"fp_{mode}"], (oracle_from, mode)
+    with pytest.raises(ValueError, match="not fusable"):
+        fused_fingerprints(orders, TESTDATA_TABLES["orders"], large, ("bookend",))
 
 
 def test_verify_fuses_modes_into_one_scan(spark, sf_dir):

@@ -95,6 +95,53 @@ def test_verify_corrupt_table_errs_without_aborting(spark, sf_dir, tmp_path):
     assert by_tbl["region"].isdigit()
     assert any("test failed" in e and "nation" in e for e in res.errors)
 
+    # A fused branch that fails at execution: nation's first part file
+    # is valid (schema inference reads it), its second is garbage.  All
+    # four default-mode cells of the branch read "(err)"; region's cells
+    # equal a healthy run's.
+    faulty_dir = tmp_path / "faulty"
+    src.read(spark, "region").coalesce(1).write.parquet(str(faulty_dir / "region.parquet"))
+    src.read(spark, "nation").coalesce(1).write.parquet(str(faulty_dir / "nation.parquet"))
+    (faulty_dir / "nation.parquet" / "part-99999.parquet").write_bytes(b"PAR1 garbage")
+    cfg = VerifyConfig(include_tables=("region", "nation"))
+    res = verify(spark, [ParquetTarget("a", str(faulty_dir))], cfg)
+    cells = {(r.tbl, r.mode): r.output for r in res.results.collect()}
+    healthy = verify(spark, [src], VerifyConfig(include_tables=("region",)))
+    assert healthy.ok, healthy.errors
+    want = {(r.tbl, r.mode): r.output for r in healthy.results.collect()}
+    assert {m for t, m in want} == set(cfg.test_modes)
+    assert cells == {**want, **{("nation", m): "(err)" for m in cfg.test_modes}}
+
+
+def test_verify_small_tables_schedule_one_job_per_branch(spark, sf_dir):
+    """Two small tables on two agreeing targets with the four default
+    modes: each (target, table) is one fused branch (one two-stage
+    aggregate), so the union's execution, run under the caller's job
+    group, schedules at most targets x tables + 1 jobs.  The plan build
+    runs on verify's per-target threads, outside the group; there each
+    table is read once, and a parquet read's schema inference is at
+    most one job."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    targets = [ParquetTarget("a", sf_dir), ParquetTarget("b", sf_dir)]
+    cfg = VerifyConfig(include_tables=("nation", "orders"))
+    cells = len(targets) * 2
+    verify(spark, targets, cfg)  # warm-up: nothing below depends on a cold JVM
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "verify-job-count"
+    sc.setJobGroup(group, "verify job-count guard")
+    try:
+        res = verify(spark, targets, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.ok, res.errors
+    assert len(res.rows) == cells * 4
+    executed = tracker.getJobIdsForGroup(group)
+    assert 0 < len(executed) <= cells + 1, sorted(executed)
+    built = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert len(built) <= cells, sorted(built)
+
 
 class _StubPushdownTarget:
     """Duck-typed pushdown target: returns canned scalars, raising for
@@ -164,8 +211,8 @@ class _StubJDBCStyleTarget:
     def read(self, spark, table):
         return self._inner.read(spark, table)
 
-    def table_schema(self, spark, table):
-        return self._inner.table_schema(spark, table)
+    def table_schema(self, spark, table, df=None):
+        return self._inner.table_schema(spark, table, df=df)
 
 
 def test_verify_jdbc_style_target_not_degraded_by_cache(spark, sf_dir):
@@ -177,6 +224,22 @@ def test_verify_jdbc_style_target_not_degraded_by_cache(spark, sf_dir):
     outputs = {(r.target, r.mode): r.output for r in res.results.collect()}
     assert outputs[("db", "rowcount")].isdigit()
     assert outputs[("db", "full")] == outputs[("pq", "full")] != "(err)"
+
+
+class _StubTwoArgSchemaTarget(_StubJDBCStyleTarget):
+    """A target whose ``table_schema`` predates the ``df`` argument."""
+
+    def table_schema(self, spark, table):
+        return self._inner.table_schema(spark, table)
+
+
+def test_verify_rejects_table_schema_without_df(spark, sf_dir):
+    """verify passes ``df=`` to ``table_schema``; a target that cannot
+    take it is a protocol error raised to the caller, not an "(err)" in
+    every cell with no cause."""
+    cfg = VerifyConfig(test_modes=("full", "rowcount"), include_tables=("region",))
+    with pytest.raises(TypeError, match="table_schema must accept a df"):
+        verify(spark, [_StubTwoArgSchemaTarget("db", sf_dir)], cfg)
 
 
 def test_verify_plan_cache_distinguishes_formats(spark, sf_dir, tmp_path):
