@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from pgverify_spark.functions.canonical import DIALECT_DUCKDB, DIALECT_SPARK
 from pgverify_spark.operators.util import barrier as _barrier
+from pgverify_spark.operators.util import checkpoint_counted as _checkpoint_counted
 from pgverify_spark.operators.util import release_cached_deps as _release_cached_deps
 from pgverify_spark.operators.util import tag_cached_deps as _tag_cached_deps
 from pgverify_spark.functions.text_exprs import (
@@ -498,12 +499,12 @@ def dup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     # puts `pairs` in BOTH branches, so building edges directly off the
     # caller's plan executes the (often expensive — LSH joins, exact
     # verification) pair pipeline twice in the first job.
-    src = pairs.localCheckpoint(eager=True)
-    # Empty graph: skip the edge cache and the loop outright (the count
-    # doubles as the cache-width input below, so the check is free) —
-    # a real constant for compositions whose pair stream is empty by
-    # construction (e.g. pairs restricted to an already-deduped corpus).
-    n_pairs = src.count()
+    # Empty graph: skip the edge cache and the loop outright (the count,
+    # observed by the checkpoint job itself, doubles as the cache-width
+    # input below, so the check is free) — a real constant for
+    # compositions whose pair stream is empty by construction (e.g.
+    # pairs restricted to an already-deduped corpus).
+    src, n_pairs = _checkpoint_counted(pairs)
     if n_pairs == 0:
         return src.selectExpr("doc_a AS doc_id", "doc_a AS cluster_id")
     # The edge relation is ROUND-INVARIANT, so it is persisted

@@ -19,14 +19,17 @@ weight column) and the init/teleport terms (a literal, or a CASE over
 the seed predicate).  Scale shape — the classic iterative join-agg,
 same discipline as :func:`pgverify_spark.operators.dedup.dup_clusters`:
 
-- one edge build (:func:`_edge_cache`): the pairs are checkpointed,
-  symmetrized, hash-exchanged ONCE on the source id, then parallel
-  edges merge and the out-degree window runs in-partition — 1
-  Exchange, no Join, persisted; every round re-reads its in-memory
-  id-only blocks, with the out-degree riding ON each edge row;
-- one round = one ranks-side shuffle-hash join onto the cache + one
-  aggregation (contributions per destination) with map-side combine,
-  rows ∝ |E|;
+- one edge build (:func:`_edge_cache`): the pairs are checkpointed
+  (their count observed by the checkpoint job), symmetrized,
+  hash-exchanged ONCE on the source id, then parallel edges merge and
+  the out-degree window runs in-partition — 1 Exchange, no Join,
+  persisted as hash(s, nparts); every round re-reads its in-memory
+  id-only blocks in place, with the out-degree riding ON each edge row;
+- one round = one exchange: the contributions are repartitioned by
+  destination at the cache's own width and summed per destination, so
+  the next round's shuffle-hash join onto the cache is co-partitioned
+  and the cache is never exchanged again; round 1 joins nothing (the
+  initial rank rides on the edge rows); rows ∝ |E|;
 - the rank chain stays lazy and is truncated by an eager
   ``localCheckpoint`` only every ``_CHECKPOINT_EVERY`` rounds.
 
@@ -57,9 +60,14 @@ _TELEPORT_PPM = (1000 - DAMPING_PM) * 1000
 #: Initial rank: 1.0 in ppm.
 _INIT_PPM = 1_000_000
 
-#: Ids-only edge rows per partition of the one edge-build exchange
-#: (~24 B/row -> ~48 MB partitions, guide §2.2's sizing).
+#: Ids-only edge rows per partition at scale (~24 B/row -> ~48 MB
+#: partitions, guide §2.2's sizing).
 _EDGE_ROWS_PER_PART = 2_000_000
+
+#: Pairs per task below the core count: a small graph wants few
+#: well-fed tasks (sf0.01's 26 903 pairs stay at width 2), a mid-size
+#: one all cores (10x: 2.6 M pairs -> width 4 on 4 cores).
+_PAIRS_PER_TASK = 100_000
 
 #: The rank chain stays lazy (one action evaluates the whole unrolled
 #: tree); every this many rounds it is truncated with an eager
@@ -69,17 +77,23 @@ _EDGE_ROWS_PER_PART = 2_000_000
 _CHECKPOINT_EVERY = 8
 
 
-def _edge_partitions_from_count(n_pairs: int) -> int:
-    """Width of the edge-build exchange, derived from the pair count —
-    never a constant: rows/2M partitions, floor 2.  The per-round rank
-    join/aggregate inherit this width, and a small graph wants few
-    well-fed tasks (r13 interleaved A/B at sf0.1 against a core-count
-    floor: plain 3.75→2.93 s, weighted 5.13→3.07, personalized
-    3.82→2.58).  Floor 2, not 1: ``repartition(1, key)`` normalizes to
-    SinglePartition, which DROPS the hash partitioning the in-partition
-    merge, the degree window and the per-round join consume (see
-    dedup.dup_clusters).  At scale rows/2M dominates."""
-    return max(2, min(n_pairs // _EDGE_ROWS_PER_PART + 1, 1 << 20))
+def _edge_partitions(n_pairs: int, cores: int) -> int:
+    """Width of the edge cache AND of every rank round, derived from the
+    pair count and the session's core count — never a knob.
+
+    - ``n_pairs // 2M + 1`` sizes partitions by rows at scale;
+    - ``min(cores, n_pairs // 100k + 1)`` lets a mid-size graph use every
+      core (10x, 2.6 M pairs: rows/2M alone gives 2 tasks per round and
+      measured slower than the AQE-coalesced rounds it replaced) while a
+      small one keeps few well-fed tasks (r13 interleaved A/B at sf0.1
+      against a core-count floor: plain 3.75→2.93 s, weighted
+      5.13→3.07, personalized 3.82→2.58);
+    - floor 2, not 1: ``repartition(1, key)`` normalizes to
+      SinglePartition, which DROPS the hash partitioning the in-partition
+      merge, the degree window and the per-round join consume (see
+      dedup.dup_clusters)."""
+    by_cores = min(cores, n_pairs // _PAIRS_PER_TASK + 1)
+    return max(2, by_cores, min(n_pairs // _EDGE_ROWS_PER_PART + 1, 1 << 20))
 
 
 def _edge_cache(sym: DataFrame, nparts: int, weighted: bool) -> DataFrame:
@@ -97,6 +111,8 @@ def _edge_cache(sym: DataFrame, nparts: int, weighted: bool) -> DataFrame:
 
     1 Exchange, no Join (plan-asserted in tests/test_pipeline_ops.py::
     test_pagerank_edge_cache_plan), correct for any input multiset.
+    The persisted relation reports hash(s, nparts), which is what lets
+    every round's join read it in place (:func:`_rank_walk`).
     Output columns: s, t, d (+ w when weighted), persisted."""
     from pyspark.sql import Window
 
@@ -127,39 +143,53 @@ def _rank_walk(
     150000 / 1e6 ppm, or — with ``seed_sql`` — a CASE over the seed
     predicate scaled to full mass (see :func:`pagerank_personalized`).
 
-    Physical shape: the edge cache is persisted once; each round is one
-    ranks-side shuffle-hash join onto it + one map-side-combined
-    aggregate per destination — rows ∝ |E|, id-only.  Shuffle-hash, not
-    broadcast: the planner's per-round broadcast re-collects and
-    re-ships a nodes-sized table every round, and past broadcast size it
-    is the only viable strategy anyway.  Empty input returns zero rows
-    without running the loop (and before any seed check)."""
-    from pgverify_spark.operators.util import release_cached_deps, tag_cached_deps
+    Physical shape: the edge cache is persisted once as hash(s, nparts)
+    and is never exchanged again.  Each round shuffles its contributions
+    ONCE, ``repartition(nparts, "t")`` below the per-destination
+    aggregate, so the next round's join sees both sides as
+    hash(·, nparts) and reads the cache in place — one exchange per
+    round, rows ∝ |E|, id-only.  Round 1 needs no join: the cache is
+    symmetrized, so every node is the source of some edge row and the
+    initial rank (a literal, or the seed CASE over ``s AS node``) rides
+    on the edge rows.  Shuffle-hash, not broadcast, for the later
+    rounds: the planner's per-round broadcast re-collects and re-ships a
+    nodes-sized table every round, and past broadcast size it is the
+    only viable strategy anyway.  The pair count (exchange width,
+    empty-graph check) is observed by the pairs' checkpoint job, no
+    count job of its own.  Empty input returns zero rows without running
+    the loop (and before any seed check)."""
+    from pgverify_spark.operators.util import (
+        checkpoint_counted,
+        release_cached_deps,
+        tag_cached_deps,
+    )
 
     w = ("w",) if weighted else ()
-    src = pairs.selectExpr("doc_a", "doc_b", *w).localCheckpoint(eager=True)
+    src, n_pairs = checkpoint_counted(pairs.selectExpr("doc_a", "doc_b", *w))
     # the eager checkpoint just materialized the caller's pair pipeline —
     # any persisted intermediates tagged on it (doc_term_edges' shingle
     # table) are no longer needed by anything downstream
     release_cached_deps(pairs)
-    # one block-stats count serves the exchange width AND the
-    # empty-graph check
-    n_pairs = src.count()
     sym = src.selectExpr("doc_a AS s", "doc_b AS t", *w).unionByName(
         src.selectExpr("doc_b AS s", "doc_a AS t", *w)
     )
-    ed = _edge_cache(sym, _edge_partitions_from_count(n_pairs), weighted)
+    nparts = _edge_partitions(n_pairs, src.sparkSession.sparkContext.defaultParallelism)
+    ed = _edge_cache(sym, nparts, weighted)
     if n_pairs == 0:
         ed.unpersist()
         return ed.selectExpr("s AS node_id", "CAST(s AS BIGINT) AS rank_ppm")
-    nodes = ed.selectExpr("s AS node").distinct()
     if seed_sql is None:
         init, tele = f"CAST({_INIT_PPM} AS BIGINT)", f"CAST({_TELEPORT_PPM} AS BIGINT)"
     else:
-        counts = nodes.selectExpr(
-            "CAST(count(1) AS BIGINT) AS nv",
-            f"CAST(sum(CASE WHEN {seed_sql} THEN 1 ELSE 0 END) AS BIGINT) AS ns",
-        ).first()
+        counts = (
+            ed.selectExpr("s AS node")
+            .distinct()
+            .selectExpr(
+                "CAST(count(1) AS BIGINT) AS nv",
+                f"CAST(sum(CASE WHEN {seed_sql} THEN 1 ELSE 0 END) AS BIGINT) AS ns",
+            )
+            .first()
+        )
         nv, ns = int(counts["nv"]), int(counts["ns"] or 0)
         if ns == 0:
             ed.unpersist()
@@ -178,12 +208,20 @@ def _rank_walk(
             )
 
         init, tele = on_seeds((_INIT_PPM * nv) // ns), on_seeds((_TELEPORT_PPM * nv) // ns)
+    if iterations == 0:
+        ranks = ed.selectExpr("s AS node").distinct()
+        return tag_cached_deps(ranks.selectExpr("node AS node_id", f"{init} AS rank_ppm"), ed)
     contrib = f"(rank_ppm * {DAMPING_PM}{' * w' if weighted else ''}) div (1000 * d)"
-    ranks = nodes.selectExpr("node", f"{init} AS rank_ppm")
+    # round 1's ranks ride on the edge rows; the seed CASE reads `node`
+    edge_ranks = ed.selectExpr("s AS node", "t", "d", *w).selectExpr(
+        "t", "d", *w, f"{init} AS rank_ppm"
+    )
     for rnd in range(1, iterations + 1):
-        r = ranks.hint("shuffle_hash")
+        if rnd > 1:
+            r = ranks.hint("shuffle_hash")
+            edge_ranks = ed.join(r, ed["s"] == r["node"])
         ranks = (
-            ed.join(r, ed["s"] == r["node"])
+            edge_ranks.repartition(nparts, "t")
             .groupBy("t")
             .agg(F.expr(f"sum({contrib})").alias("c"))
             # two projections: the seed CASE reads the column `node`
@@ -711,17 +749,15 @@ def k_core(pairs: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     the driver sees the survivor count per round (an O(1) scalar, not
     a collect of rows) and stops peeling when it stops changing.
     """
-    from pgverify_spark.operators.util import release_cached_deps
+    from pgverify_spark.operators.util import checkpoint_counted, release_cached_deps
 
     src = pairs.selectExpr("doc_a", "doc_b").localCheckpoint(eager=True)
     release_cached_deps(pairs)
-    e = (
+    e, n_edges = checkpoint_counted(
         src.selectExpr("least(doc_a, doc_b) AS lo", "greatest(doc_a, doc_b) AS hi")
         .filter("lo <> hi")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_edges = e.count()
     for _ in range(rounds):
         deg = (
             e.selectExpr("lo AS node_id")
@@ -730,12 +766,10 @@ def k_core(pairs: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("degree"))
         )
         keep = deg.filter(f"degree >= {k}").select("node_id")
-        e = (
+        e, n_now = checkpoint_counted(
             e.join(keep, e.lo == keep.node_id, "left_semi")
             .join(keep, e.hi == keep.node_id, "left_semi")
-            .localCheckpoint(eager=True)
         )
-        n_now = e.count()
         if n_now == n_edges:  # fixed point: a further peel is identity
             break
         n_edges = n_now

@@ -72,6 +72,24 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
+def checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager ``localCheckpoint`` of ``df`` plus its row count, with no
+    job of its own: the count is a ``DataFrame.observe`` metric computed
+    by the checkpoint's jobs.  A separate ``count()`` on the checkpoint
+    would schedule two more AQE jobs.
+
+    The observed node sits directly under the checkpoint, in the
+    checkpoint job's result stage.  Accumulator updates of a result
+    stage merge exactly once per partition, so a retried task cannot
+    count its rows twice."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    cp = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return cp, int(obs.get["n"])
+
+
 def tag_cached_deps(result: DataFrame, *deps: DataFrame) -> DataFrame:
     """Record persisted intermediates on a returned DataFrame so callers
     can release them once the result is materialized."""

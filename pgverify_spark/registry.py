@@ -2309,7 +2309,7 @@ def _pipeline_entries() -> dict[str, tuple[Callable, str]]:
         # weighted twin: edge weight = shingle occurrence count in the
         # doc (TextRank's salience weighting — a repeated phrase pulls
         # proportionally more rank mass); same BIGINT-ppm discipline,
-        # same per-round 1-node-sized-exchange physical shape
+        # same one-exchange-per-round physical shape
         "pagerank_weighted_term_graph_documents": (
             _table_query(
                 "documents",

@@ -1,5 +1,5 @@
 """A true 100x documents corpus for the replicated-corpus scale probes
-(``scale_check_r13*.py`` import it).
+(``scale_check_r13*.py`` and ``scale_check_walks.py`` import it).
 
 scale_check's shared DST100 replicates documents at 1x (only the TPC-H
 anchor tables get real 100x rows).  ``build_docs_100`` writes 100

@@ -9,9 +9,10 @@ Two changes carry at-scale claims that need stress evidence:
    any skew straggler in the round join) grow with scale.  Measures
    ``near_dedup_filter(docs, minhash_lsh_pairs(docs))`` wall at
    1x/10x/100x (warm, min-of-2, interleaved reps).
-2. pagerank's edge cache floor 32 -> 2 (r13 batch 4): at 10x
-   (24M pairs) the size-derived width is still floor-bound (13 parts),
-   at 100x (240M pairs) rows/2M dominates — the floor must not
+2. pagerank's edge cache width (``graph._edge_partitions``), which the
+   rank rounds now share: at 10x (2.6 M pairs, measured) it is the
+   core count (4 on a 4-core host; rows/2M alone would give 2), at
+   100x (~26 M pairs) rows/2M dominates (14) — the width must not
    straggle where it binds.  Measures ``pagerank(doc_term_edges(docs),
    4)`` wall at the same scale points.
 

@@ -3635,6 +3635,72 @@ def test_pagerank_shapes(spark):
     assert graph.pagerank(empty, 4).collect() == []
 
 
+def _name(node):
+    return node.getClass().getSimpleName()
+
+
+def _plan_children(node, into_cache=False):
+    """Children of a physical plan node, looking through the adaptive
+    wrappers (the current plan, final once executed), query stages and
+    reused exchanges; a cached relation's own build plan is entered only
+    with ``into_cache``."""
+    name = _name(node)
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    if name == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()] if into_cache else []
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _plan_walk(node, into_cache=False):
+    """Every node of a physical plan tree, pre-order (py4j objects)."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        stack.extend(_plan_children(n, into_cache))
+    return out
+
+
+def _is_join(node):
+    return "Join" in _name(node) or _name(node) == "CartesianProductExec"
+
+
+def _exchanges(nodes):
+    """Shuffle and broadcast exchanges; a reused exchange counts through
+    the exchange it reuses."""
+    return [n for n in nodes if _name(n) in ("ShuffleExchangeExec", "BroadcastExchangeExec")]
+
+
+def _reaches_cache_without_join(node):
+    """True when an InMemoryTableScanExec lies below ``node`` on a path
+    with no join in between."""
+    stack = _plan_children(node)
+    while stack:
+        n = stack.pop()
+        if _name(n) == "InMemoryTableScanExec":
+            return True
+        if not _is_join(n):
+            stack.extend(_plan_children(n))
+    return False
+
+
+def _partition_keys(exchange):
+    keys = exchange.outputPartitioning().expressions()
+    return [keys.apply(i).name() for i in range(keys.size())]
+
+
+def _checkpointed(pairs):
+    cp = pairs.localCheckpoint(eager=True)
+    release_cached_deps(pairs)
+    return cp
+
+
 def test_pagerank_edge_cache_plan(docs):
     """The one edge build: every walk's edge cache plans exactly ONE
     Exchange and no Join, unweighted and weighted, also on an input
@@ -3647,26 +3713,20 @@ def test_pagerank_edge_cache_plan(docs):
 
     def ranks(out):
         (ed,) = out._pgvs_cached_deps  # the persisted edge cache
-        plan = ed._jdf.queryExecution().executedPlan().toString()
-        # a cache already materialized (the personalized seed count)
-        # prints its adaptive final plan followed by the initial one
-        plan = plan.split("== Initial Plan ==")[0]
-        assert plan.count("Exchange") == 1 and "Join" not in plan
+        # the cache's build plan: its adaptive plan as it stands (final
+        # once the personalized seed count materialized it)
+        nodes = _plan_walk(ed._jdf.queryExecution().executedPlan(), into_cache=True)
+        assert len(_exchanges(nodes)) == 1 and not any(map(_is_join, nodes))
         got = {r["node_id"]: r["rank_ppm"] for r in out.collect()}
         release_cached_deps(out)
         return got
-
-    def checkpointed(pairs):
-        cp = pairs.localCheckpoint(eager=True)
-        release_cached_deps(pairs)
-        return cp
 
     def with_dups(cp):  # every pair once repeated, once reversed
         rev = cp.selectExpr("doc_b AS doc_a", "doc_a AS doc_b", *cp.columns[2:])
         return cp.unionByName(cp).unionByName(rev)
 
-    pairs = checkpointed(graph.doc_term_edges(docs))
-    wpairs = checkpointed(graph.doc_term_edges_weighted(docs))
+    pairs = _checkpointed(graph.doc_term_edges(docs))
+    wpairs = _checkpointed(graph.doc_term_edges_weighted(docs))
     seed = f"node < {graph.TERM_NODE_OFFSET}"
     assert ranks(graph.pagerank(with_dups(pairs), 4)) == ranks(graph.pagerank(pairs, 4))
     assert ranks(graph.pagerank_weighted(with_dups(wpairs), 3)) == ranks(
@@ -3675,6 +3735,72 @@ def test_pagerank_edge_cache_plan(docs):
     assert ranks(graph.pagerank_personalized(with_dups(pairs), seed, 3)) == ranks(
         graph.pagerank_personalized(pairs, seed, 3)
     )
+
+
+@pytest.mark.parametrize("iterations", [4, 9])
+def test_pagerank_rounds_read_edge_cache_in_place(docs, iterations):
+    """Every rank round reads the persisted edge cache in place: in each
+    walk's executed (final adaptive) plan, the cache is never exchanged
+    under a round's join, and each round shuffles once.  Round 1 rides
+    on the edge rows, so the one exchange that reads the cache with no
+    join in between is round 1's own, by destination ``t``.  Past the
+    checkpoint at round 8 only round 9 is left in the plan; its join
+    may re-exchange the checkpointed rank side, never the cache."""
+    from pgverify_spark.operators import graph
+
+    pairs = _checkpointed(graph.doc_term_edges(docs))
+    wpairs = _checkpointed(graph.doc_term_edges_weighted(docs))
+    seed = f"node < {graph.TERM_NODE_OFFSET}"
+    walks = {
+        "plain": lambda: graph.pagerank(pairs, iterations),
+        "weighted": lambda: graph.pagerank_weighted(wpairs, iterations),
+        "personalized": lambda: graph.pagerank_personalized(pairs, seed, iterations),
+    }
+    for walk, run in walks.items():
+        out = run()
+        assert out.collect()
+        nodes = _plan_walk(out._jdf.queryExecution().executedPlan())
+        release_cached_deps(out)
+        exchanges = _exchanges(nodes)
+        over_cache = [x for x in exchanges if _reaches_cache_without_join(x)]
+        joins = [n for n in nodes if _is_join(n)]
+        if iterations <= 8:
+            assert len(exchanges) == iterations, walk
+            assert [_partition_keys(x) for x in over_cache] == [["t"]], walk
+            assert len(joins) == iterations - 1, walk  # none in round 1
+        else:
+            keys = sorted(map(_partition_keys, exchanges))
+            assert over_cache == [] and keys in ([["t"]], [["node"], ["t"]]), walk
+            assert len(joins) == 1, walk
+
+
+def test_pagerank_schedules_at_most_13_jobs(spark, docs):
+    """One warm ``pagerank(doc_term_edges(docs), 4)`` build plus collect,
+    run under a job group, schedules at most 13 jobs: the pairs'
+    checkpoint (its row count observed, no count job), the edge cache's
+    exchange, one exchange per round and the result stage."""
+    from pgverify_spark.operators import graph
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run():
+        out = graph.pagerank(graph.doc_term_edges(docs), 4)
+        rows = out.collect()
+        release_cached_deps(out)
+        return rows
+
+    want = run()  # warm-up: nothing below depends on a cold JVM
+    group = "pagerank-job-count"
+    sc.setJobGroup(group, "pagerank job-count guard")
+    try:
+        got = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(got) == sorted(want)
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 13, sorted(jobs)
 
 
 def test_pagerank_weighted_matches_oracle(docs, duck):

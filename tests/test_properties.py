@@ -6,6 +6,7 @@ Spark job per example, so example counts are modest and deterministic
 
 import hashlib
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -466,6 +467,36 @@ _edges = st.lists(
 )
 
 
+def _ref_rank_walk(pairs, iterations, weighted=False, seeds=None):
+    """Dict reference of the integer rank recurrence over (a, b, w)
+    triples: edges symmetrized, parallel edges merged (weight-sum when
+    ``weighted``, else a distinct edge of weight 1), contributions split
+    by out-strength; ``seeds`` puts the teleport and the initial mass on
+    the seed set, scaled to full mass."""
+    wsum: dict[tuple, int] = {}
+    for a, b, w in pairs:
+        for e in ((a, b), (b, a)):
+            wsum[e] = (wsum.get(e, 0) + w) if weighted else 1
+    strength: dict[int, int] = {}
+    for (s, _), w in wsum.items():
+        strength[s] = strength.get(s, 0) + w
+    nv = len(strength)
+    if seeds is None:
+        init = {n: 1_000_000 for n in strength}
+        tele = {n: 150_000 for n in strength}
+    else:
+        ns = sum(1 for n in strength if n in seeds)
+        init = {n: (1_000_000 * nv) // ns if n in seeds else 0 for n in strength}
+        tele = {n: (150_000 * nv) // ns if n in seeds else 0 for n in strength}
+    ranks = init
+    for _ in range(iterations):
+        nxt = dict(tele)
+        for (s, t), w in wsum.items():
+            nxt[t] += (ranks[s] * 850 * w) // (1000 * strength[s])
+        ranks = nxt
+    return ranks
+
+
 @SETTINGS
 @given(_edges, st.integers(1, 4))
 def test_pagerank_matches_reference(spark, pairs, iterations):
@@ -474,22 +505,51 @@ def test_pagerank_matches_reference(spark, pairs, iterations):
     operator contract), plus the mass bounds floor-division implies."""
     from pgverify_spark.operators.graph import pagerank
 
-    sym = sorted({(a, b) for a, b in pairs} | {(b, a) for a, b in pairs})
-    deg: dict[int, int] = {}
-    for s, _ in sym:
-        deg[s] = deg.get(s, 0) + 1
-    ranks = {n: 1_000_000 for n in deg}
-    for _ in range(iterations):
-        nxt = {n: 150_000 for n in deg}
-        for s, t in sym:
-            nxt[t] += (ranks[s] * 850) // (1000 * deg[s])
-        ranks = nxt
+    ranks = _ref_rank_walk([(a, b, 1) for a, b in pairs], iterations)
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {r["node_id"]: r["rank_ppm"] for r in pagerank(df, iterations).collect()}
     assert got == ranks
-    n = len(deg)
+    n = len(ranks)
     # floor division only ever LOSES mass; teleport floor is exact
     assert n * 150_000 <= sum(got.values()) <= n * 1_000_000
+
+
+#: One small graph for the round-count boundaries: a hub, a reversed
+#: and a repeated pair, unequal weights and a second component.
+_BOUNDARY_EDGES = [
+    (0, 1, 3), (0, 2, 1), (0, 3, 2), (1, 2, 2), (2, 1, 1), (3, 4, 5),
+    (4, 5, 1), (5, 3, 2), (0, 1, 4), (6, 7, 1), (7, 8, 3),
+]
+
+
+@pytest.mark.parametrize("iterations", [0, 1, 9])
+@pytest.mark.parametrize("walk", ["plain", "weighted", "personalized"])
+def test_rank_walks_round_count_boundaries(spark, walk, iterations):
+    """0 rounds (the initial ranks of every node), 1 round (the round
+    whose ranks ride on the edge rows) and 9 rounds (one past the
+    checkpoint at round 8) == the dict reference, for all three walks."""
+    from pgverify_spark.operators import graph
+
+    seeds = {0, 6}
+    if walk == "weighted":
+        df = spark.createDataFrame(_BOUNDARY_EDGES, "doc_a long, doc_b long, w long")
+        out = graph.pagerank_weighted(df, iterations)
+    else:
+        df = spark.createDataFrame(
+            [(a, b) for a, b, _ in _BOUNDARY_EDGES], "doc_a long, doc_b long"
+        )
+        if walk == "plain":
+            out = graph.pagerank(df, iterations)
+        else:
+            out = graph.pagerank_personalized(df, "node IN (0, 6)", iterations)
+    got = {r["node_id"]: r["rank_ppm"] for r in out.collect()}
+    want = _ref_rank_walk(
+        _BOUNDARY_EDGES,
+        iterations,
+        weighted=walk == "weighted",
+        seeds=seeds if walk == "personalized" else None,
+    )
+    assert got == want
 
 
 _kmv_vals = st.lists(
@@ -547,19 +607,7 @@ def test_pagerank_weighted_matches_reference(spark, pairs, iterations):
     weight-sum, contributions split by out-strength share."""
     from pgverify_spark.operators.graph import pagerank_weighted
 
-    wsum: dict[tuple, int] = {}
-    for a, b, w in pairs:
-        wsum[(a, b)] = wsum.get((a, b), 0) + w
-        wsum[(b, a)] = wsum.get((b, a), 0) + w
-    strength: dict[int, int] = {}
-    for (s, _), w in wsum.items():
-        strength[s] = strength.get(s, 0) + w
-    ranks = {n: 1_000_000 for n in strength}
-    for _ in range(iterations):
-        nxt = {n: 150_000 for n in strength}
-        for (s, t), w in wsum.items():
-            nxt[t] += (ranks[s] * 850 * w) // (1000 * strength[s])
-        ranks = nxt
+    ranks = _ref_rank_walk(pairs, iterations, weighted=True)
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long, w long")
     got = {
         r["node_id"]: r["rank_ppm"]
