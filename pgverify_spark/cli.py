@@ -69,21 +69,15 @@ def build_parser() -> argparse.ArgumentParser:
         help="hash primary key values before comparing them (useful for TEXT primary keys)",
     )
     p.add_argument(
-        "--full-stream-hash", action="store_const", const=True, default=None,
+        "--no-full-stream-hash", action="store_false",
         dest="full_stream_hash",
-        help="force the memory-bounded streamed reduce for exact 'full' "
-        "fingerprints (default: auto — every distributed-plan input "
-        "streams; measured faster than the JVM aggregate at sf0.1 and "
-        "immune to its single-task-concat heap wall). NOTE: the "
-        "streamed reduce is a Python (mapInPandas) stage, so the "
-        "default path requires a pyspark-capable Python on every "
-        "EXECUTOR; JVM-only executor deployments must pass "
-        "--no-full-stream-hash (forces the aggregate, byte-identical "
-        "digests) or prefer --tests bucketed, the mergeable scale mode",
-    )
-    p.add_argument(
-        "--no-full-stream-hash", action="store_const", const=False,
-        dest="full_stream_hash", help=argparse.SUPPRESS,
+        help="take the final md5 of exact 'full' (and large 'sparse' and "
+        "per-partition) fingerprints in a JVM aggregate instead of the "
+        "default streamed Python (mapInPandas) stage. The default needs "
+        "a pyspark-capable Python on every EXECUTOR; pass this on "
+        "JVM-only executor deployments (byte-identical digests; the "
+        "aggregate holds the whole ~32 B/row concat in one task, so "
+        "prefer --tests bucketed beyond ~10^8 rows)",
     )
     p.add_argument(
         "--level", default="info",
@@ -185,12 +179,11 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 #: Failure signatures of a cluster whose EXECUTORS lack a
-#: pyspark-capable Python.  Since the r8 AUTO default, every
-#: non-small full/fused/partitioned fingerprint routes through an
-#: Arrow-batched Python (mapInPandas) stage, so deployments that
-#: previously ran JVM-only now need Python on every executor (or the
-#: ``--no-full-stream-hash`` opt-out — digests are byte-identical
-#: either way).
+#: pyspark-capable Python.  By default every non-small
+#: full/fused/sparse/partitioned fingerprint routes through an
+#: Arrow-batched Python (mapInPandas) stage, so such deployments need
+#: Python on every executor or the ``--no-full-stream-hash`` switch
+#: (digests are byte-identical either way).
 _PY_WORKER_MARKERS = (
     "Cannot run program",          # executor exec of python3 failed
     "Python worker",               # worker crashed / failed to connect
@@ -201,11 +194,11 @@ _PY_WORKER_MARKERS = (
 
 def _rethrow_with_stream_hash_hint(exc: BaseException, config) -> None:
     """Re-raise ``exc``; when it looks like a missing-executor-Python
-    failure AND the streamed reduce could have been auto-selected,
-    wrap it in a SystemExit explaining the fix (ADVICE r8) instead of
-    leaving the user a bare JVM stack trace."""
+    failure AND the streamed reduce was selected, wrap it in a
+    SystemExit explaining the fix (ADVICE r8) instead of leaving the
+    user a bare JVM stack trace."""
     msg = f"{type(exc).__name__}: {exc}"
-    if config.full_stream_hash is not False and any(
+    if config.full_stream_hash and any(
         m in msg for m in _PY_WORKER_MARKERS
     ):
         raise SystemExit(

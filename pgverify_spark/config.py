@@ -91,33 +91,21 @@ class VerifyConfig:
     #: small tables (a multi-target verify run is dominated by dimension
     #: tables' fixed per-stage overhead otherwise).
     small_input_bytes: int = 4 << 20
-    #: Extension: stream the full fingerprint's FINAL md5 through an
-    #: Arrow-batched incremental hash (O(largest partition) memory in
-    #: the last task) instead of the single JVM aggregate that
-    #: materializes the whole 32 B x rows concat (O(table)).  Same
-    #: digest byte-for-byte.  Below ~10^7 rows the JVM aggregate is
-    #: faster (no Python stage); beyond ~10^8 rows x targets the
-    #: aggregate overruns a single task's heap.  Default ``None`` =
-    #: AUTO: pick the streamed reduce when the optimizer's scan-size
-    #: estimate exceeds ``stream_hash_auto_bytes`` (statless sources
-    #: estimate effectively-infinite, so unknown sizes take the safe
-    #: path).  ``True``/``False`` force one side.  (The `bucketed` mode
-    #: remains the real 100 TB path — no sequential reduce at all.)
-    full_stream_hash: bool | None = None
-    #: AUTO threshold for ``full_stream_hash=None``: estimated input
-    #: bytes above which full/fused/partitioned fingerprints take the
-    #: memory-bounded streamed reduce.  Bytes are a weak proxy for the
-    #: aggregate path's real wall — the O(rows) concat in the FINAL
-    #: task (~72 B/row live incl. collect_list overhead): columnar
-    #: compression varies 20x+ (the 100x CLI probe OOM'd an 8 GiB heap
-    #: on a 129 MB/15M-row parquet AND on an 11 MB/15M-row RLE'd ORC of
-    #: the same rows).  So the bar is set at the small-input boundary:
-    #: measured at sf0.1 the streamed reduce is FASTER than the JVM
-    #: aggregate besides being memory-bounded (2.10 s vs 2.37 s on
-    #: lineitem full; 0.51 vs 0.65 on orders), so every distributed-
-    #: plan input streams and the aggregate survives only as the
-    #: explicit ``full_stream_hash=False`` opt-out.
-    stream_hash_auto_bytes: int = 4 << 20
+    #: Extension: how the exact ordered digest takes its final md5 on a
+    #: large input (``full``, a sparse sample above ``small_input_bytes``
+    #: and the per-partition fingerprints).  ``True`` streams it through
+    #: an Arrow-batched incremental hash in a Python (``mapInPandas``)
+    #: stage: O(batch) memory in every task.  ``False`` keeps it in the
+    #: JVM, whose single final aggregate materializes the whole
+    #: 32 B x rows concat: O(table) in one task (the 100x CLI probe
+    #: overran an 8 GiB heap at 15M rows).  Same digest byte-for-byte.
+    #: The streamed reduce is the default: measured at sf0.1 it is also
+    #: faster on ``full`` (2.10 s vs 2.37 s on lineitem; 0.51 vs 0.65 on
+    #: orders), though slower on the 10x lineitem's ~600k-row sparse
+    #: sample (SCALE_CHECK.md).  ``False`` is for executors without a
+    #: pyspark-capable Python.  (The ``bucketed`` mode remains the real
+    #: 100 TB path — no sequential reduce at all.)
+    full_stream_hash: bool = True
 
     def validate(self) -> None:
         """Mode-name and precision validation (config.go:101-114)."""
@@ -155,7 +143,6 @@ class VerifyConfig:
             tuple(sorted(self.column_types.items())),
             self.small_input_bytes,
             self.full_stream_hash,
-            self.stream_hash_auto_bytes,
         )
 
     def typed_cols(self, cols: list[tuple[str, str]]) -> list[tuple[str, str]]:

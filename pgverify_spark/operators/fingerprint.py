@@ -23,12 +23,13 @@ Scale
 ``full`` reproduces the reference's semantics exactly and shares its cost
 profile: one total order over the table.  The physical plan is chosen
 from Catalyst's size estimate: small inputs use a two-stage single-reduce
-ordered aggregate; large inputs a distributed, spill-able range sort with
-per-partition ordered partials (``_exact_ordered_fp``).  Either way the
-final md5 consumes the 32 B x rows concatenation in one reduce — the
-inherent cost of an exact sequential digest, isomorphic to the
-server-side ``ORDER BY + string_agg`` the reference pushes into PG
-(README.md:69 calls full mode "memory intensive").  **At 100 TB use
+ordered aggregate; large inputs a distributed, spill-able range sort
+whose sorted partitions one final reduce digests in order
+(``_ordered_reduce``: streamed through Python, or JVM partials with
+``full_stream_hash=False``).  Either way one task hashes the 32 B x rows
+concatenation — the inherent cost of an exact sequential digest,
+isomorphic to the server-side ``ORDER BY + string_agg`` the reference
+pushes into PG (README.md:69 calls full mode "memory intensive").  **At 100 TB use
 ``bucketed``**: rows hash-partition into B fixed buckets on the PK key,
 each bucket computes an ordered partial fingerprint (one shuffle, ~n/B
 rows per reduce), and the final fingerprint is the md5 over bucket
@@ -110,18 +111,6 @@ def _small(df: DataFrame, config: VerifyConfig) -> bool:
     return plan_size_bytes(df) <= config.small_input_bytes
 
 
-def _stream_hash(df: DataFrame, config: VerifyConfig) -> bool:
-    """Whether a non-small full/fused/partitioned fingerprint should
-    take the memory-bounded streamed reduce.  Explicit config wins;
-    the ``None`` default auto-selects by the optimizer's size estimate
-    (``VerifyConfig.stream_hash_auto_bytes``) — statless sources
-    estimate effectively-infinite, so unknown inputs take the path that
-    cannot overrun a task heap.  Plan-pinned in tests/test_fingerprint."""
-    if config.full_stream_hash is not None:
-        return config.full_stream_hash
-    return plan_size_bytes(df) > config.stream_hash_auto_bytes
-
-
 def _kh(df: DataFrame, schema: TableSchema, config: VerifyConfig) -> DataFrame:
     k, h, _ = _exprs(schema, config)
     base = df if _small(df, config) else _parallelize(df)
@@ -133,67 +122,63 @@ def rowcount(df: DataFrame, schema: TableSchema | None = None, config: VerifyCon
     return df.select(F.count(F.lit(1)).cast("string").alias("fp"))
 
 
-def _exact_ordered_fp(kh: DataFrame) -> DataFrame:
-    """md5 over row hashes in (k, h) order, as a distributed plan.
+def _ordered_reduce(
+    kh: DataFrame, config: VerifyConfig, modes: tuple[str, ...]
+) -> DataFrame:
+    """The exact ordered-digest reducer over a large (k, h) relation:
+    ``fp_<mode>`` for ``modes`` (any of ``FUSABLE_MODES``) in one row.
 
-    Parallel Tungsten range-sort on (k, h), then per-partition ordered
-    concat of row hashes (partitions of a sorted DataFrame are
-    range-disjoint and internally ordered, so concatenating partition
-    strings in partition-id order reconstructs the full ordered stream),
-    then one md5 over the concatenation — byte-identical to
-    ``md5(string_agg(h, '' ORDER BY k, h))`` but the sort is distributed
-    and spill-able instead of a single ``array_sort(collect_list(...))``
-    reduce (~2x faster at sf0.1, far better skew/memory behavior).  The
-    final reduce still materializes the 32 B x rows concat — the
-    inherent cost of an exact sequential md5 (the reference's server-side
-    ``ORDER BY + string_agg`` pays the same, README.md:69); beyond ~10^8
-    rows use ``bucketed``.
+    One parallel, spill-able range sort on (k, h).  The partitions of the
+    sorted relation are range-disjoint and internally ordered, so their
+    row hashes concatenated in partition-id order are the whole ordered
+    stream: the digest is byte-identical to
+    ``md5(string_agg(h, '' ORDER BY k, h))`` (``query.go:122-158``).
+    ``config.full_stream_hash`` picks the final reduce:
+
+    - True: :func:`_streamed_fused`, memory-bounded in every task;
+    - False: per-partition (concat, count, hv-sum) partials in the JVM,
+      then one aggregate that materializes the whole 32 B x rows concat
+      in one task — the path for executors without Python.
+
+    Either way one task sees every byte (~32 B/row), as the reference's
+    server-side ``ORDER BY + string_agg`` does (README.md:69); beyond
+    ~10^8 rows use ``bucketed``.
     """
+    ranged = kh.sort("k", "h")
+    if config.full_stream_hash:
+        return _streamed_fused(ranged, modes)
     partials = (
-        kh.sort("k", "h")
-        .select(F.spark_partition_id().alias("p"), "h")
+        ranged.selectExpr("spark_partition_id() AS p", "h", f"{_hv_sql('h')} AS hv")
         .groupBy("p")
-        .agg(F.concat_ws("", F.collect_list("h")).alias("s"))
+        .agg(
+            F.concat_ws("", F.collect_list("h")).alias("s"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("hv").alias("hsum"),
+        )
     )
-    return partials.selectExpr(f"{_PARTIALS_AGG} AS fp")
+    aggs = {
+        "full": _PARTIALS_AGG,
+        "rowcount": "CAST(coalesce(sum(cnt), 0) AS STRING)",
+        "additive": _additive_sql("coalesce(sum(cnt), 0)", "sum(hsum)"),
+    }
+    return partials.selectExpr(*[f"{aggs[m]} AS fp_{m}" for m in modes])
 
 
-def _exact_ordered_fp_streaming(kh: DataFrame) -> DataFrame:
-    """:func:`_exact_ordered_fp` with BOTH reduce stages memory-bounded.
+def _streamed_fused(ranged: DataFrame, modes: tuple[str, ...]) -> DataFrame:
+    """Memory-bounded fused reduce of a (k, h)-sorted relation:
+    (fp_<mode>, ...) in one row.
 
-    The aggregate path's wall at scale is memory, twice over: the
-    map-side ``collect_list`` buffers one whole (AQE-coalesced) sorted
-    partition per task (~hundreds of MB each under the default
-    coalescing, the measured heap overrun at 6x10^7 rows x 2 targets on
-    an 8g JVM), and the final concat materializes the entire
-    32 B x rows stream in one task.  Here each sorted partition is
-    chunk-concatenated in an Arrow-batched Python stage — (p, i, chunk)
-    every ~10^4 rows, O(batch) memory — and ONE final task streams the
-    chunks in (p, i) order through an incremental hashlib md5, O(batch)
-    memory, spill-backed shuffle/sort in between.  Digest is
-    byte-identical: the same hex-char byte stream in the same (k, h)
-    order (property-tested against the aggregate path).
-
-    This is still an exact SEQUENTIAL hash — one task must see every
-    byte, ~32 B/row, which is why ``bucketed`` (mergeable partials, no
-    sequential reduce) is the real 100 TB mode; this path moves the
-    exact mode's limit from "heap-bound" to "stream-bound".
-    """
-
-    return _streamed_fused(kh, ("full",)).selectExpr("fp_full AS fp")
-
-
-def _streamed_fused(kh: DataFrame, modes: tuple[str, ...]) -> DataFrame:
-    """Memory-bounded fused reduce: (fp_<mode>, ...) in one row.
-
-    Each sorted partition is chunk-concatenated in an Arrow-batched
-    Python stage — (p, i, chunk, chunk-count, chunk-hash-sum) every
-    Arrow batch, O(batch) memory — and ONE final task streams the
-    chunks in (p, i) order through an incremental hashlib md5 while
-    folding the count/sum terms (Python integers: exact at any
-    magnitude, the JVM path needs DECIMAL(38) for the same sum).
-    Byte-identical outputs to the aggregate paths, including the
-    empty-input spellings ('no rows' / '0' / '0').
+    The map-side ``collect_list`` of the JVM partials buffers one whole
+    sorted partition per task, and their final concat the whole table
+    in one task.  Here each sorted partition is chunk-concatenated in
+    an Arrow-batched Python stage — (p, i, chunk, chunk-count,
+    chunk-hash-sum) every Arrow batch, O(batch) memory — and ONE final
+    task streams the chunks in (p, i) order through an incremental
+    hashlib md5 while folding the count/sum terms (Python integers:
+    exact at any magnitude, the JVM path needs DECIMAL(38) for the same
+    sum).  Byte-identical outputs to the aggregate paths, including the
+    empty-input spellings ('no rows' / '0' / '0').  The Python stages
+    need a pyspark-capable Python on every executor.
     """
 
     def concat_chunks(batches):
@@ -242,14 +227,13 @@ def _streamed_fused(kh: DataFrame, modes: tuple[str, ...]) -> DataFrame:
 
     h48 = hex_prefix_int_sql("h", DIALECT_SPARK)
     chunks = (
-        kh.sort("k", "h")
-        .selectExpr("spark_partition_id() AS p", "h", f"{h48} AS hv")
+        ranged.selectExpr("spark_partition_id() AS p", "h", f"{h48} AS hv")
         .mapInPandas(concat_chunks, "p int, i long, s string, cnt long, hsum string")
     )
     # Seed row (p=-1): Spark elides the Python worker entirely on an
     # empty partition, which would otherwise swallow the empty-input
     # sentinels; the seed sorts first and contributes zero bytes.
-    seed = kh.sparkSession.createDataFrame(
+    seed = ranged.sparkSession.createDataFrame(
         [(-1, 0, "", 0, "0")], "p int, i long, s string, cnt long, hsum string"
     )
     fused = (
@@ -265,20 +249,11 @@ def _streamed_fused(kh: DataFrame, modes: tuple[str, ...]) -> DataFrame:
 
 
 def full_fingerprint(df: DataFrame, schema: TableSchema, config: VerifyConfig | None = None) -> DataFrame:
-    """Exact ordered fingerprint (parity mode; see ``_exact_ordered_fp``).
-
-    Small inputs use the single-reduce ordered aggregate directly — two
-    stages instead of the sort plan's four (repartition, range-sample,
-    sort, reduce), which dominates multi-table verify runs where most
-    tables are small dimensions.  Same fingerprint either way.
-    """
+    """Exact ordered fingerprint (parity mode): the ``full`` column of
+    :func:`fused_fingerprints` — the single-reduce ordered aggregate on a
+    small input, :func:`_ordered_reduce` on a large one."""
     config = config or VerifyConfig()
-    if _small(df, config):
-        return _small_fused(df, schema, config, ("full",)).selectExpr("fp_full AS fp")
-    kh = _kh(df, schema, config)
-    if _stream_hash(df, config):
-        return _exact_ordered_fp_streaming(kh)
-    return _exact_ordered_fp(kh)
+    return fused_fingerprints(df, schema, config, ("full",)).selectExpr("fp_full AS fp")
 
 
 def bookend_fingerprint(
@@ -367,11 +342,13 @@ def sparse_fingerprint(
     # Plan choice on the SAMPLED size (~input/mod): below the threshold
     # the single-reduce ordered agg wins — the sort-based plan's range
     # sampling would run the filter+hash scan twice for nothing.  Above
-    # it (sampled rows no longer fit one reducer) switch to the
-    # distributed sort, which computes the byte-identical fingerprint.
+    # it (sampled rows no longer fit one reducer) switch to the exact
+    # ordered reducer, which computes the byte-identical fingerprint.
     if size // max(1, config.sparse_mod) <= config.small_input_bytes:
         return sampled.selectExpr(f"{_NO_ROWS_AGG} AS fp")
-    return _exact_ordered_fp(sampled.select("k", "h"))
+    return _ordered_reduce(sampled.select("k", "h"), config, ("full",)).selectExpr(
+        "fp_full AS fp"
+    )
 
 
 def _sampled_sql(k_plain: str, config: VerifyConfig) -> str:
@@ -495,22 +472,9 @@ def partitioned_fingerprint(
     small = _small(df, config)
     base = df if small else _parallelize(df)
     kh = base.selectExpr(f"{partition_sql} AS part", f"{k} AS k", f"{h} AS h")
-    return _partitioned_fp_from_kh(kh, df, config, small)
-
-
-def _partitioned_fp_from_kh(
-    kh: DataFrame, width_src: DataFrame, config: VerifyConfig, small: bool
-) -> DataFrame:
-    """(part, fp) from an already-projected (part, k, h) relation — the
-    tail of :func:`partitioned_fingerprint`, split out so
-    :func:`~pgverify_spark.operators.diff.incident_report` can feed the
-    SAME persisted projection to this and to the row-level diff instead
-    of re-scanning + re-hashing the table per stage (r12 batch 7).
-    ``width_src`` is the original source relation, used only for the
-    size-derived exchange width and the streamed-reduce auto-select."""
     # explicit size-derived width, same rationale as bucketed_fingerprint
-    clustered = kh.repartition(scaled_partitions(width_src), "part")
-    if not small and _stream_hash(width_src, config):
+    clustered = kh.repartition(scaled_partitions(df), "part")
+    if not small and config.full_stream_hash:
         # Same heap wall as the exact full fingerprint, per PARTITION:
         # collect_list buffers one whole calendar partition per group
         # (measured OOM at 10^6 rows/day x 2 sides on an 8g JVM, 100x
@@ -752,8 +716,8 @@ def _file_day_bounds(df) -> dict[str, tuple[int, int]]:
 
     if "ts" not in df.columns:
         return {}
-    spark = df.sparkSession
-    jvm, _ = _hadoop(spark, df.inputFiles()[0]) if df.inputFiles() else (None, None)
+    files = df.inputFiles()
+    jvm, _ = _hadoop(df.sparkSession, files[0]) if files else (None, None)
     day = timecol.bucket_sql(df, timecol.US_PER_DAY)
     rows = (
         df.selectExpr("input_file_name() AS f", f"{day} AS d")
@@ -825,31 +789,16 @@ def snapshot_catalog_unchanged(spark, table_dir: str, path: str) -> bool | None:
     scheduled full re-verify every deployment keeps) exists for; the
     fast path targets the overwhelmingly common no-op verify.
     """
-    import json as _json
-
-    from pgverify_spark.sources import manifest
-    from pgverify_spark.sources.maintain import _hadoop
-
-    entries = manifest.current_entries(spark, path)
-    if not entries:
+    stored = _read_file_catalog(spark, path)
+    if stored is None:
         return None
-    jvm, fs = _hadoop(spark, path)
-    cat_path = jvm.org.apache.hadoop.fs.Path(f"{path}/{entries[0]}/{_FILECAT}")
-    if not fs.exists(cat_path):
-        return None
-    stream = fs.open(cat_path)
-    try:
-        raw = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        ).decode("utf-8")
-    finally:
-        stream.close()
-    stored = [tuple(x[:3]) for x in _json.loads(raw)["files"]]
     current = _target_file_catalog(spark, _list_table_files(spark, table_dir))
-    return stored == [tuple(x) for x in current]
+    return [tuple(x[:3]) for x in stored] == [tuple(x) for x in current]
 
 
 def _read_file_catalog(spark, path: str) -> list[list] | None:
+    """The file catalog stored with the snapshot's current generation;
+    None when the snapshot has no manifest or no catalog."""
     import json as _json
 
     from pgverify_spark.sources import manifest
@@ -1282,10 +1231,11 @@ def fused_fingerprints(
     - small input: every mode in ``SMALL_FUSABLE_MODES`` from one
       projection and one two-stage aggregate (:func:`_small_fused`) —
       the only small-input implementation of full, sparse and bookend;
-    - large input: ``FUSABLE_MODES`` only, on ``full_fingerprint``'s
-      plan (distributed range sort with per-partition partials, or the
-      streamed reduce) with the count/sum terms riding along.  Bookend
-      keeps its top-K plan and sparse its filter-first plan.
+    - large input: ``FUSABLE_MODES`` only, from the exact ordered
+      reducer (:func:`_ordered_reduce`: one range sort, then the
+      streamed or the JVM final reduce) with the count/sum terms riding
+      along.  Bookend keeps its top-K plan and sparse its filter-first
+      plan.
 
     The additive term needs no second scan: its 48-bit integer derives
     from the same row hash ``h`` the ordered concat consumes.
@@ -1296,29 +1246,7 @@ def fused_fingerprints(
             raise ValueError(f"mode {m!r} is not fusable; fusable: {fusable}")
     if fusable == SMALL_FUSABLE_MODES:
         return _small_fused(df, schema, config, modes)
-    kh = _kh(df, schema, config)
-    if _stream_hash(df, config):
-        # memory-bounded variant (see _streamed_fused): same scan, same
-        # sort, chunked Python concat + one streaming reduce
-        return _streamed_fused(kh, modes)
-    # distributed path: one range sort; per-partition ordered partials
-    # carry (concat, count, hv-sum); the final reduce derives every mode
-    partials = (
-        kh.sort("k", "h")
-        .selectExpr("spark_partition_id() AS p", "h", f"{_hv_sql('h')} AS hv")
-        .groupBy("p")
-        .agg(
-            F.concat_ws("", F.collect_list("h")).alias("s"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("hv").alias("hsum"),
-        )
-    )
-    aggs = {
-        "full": _PARTIALS_AGG,
-        "rowcount": "CAST(coalesce(sum(cnt), 0) AS STRING)",
-        "additive": _additive_sql("coalesce(sum(cnt), 0)", "sum(hsum)"),
-    }
-    return partials.selectExpr(*[f"{aggs[m]} AS fp_{m}" for m in modes])
+    return _ordered_reduce(_kh(df, schema, config), config, modes)
 
 
 def _small_fused(

@@ -662,8 +662,20 @@ def test_jdbc_catalog_shape_validation():
         _validate_jdbc_catalog({"db_schema": 7}, "c")
 
 
+def test_full_stream_hash_flag_parses():
+    """The streamed reduce is the default; --no-full-stream-hash is the
+    one switch that selects the JVM reducer."""
+    from pgverify_spark.cli import build_parser
+
+    assert build_parser().parse_args(["t"]).full_stream_hash is True
+    assert (
+        build_parser().parse_args(["t", "--no-full-stream-hash"]).full_stream_hash
+        is False
+    )
+
+
 def test_stream_hash_missing_worker_hint():
-    """A missing-executor-Python failure under the AUTO streamed
+    """A missing-executor-Python failure under the default streamed
     reduce is rethrown as a SystemExit naming --no-full-stream-hash
     (ADVICE r8); opted-out configs and unrelated errors pass through
     untouched."""

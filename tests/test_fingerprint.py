@@ -510,7 +510,8 @@ def test_snapshot_affected_day_bounds(spark, sf_dir, tmp_path):
     cur = spark.read.parquet(table)
     write_fingerprint_snapshot(cur, schema, state)
     assert snapshot_catalog_unchanged(spark, table, state) is True
-    assert snapshot_affected_day_bounds(spark, table, state) is None or True
+    # an unchanged table has no delta to bound
+    assert snapshot_affected_day_bounds(spark, table, state) is None
 
     # replace one middle file with a value-mutated rewrite of its rows
     files = sorted(
@@ -583,14 +584,12 @@ def test_snapshot_update_string_partitions(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, updated.collect())) == want
 
 
-def test_stream_hash_auto_selects_by_size(spark, sf_dir):
-    """full_stream_hash=None (the default) auto-picks the memory-bounded
-    streamed reduce for every distributed-plan input (the 100x CLI probe
-    OOM'd the un-flagged JVM aggregate on a 129 MB/15M-row parquet AND
-    an 11 MB RLE'd ORC of the same rows — byte estimates are a weak row
-    proxy, so the safe-and-measured-faster path is the default); an
-    explicit ``False`` or a raised ``stream_hash_auto_bytes`` restores
-    the aggregate, byte-identically."""
+def test_stream_hash_switch_selects_reducer(spark, sf_dir):
+    """One switch picks the exact ordered reducer's final reduce: a
+    non-small input streams (``MapInPandas``) by default and not with
+    ``full_stream_hash=False``, byte-identically.  The 100x CLI probe
+    overran an 8 GiB heap with the JVM aggregate at 15M rows, so the
+    memory-bounded reduce is the default."""
     from pgverify_spark.config import VerifyConfig
     from pgverify_spark.operators.fingerprint import full_fingerprint
     from pgverify_spark.sources.parquet import ParquetTarget
@@ -603,23 +602,13 @@ def test_stream_hash_auto_selects_by_size(spark, sf_dir):
         fp = full_fingerprint(df, schema, cfg)
         return fp._jdf.queryExecution().executedPlan().toString()
 
-    # policy pin: the auto bar sits AT the small-input boundary, so every
-    # input big enough for the distributed plan takes the streamed reduce
-    assert (
-        VerifyConfig().stream_hash_auto_bytes == VerifyConfig().small_input_bytes
-    )
-    auto_default = VerifyConfig(small_input_bytes=0, stream_hash_auto_bytes=1)
-    raised_bar = VerifyConfig(small_input_bytes=0, stream_hash_auto_bytes=1 << 40)
-    forced_off = VerifyConfig(
-        small_input_bytes=0, stream_hash_auto_bytes=1, full_stream_hash=False
-    )
-    assert "MapInPandas" in plan(auto_default)
-    assert "MapInPandas" not in plan(raised_bar)
-    assert "MapInPandas" not in plan(forced_off)
-    # all three produce the identical digest
+    default = VerifyConfig(small_input_bytes=0)
+    jvm = VerifyConfig(small_input_bytes=0, full_stream_hash=False)
+    assert default.full_stream_hash is True
+    assert "MapInPandas" in plan(default)
+    assert "MapInPandas" not in plan(jvm)
     digests = {
-        full_fingerprint(df, schema, cfg).collect()[0]["fp"]
-        for cfg in (auto_default, raised_bar, forced_off)
+        full_fingerprint(df, schema, cfg).collect()[0]["fp"] for cfg in (default, jvm)
     }
     assert len(digests) == 1
 
@@ -637,7 +626,7 @@ def test_full_stream_hash_matches_aggregate(spark, sf_dir):
 
     # small_input_bytes=0 forces the distributed plan even at test SF,
     # so both final-reduce variants actually execute
-    base = VerifyConfig(small_input_bytes=0)
+    base = VerifyConfig(small_input_bytes=0, full_stream_hash=False)
     streamed = dataclasses.replace(base, full_stream_hash=True)
     tgt = ParquetTarget("t", sf_dir)
     for table in ("orders", "events", "nation"):
@@ -667,6 +656,25 @@ def test_full_stream_hash_matches_aggregate(spark, sf_dir):
         assert e_agg[f"fp_{m}"] == e_stream[f"fp_{m}"], (m, dict(e_agg.asDict()), dict(e_stream.asDict()))
 
 
+@pytest.mark.parametrize("stream", [True, False])
+def test_sparse_sampled_large_matches_oracle(spark, duck, sf_dir, stream):
+    """Sparse's sampled-large path (``small_input_bytes=0``: the sample
+    itself exceeds the small-input bound) takes the exact ordered
+    reducer and follows its switch: the streamed reduce by default, the
+    JVM partials with ``False``; both equal the oracle, including the
+    empty-input sentinel."""
+    cfg = dataclasses.replace(CFG, small_input_bytes=0, full_stream_hash=stream)
+    target = ParquetTarget("t", sf_dir)
+    df = target.read(spark, "lineitem")
+    schema = target.table_schema(spark, "lineitem")
+    fp = sparse_fingerprint(df, schema, cfg)
+    plan = fp._jdf.queryExecution().executedPlan().toString()
+    assert ("MapInPandas" in plan) is stream
+    assert fp.collect()[0].fp == _duck_fp(duck, "lineitem", "sparse", cfg)
+    empty = df.filter("l_orderkey < 0")
+    assert sparse_fingerprint(empty, schema, cfg).collect()[0].fp == "no rows"
+
+
 def test_partitioned_stream_hash_matches_aggregate(spark, sf_dir):
     """Per-partition streaming digests must equal the collect_list
     aggregate's, row for row (the 100x scale check OOM'd the aggregate
@@ -677,7 +685,7 @@ def test_partitioned_stream_hash_matches_aggregate(spark, sf_dir):
     from pgverify_spark.operators.fingerprint import partitioned_fingerprint
     from pgverify_spark.sources.parquet import ParquetTarget
 
-    base = VerifyConfig(small_input_bytes=0)
+    base = VerifyConfig(small_input_bytes=0, full_stream_hash=False)
     streamed = dataclasses.replace(base, full_stream_hash=True)
     tgt = ParquetTarget("t", sf_dir)
     df = tgt.read(spark, "events")

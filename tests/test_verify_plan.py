@@ -298,6 +298,38 @@ def test_plan_cache_shared_across_configs(spark, sf_dir):
     assert len({k[1] for k in shared_cache}) == 2
 
 
+def test_plan_cache_key_covers_every_field():
+    """Every VerifyConfig field shapes the plan_cache key except the
+    ones that only pick or label tables: a field added or removed
+    without a key update would let a reused plan_cache serve the plan
+    built for another config."""
+    import dataclasses
+
+    not_keyed = {
+        "include_tables", "exclude_tables", "include_schemas",
+        "exclude_schemas", "aliases",
+    }
+
+    def changed(v):
+        if isinstance(v, bool):
+            return not v
+        if isinstance(v, int):
+            return v + 1
+        if isinstance(v, str):
+            return v + "x"
+        if isinstance(v, tuple):
+            return v + ("x",)
+        if isinstance(v, dict):
+            return {**v, "x": "json"}
+        raise TypeError(f"no changed value for {v!r}")
+
+    base = VerifyConfig()
+    for f in dataclasses.fields(VerifyConfig):
+        other = dataclasses.replace(base, **{f.name: changed(getattr(base, f.name))})
+        same = other.plan_cache_key() == base.plan_cache_key()
+        assert same is (f.name in not_keyed), f.name
+
+
 def test_cache_identity_components(sf_dir, tmp_path):
     """cache_identity must separate targets that read differently."""
     from pgverify_spark.sources.files import FileTarget
