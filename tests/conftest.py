@@ -31,3 +31,23 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def few_state_partitions(spark):
+    """Run the test's streaming queries at four shuffle partitions.
+
+    A stateful streaming query fixes its shuffle-partition count at first
+    start and loads and commits one state store per partition in every
+    micro-batch.  At the session's 32, that per-batch cost, not the few
+    thousand replayed test rows, is what a many-batch replay spends its
+    time on: the two late-data replays in test_streaming.py run ~35
+    micro-batches each and took 2-3 minutes apiece on four cores.  The
+    operators, their plan shapes and their results do not depend on the
+    count.
+    """
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    yield
+    spark.conf.set(key, old)

@@ -19,6 +19,8 @@ from pgverify_spark.streaming.incremental import (
 
 CFG = VerifyConfig()
 
+pytestmark = pytest.mark.usefixtures("few_state_partitions")
+
 
 @pytest.fixture(scope="module")
 def chunked_events(spark, sf_dir, tmp_path_factory):
