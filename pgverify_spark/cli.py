@@ -531,7 +531,7 @@ def main(argv: list[str] | None = None) -> int:
 
         cells: dict[tuple, set] = {}
         errored: set = set()
-        for r in result.rows or result.results.collect():
+        for r in result.rows:
             if r[4] == ERROR_OUTPUT:
                 errored.add((r[1], r[2]))
             else:

@@ -122,29 +122,6 @@ class VerifyConfig:
         if self.sparse_mod <= 0:
             raise ValueError("sparse_mod must be positive")
 
-    def plan_cache_key(self) -> tuple:
-        """Hashable key over every field that shapes a per-table
-        fingerprint plan.  ``plans/verify.py`` folds this into its
-        cross-call ``plan_cache`` key so a cache dict reused across
-        ``verify()`` calls with different configs can never serve the
-        first config's plans (wrong fingerprints) to the second —
-        table/schema filters and aliases are deliberately absent (they
-        pick which cells exist / how they're labeled, not what any one
-        table's fingerprint computes)."""
-        return (
-            tuple(self.test_modes),
-            tuple(self.include_columns),
-            tuple(self.exclude_columns),
-            self.bookend_limit,
-            self.sparse_mod,
-            self.timestamp_precision,
-            self.hash_primary_keys,
-            self.fingerprint_buckets,
-            tuple(sorted(self.column_types.items())),
-            self.small_input_bytes,
-            self.full_stream_hash,
-        )
-
     def typed_cols(self, cols: list[tuple[str, str]]) -> list[tuple[str, str]]:
         """Apply declared ``column_types`` overrides to (name, ltype) pairs."""
         if not self.column_types:

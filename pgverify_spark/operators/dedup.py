@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pgverify_spark.functions.canonical import DIALECT_DUCKDB, DIALECT_SPARK
 from pgverify_spark.operators.util import barrier as _barrier
 from pgverify_spark.operators.util import checkpoint_counted as _checkpoint_counted
+from pgverify_spark.operators.util import checkpoint_observed as _checkpoint_observed
 from pgverify_spark.operators.util import release_cached_deps as _release_cached_deps
 from pgverify_spark.operators.util import tag_cached_deps as _tag_cached_deps
 from pgverify_spark.functions.text_exprs import (
@@ -478,7 +479,8 @@ def dup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     diameter; near-dup components are clique-like (a duplicated doc
     matches most of its copies directly), so this converges in 2-3
     rounds in practice, checked by an exact changed-label count each
-    round.  For adversarial long-chain graphs at 100 TB, switch to
+    round, observed by the round's checkpoint job.  For adversarial
+    long-chain graphs at 100 TB, switch to
     :func:`dup_clusters_star` (large-star/small-star contraction,
     O(log n) rounds, identical output and oracle); the per-round cost
     is the same, only the contraction rule differs.
@@ -560,27 +562,22 @@ def dup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
         # One join carries both outputs of the round: the new label AND
         # whether it moved (labels only ever decrease, so "changed" is
         # nbr_min < cluster_id) — no second old-vs-new join per round.
-        joined = (
+        # The moved count is observed by the round's checkpoint job, so
+        # the convergence check schedules no job of its own.
+        joined, observed = _checkpoint_observed(
             labels.join(nbr_min.hint("shuffle_hash"), "doc_id", "left")
             .selectExpr(
                 "doc_id",
                 "least(cluster_id, coalesce(nbr_min, cluster_id)) AS cluster_id",
                 "CAST(coalesce(nbr_min, cluster_id) < cluster_id AS INT) AS moved",
-            )
-            .localCheckpoint(eager=True)
+            ),
+            moved=F.sum("moved"),
         )
         labels = joined.select("doc_id", "cluster_id")
         # Round 1 always moves on a non-empty graph (either endpoint of
         # any edge with the larger initial label must take the smaller's),
-        # so its convergence check is a scheduled job that can never
-        # break the loop — skip it.  (A lazy checkpoint materialized by
-        # the convergence count was measured SLOWER here: the count then
-        # re-plans the full join tree instead of reading checkpointed
-        # blocks.)
-        if rnd == 0:
-            continue
-        changed = joined.selectExpr("sum(moved) AS m").first()[0] or 0
-        if changed == 0:
+        # so its convergence check could never break the loop — skip it.
+        if rnd > 0 and observed["moved"] == 0:
             break
         # superseded round RDDs are unreferenced here; the context
         # cleaner GCs their blocks (tiny: ids + labels only)

@@ -232,9 +232,13 @@ def _streamed_fused(ranged: DataFrame, modes: tuple[str, ...]) -> DataFrame:
     )
     # Seed row (p=-1): Spark elides the Python worker entirely on an
     # empty partition, which would otherwise swallow the empty-input
-    # sentinels; the seed sorts first and contributes zero bytes.
-    seed = ranged.sparkSession.createDataFrame(
-        [(-1, 0, "", 0, "0")], "p int, i long, s string, cnt long, hsum string"
+    # sentinels; the seed sorts first and contributes zero bytes.  It is
+    # a one-row range, not a createDataFrame of local rows: those become
+    # a fresh RDD on every call, so two equal digests (a table verified
+    # against itself) could never share this exchange through Spark's
+    # exchange reuse.
+    seed = ranged.sparkSession.range(0, 1, 1, 1).selectExpr(
+        "-1 AS p", "0L AS i", "'' AS s", "0L AS cnt", "'0' AS hsum"
     )
     fused = (
         chunks.unionByName(seed)

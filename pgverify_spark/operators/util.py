@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 def parallelize(df: DataFrame) -> DataFrame:
@@ -72,22 +72,31 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """Eager ``localCheckpoint`` of ``df`` plus its row count, with no
-    job of its own: the count is a ``DataFrame.observe`` metric computed
-    by the checkpoint's jobs.  A separate ``count()`` on the checkpoint
-    would schedule two more AQE jobs.
+def checkpoint_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` plus the named aggregates
+    ``aggs`` over its rows (a name -> value dict), with no job of their
+    own: they are ``DataFrame.observe`` metrics computed by the
+    checkpoint's jobs.  A separate action on the checkpoint would
+    schedule more jobs (two for a ``count()`` under AQE).
 
     The observed node sits directly under the checkpoint, in the
     checkpoint job's result stage.  Accumulator updates of a result
     stage merge exactly once per partition, so a retried task cannot
     count its rows twice."""
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     obs = Observation()
-    cp = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    return cp, int(obs.get["n"])
+    observed = df.observe(obs, *(c.alias(name) for name, c in aggs.items()))
+    cp = observed.localCheckpoint(eager=True)
+    return cp, obs.get
+
+
+def checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager ``localCheckpoint`` of ``df`` plus its observed row count."""
+    from pyspark.sql import functions as F
+
+    cp, metrics = checkpoint_observed(df, n=F.count(F.lit(1)))
+    return cp, int(metrics["n"])
 
 
 def tag_cached_deps(result: DataFrame, *deps: DataFrame) -> DataFrame:

@@ -21,7 +21,9 @@ and one aggregate (``fingerprint.fused_fingerprints``): on a small table
 all four default modes, on a large one full, rowcount and additive, while
 bookend keeps its top-K plan and sparse its filter-first plan.  Each
 fused group is one union branch, so its final reduce runs once for all
-of its cells.
+of its cells.  Like the reference, which builds its fingerprint SQL on
+every run, each ``verify()`` call builds its plans afresh and keeps
+nothing between calls.
 """
 
 from __future__ import annotations
@@ -56,7 +58,7 @@ class VerifyResult:
     #: directly instead of re-collecting ``results`` (one scalar per
     #: cell by construction; re-collecting a local relation schedules a
     #: real job for nothing)
-    rows: list = None
+    rows: list
 
     @property
     def ok(self) -> bool:
@@ -65,8 +67,6 @@ class VerifyResult:
     def report(self) -> DataFrame:
         """Pivoted report without re-collecting the local results
         relation (``WriteAsTable``, results.go:101-166)."""
-        if self.rows is None:
-            return report_table(self.results)
         return _report_from_rows(self.results.sparkSession, self.rows)
 
 
@@ -120,22 +120,12 @@ def _target_results(
     target: ParquetTarget,
     config: VerifyConfig,
     name: str | None = None,
-    plan_cache: dict | None = None,
 ) -> list[Branch]:
     """Per-target union branches (runTestsOnTarget, verify.go:90-106),
     each carrying its cells' identities so a runtime failure can be
     pinned to them (the reference seeds every cell with "(err)" up front
     for the same reason, verify.go:108-136).  ``name`` is the reporting
-    name (the configured alias when present, verify.go:46-48).
-
-    ``plan_cache`` (shared across the targets of one ``verify()`` call)
-    memoizes the *untagged* fingerprint groups by the target's own
-    ``cache_identity(table)`` (plus the plan-shaping config): two targets
-    reading the same table the same way produce byte-identical sub-plans,
-    and building the canonical-hash expression tree is the dominant
-    driver-side cost of a small verify run.  Execution-side this is the
-    same dedup Spark's ReusedExchange would do; caching just skips the
-    redundant plan *construction*."""
+    name (the configured alias when present, verify.go:46-48)."""
     name = target.name if name is None else name
     if not getattr(target, "use_pushdown", False):
         _check_schema_protocol(target)
@@ -166,39 +156,11 @@ def _target_results(
             continue
 
         try:
-            # Memoization is gated on the target declaring its own cache
-            # identity (ParquetTarget/FileTarget).  Building the key from
-            # generic attributes here is wrong twice over: JDBC targets
-            # have a different primary_key signature (calling it raised
-            # inside this try, silently degrading every JDBC cell to
-            # "(err)"), and a path-only key collides across formats or
-            # reader options, which would compare a plan against itself.
-            identity = (
-                target.cache_identity(table)
-                if hasattr(target, "cache_identity")
-                else None
-            )
-            # Key by the FULL plan-shaping config, not just test_modes:
-            # verify(plan_cache=...) lets a caller reuse one dict across
-            # calls, and two configs differing in e.g. hash_primary_keys
-            # or timestamp_precision produce different fingerprints for
-            # the same table identity.
-            cache_key = (
-                None
-                if identity is None
-                else (identity, config.plan_cache_key())
-            )
-            groups = None
-            if plan_cache is not None and cache_key is not None:
-                groups = plan_cache.get(cache_key)
-            if groups is None:
-                # one read per (target, table): the schema is introspected
-                # from the same DataFrame the fingerprints scan
-                df = target.read(spark, table)
-                schema = target.table_schema(spark, table, df=df)
-                groups = _fingerprint_groups(df, schema, config)
-                if plan_cache is not None and cache_key is not None:
-                    plan_cache[cache_key] = groups
+            # one read per (target, table): the schema is introspected
+            # from the same DataFrame the fingerprints scan
+            df = target.read(spark, table)
+            schema = target.table_schema(spark, table, df=df)
+            groups = _fingerprint_groups(df, schema, config)
         except Exception:
             # read / schema inference / plan build already failed (missing
             # PK, corrupt footer, unsupported type): the reference skips
@@ -226,7 +188,6 @@ def verify(
     spark: SparkSession,
     targets: list[ParquetTarget],
     config: VerifyConfig | None = None,
-    plan_cache: dict | None = None,
 ) -> VerifyResult:
     """Run every (target, table, mode) fingerprint and check consistency.
 
@@ -236,16 +197,7 @@ def verify(
     verify raises ``TypeError`` up front when it does not).
     Pushdown targets (``use_pushdown``) answer
     ``pushdown_fingerprint(spark, table, mode, config)`` instead.
-
-    ``plan_cache``: optionally pass a dict that OUTLIVES this call to
-    reuse fingerprint sub-plans across repeated verify() runs of the
-    same targets (a long-running service / scheduled re-verification).
-    Safe because a cached entry is a *plan*, not data — re-execution
-    rescans the files — keyed on the target's full cache_identity
-    (path, format, options, schema DDL, pk) plus the mode tuple.  The
-    one staleness hazard is a file whose SCHEMA changes in place
-    between calls; pass a fresh dict (or None, the default) when that
-    can happen."""
+    Each call lists and reads the files as they are when it runs."""
     ensure_required_confs(spark)
     config = config or VerifyConfig()
     config.validate()
@@ -264,14 +216,9 @@ def verify(
     else:
         names = [t.name for t in targets]
     branches: list[Branch] = []
-    # Shared across targets (and, when the caller passed one, across
-    # verify() calls): races are benign (two threads may build the
-    # same entry; last write wins with an equivalent plan).
-    if plan_cache is None:
-        plan_cache = {}
     with ThreadPoolExecutor(max_workers=min(8, max(1, len(targets)))) as pool:
         for sub in pool.map(
-            lambda tn: _target_results(spark, tn[0], config, tn[1], plan_cache),
+            lambda tn: _target_results(spark, tn[0], config, tn[1]),
             zip(targets, names),
         ):
             branches.extend(sub)

@@ -858,34 +858,17 @@ _REPORT_TABLES = ("nation", "region", "supplier")
 _REPORT_MODES = ("full", "rowcount")
 
 
-#: Cross-call fingerprint plan cache for the verify report entries,
-#: keyed per Spark applicationId — NOT id(spark): CPython can reuse a
-#: stopped session's id for a new one, which would resurrect cached
-#: DataFrames bound to the dead JVM context (ADVICE r7).  applicationId
-#: is unique per SparkContext lifetime; entries are a handful of tiny
-#: logical plans.  Safe across calls: a cached entry is a plan, not
-#: data — see verify()'s docstring.
-_VERIFY_PLAN_CACHES: dict[str, dict] = {}
-
-
 def _verify_report_entry_factory(
     name: str, tables: tuple[str, ...], modes: tuple[str, ...] = _REPORT_MODES
 ) -> dict[str, tuple[Callable, str]]:
     """A two-target verify report over ``tables`` (results.go:101-166).
-    The driver-side constants (canonical expression-tree build) are paid
-    once per session via _VERIFY_PLAN_CACHES; the collected rows pivot
-    without a re-collect job (VerifyResult.report)."""
+    The collected rows pivot without a re-collect job
+    (VerifyResult.report)."""
     cfg = VerifyConfig(test_modes=modes, include_tables=tables)
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         targets = [ParquetTarget("a", sf_dir), ParquetTarget("b", sf_dir)]
-        app_id = spark.sparkContext.applicationId
-        if app_id not in _VERIFY_PLAN_CACHES:
-            # plans cached for any other (stopped) session are dead
-            # weight — evict them so the dict never grows across sessions
-            _VERIFY_PLAN_CACHES.clear()
-        cache = _VERIFY_PLAN_CACHES.setdefault(app_id, {})
-        return verify(spark, targets, cfg, plan_cache=cache).report()
+        return verify(spark, targets, cfg).report()
 
     selects = []
     for tname in ("a", "b"):
@@ -966,11 +949,7 @@ def _jdbc_live_report_entry() -> dict[str, tuple[Callable, str]]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_required_confs(spark)
         targets = [ParquetTarget("parquet", sf_dir), derby_target(spark, sf_dir)]
-        app_id = spark.sparkContext.applicationId
-        if app_id not in _VERIFY_PLAN_CACHES:
-            _VERIFY_PLAN_CACHES.clear()
-        cache = _VERIFY_PLAN_CACHES.setdefault(app_id, {})
-        return verify(spark, targets, cfg, plan_cache=cache).report()
+        return verify(spark, targets, cfg).report()
 
     selects = []
     for tname in ("parquet", "derby"):
@@ -5031,8 +5010,6 @@ def _multiformat_report_entry() -> dict[str, tuple[Callable, str]]:
             ParquetTarget("parquet", sf_dir),
             FileTarget("csv", tmp, format="csv", schemas=schemas),
         ]
-        # no cross-call plan cache here: the csv side is written to a
-        # fresh tempdir each call, so cached plans could never hit
         return verify(spark, targets, cfg).report()
 
     selects = []

@@ -73,19 +73,6 @@ class FileTarget(ParquetTarget):
             tables = [t for t in tables if config.valid_table(self.schema, t)]
         return tables
 
-    def cache_identity(self, table: str) -> tuple:
-        """Extends the parquet identity with everything that changes a
-        file read: format, reader options, and the explicit schema DDL.
-        A csv and a parquet target sharing one directory — or two csv
-        targets differing only in options — must never collide in the
-        verify plan cache (a collision compares a plan against itself
-        and reports a false 'consistent')."""
-        return super().cache_identity(table) + (
-            self.format,
-            tuple(sorted({**_FORMAT_DEFAULTS[self.format], **self.options}.items())),
-            self.schemas.get(table),
-        )
-
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         ensure_required_confs(spark)
         reader = spark.read.format(self.format)

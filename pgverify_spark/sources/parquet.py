@@ -72,23 +72,6 @@ class ParquetTarget:
             return TESTDATA_TABLES[table].pk
         return None
 
-    def cache_identity(self, table: str) -> tuple:
-        """Physical identity of this target's per-table fingerprint plan,
-        used by the verify orchestrator to memoize sub-plan construction
-        across targets.  Two targets whose identities are equal MUST
-        produce byte-identical fingerprint plans for ``table``; anything
-        that changes the plan (path, format, reader options, explicit
-        schema, PK) must be part of the identity.  Targets without this
-        method (JDBC) are never cached — their plans embed connection
-        state the key can't capture."""
-        return (
-            type(self).__name__,
-            self.path,
-            self.schema,
-            table,
-            self.primary_key(table),
-        )
-
     def table_schema(
         self, spark: SparkSession, table: str, df: DataFrame | None = None
     ) -> TableSchema:

@@ -1035,6 +1035,36 @@ def test_dup_clusters_chain_transitivity(spark):
     assert {labels[i] for i in (20, 21)} == {20}
 
 
+def test_dup_clusters_schedules_at_most_30_jobs(spark):
+    """One warm ``dup_clusters`` call on a 6-node chain plus a 2-node
+    component, run under a job group, schedules at most 30 jobs: the
+    pairs' checkpoint, the initial labels' checkpoint, each of the six
+    rounds' checkpoint and the result stage.  Each round's moved count
+    is observed by its checkpoint job, so the convergence check
+    schedules none."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (100, 101)],
+        "doc_a bigint, doc_b bigint",
+    )
+
+    def run():
+        return sorted(map(tuple, dedup.dup_clusters(pairs).collect()))
+
+    want = run()  # warm-up: nothing below depends on a cold JVM
+    group = "dup-clusters-job-count"
+    sc.setJobGroup(group, "dup_clusters job-count guard")
+    try:
+        got = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == want == [(i, 1) for i in range(1, 7)] + [(100, 100), (101, 100)]
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 30, sorted(jobs)
+
+
 def test_dedup_filters(docs, duck, spark):
     """End of the dedup pipeline: the surviving corpus.  Exact filter
     keeps one canonical row per distinct text; near filter keeps exactly

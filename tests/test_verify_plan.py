@@ -189,12 +189,12 @@ def test_verify_pushdown_targets(spark):
 
 
 class _StubJDBCStyleTarget:
-    """Duck-typed non-pushdown target with the JDBC method surface —
+    """Duck-typed non-pushdown target with the JDBC method surface:
     ``primary_key(spark, table)`` takes the session, and there is no
-    ``path`` or ``cache_identity``.  Regression for the plan-cache key
-    construction calling the parquet-style ``primary_key(table)`` on any
-    target that had the attribute: the TypeError landed inside the
-    try/except and silently degraded every cell to '(err)'."""
+    ``path``.  verify must call only the target protocol (``list_tables``,
+    ``read``, ``table_schema``); a call to the parquet-style
+    ``primary_key(table)`` would raise inside the per-table error
+    handling and turn every cell into '(err)'."""
 
     schema = "public"
 
@@ -215,7 +215,7 @@ class _StubJDBCStyleTarget:
         return self._inner.table_schema(spark, table, df=df)
 
 
-def test_verify_jdbc_style_target_not_degraded_by_cache(spark, sf_dir):
+def test_verify_jdbc_style_target(spark, sf_dir):
     cfg = VerifyConfig(test_modes=("full", "rowcount"), include_tables=("region",))
     res = verify(
         spark, [_StubJDBCStyleTarget("db", sf_dir), ParquetTarget("pq", sf_dir)], cfg
@@ -242,11 +242,10 @@ def test_verify_rejects_table_schema_without_df(spark, sf_dir):
         verify(spark, [_StubTwoArgSchemaTarget("db", sf_dir)], cfg)
 
 
-def test_verify_plan_cache_distinguishes_formats(spark, sf_dir, tmp_path):
-    """A parquet target and a csv target sharing ONE directory must not
-    collide in the plan cache — a path-keyed collision reused the first
-    target's plan for the second and verify compared a plan against
-    itself, reporting a false 'consistent' (ADVICE r6)."""
+def test_verify_parquet_and_csv_in_one_dir_differ(spark, sf_dir, tmp_path):
+    """A parquet target and a csv target sharing ONE directory each read
+    their own files: when the csv copy lacks a row, verify reports the
+    difference instead of a false 'consistent'."""
     from pgverify_spark.sources.files import FileTarget
 
     shared = tmp_path / "shared"
@@ -271,89 +270,32 @@ def test_verify_plan_cache_distinguishes_formats(spark, sf_dir, tmp_path):
     assert any("outputs differ" in e for e in res.errors)
 
 
-def test_plan_cache_shared_across_configs(spark, sf_dir):
-    """One plan_cache dict reused across verify() calls with DIFFERENT
-    configs must not serve the first config's fingerprint plans to the
-    second (ADVICE r7: the key was (identity, test_modes) only)."""
-    import dataclasses
+def test_verify_report_reads_files_added_between_calls(spark, sf_dir, tmp_path):
+    """A part file appended to a table between two calls of the same
+    report entry shows in the second call's additive count.  The
+    registry reads through a write-once memo, so the test drops it
+    with ``ParquetTarget.invalidate(path)``, the refresh that code which
+    rewrites registry data must call; nothing else may keep the first
+    call's file listing."""
+    import shutil
 
-    shared_cache: dict = {}
-    base = VerifyConfig(test_modes=("full",), include_tables=("orders",))
-    hashed = dataclasses.replace(base, hash_primary_keys=True)
+    from pgverify_spark import registry
 
-    def run(cfg):
-        res = verify(
-            spark, [ParquetTarget("a", sf_dir), ParquetTarget("b", sf_dir)],
-            cfg, plan_cache=shared_cache,
-        )
-        assert res.ok, res.errors
-        return {r.mode: r.output for r in res.results.collect() if r.target == "a"}
+    orders = tmp_path / "orders.parquet"
+    orders.mkdir()
+    shutil.copyfile(f"{sf_dir}/orders.parquet", orders / "part-00000.parquet")
+    run = registry.spark_queries()["verify_report_cardinality"]
 
-    fp_base = run(base)["full"]
-    fp_hashed = run(hashed)["full"]
-    # hashed-pk canonicalization changes the sort key -> different digest;
-    # a stale cache hit would have replayed fp_base here
-    assert fp_base != fp_hashed
-    # and the key is config-wide, not per-field special-cased
-    assert len({k[1] for k in shared_cache}) == 2
+    def count():
+        rows = run(spark, str(tmp_path)).collect()
+        assert {r.target for r in rows} == {"a", "b"}
+        (n,) = {r.additive.split(":")[0] for r in rows}
+        return int(n)
 
-
-def test_plan_cache_key_covers_every_field():
-    """Every VerifyConfig field shapes the plan_cache key except the
-    ones that only pick or label tables: a field added or removed
-    without a key update would let a reused plan_cache serve the plan
-    built for another config."""
-    import dataclasses
-
-    not_keyed = {
-        "include_tables", "exclude_tables", "include_schemas",
-        "exclude_schemas", "aliases",
-    }
-
-    def changed(v):
-        if isinstance(v, bool):
-            return not v
-        if isinstance(v, int):
-            return v + 1
-        if isinstance(v, str):
-            return v + "x"
-        if isinstance(v, tuple):
-            return v + ("x",)
-        if isinstance(v, dict):
-            return {**v, "x": "json"}
-        raise TypeError(f"no changed value for {v!r}")
-
-    base = VerifyConfig()
-    for f in dataclasses.fields(VerifyConfig):
-        other = dataclasses.replace(base, **{f.name: changed(getattr(base, f.name))})
-        same = other.plan_cache_key() == base.plan_cache_key()
-        assert same is (f.name in not_keyed), f.name
-
-
-def test_cache_identity_components(sf_dir, tmp_path):
-    """cache_identity must separate targets that read differently."""
-    from pgverify_spark.sources.files import FileTarget
-
-    p = ParquetTarget("a", sf_dir)
-    ddl = "r_regionkey INT, r_name STRING, r_comment STRING"
-    base = FileTarget("b", sf_dir, format="csv", schemas={"region": ddl})
-    ids = {
-        p.cache_identity("region"),
-        base.cache_identity("region"),
-        FileTarget("c", sf_dir, format="json", schemas={"region": ddl}).cache_identity(
-            "region"
-        ),
-        FileTarget(
-            "d", sf_dir, format="csv", schemas={"region": ddl}, options={"sep": "|"}
-        ).cache_identity("region"),
-        FileTarget("e", sf_dir, format="csv").cache_identity("region"),
-        ParquetTarget("f", str(tmp_path)).cache_identity("region"),
-    }
-    assert len(ids) == 6
-    # same physical read -> same identity (the memoization contract)
-    assert p.cache_identity("region") == ParquetTarget("z", sf_dir).cache_identity(
-        "region"
-    )
+    before = count()
+    shutil.copyfile(f"{sf_dir}/orders.parquet", orders / "part-00001.parquet")
+    registry.ParquetTarget.invalidate(str(tmp_path))
+    assert count() == 2 * before
 
 
 def test_row_diff_matches_oracle(spark, duck, sf_dir):
