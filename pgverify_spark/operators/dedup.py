@@ -609,17 +609,23 @@ def dup_clusters_star(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
     propagation round.  Convergence = the canonical edge multiset
     stops changing, detected by a constant-size checksum aggregate
     (count + two independent weighted sums — a collision would need to
-    preserve all three simultaneously); per-round
+    preserve all three simultaneously) that each edge set's checkpoint
+    job observes, so the check schedules no job of its own; per-round
     ``localCheckpoint(eager=True)`` keeps plans constant-cost exactly
     as in :func:`dup_clusters`.
     """
+    checksum = {
+        "n": F.count(F.lit(1)),
+        "s1": F.sum(F.expr("u * 1000003 + v")),
+        "s2": F.sum(F.expr("u + v * 998244353")),
+    }
     # same pre-symmetrize checkpoint as dup_clusters: run the caller's
     # pair pipeline once, not once per union branch
     src = pairs.localCheckpoint(eager=True)
     sym = src.selectExpr("doc_a AS u", "doc_b AS v").unionByName(
         src.selectExpr("doc_b AS u", "doc_a AS v")
     )
-    edges = sym.distinct().localCheckpoint(eager=True)
+    edges, prev = _checkpoint_observed(sym.distinct(), **checksum)
 
     def half_step(e: DataFrame, large: bool) -> DataFrame:
         # the paper's neighborhoods are UNDIRECTED: symmetrize the
@@ -647,21 +653,12 @@ def dup_clusters_star(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
             out = out.unionByName(joined.selectExpr("u", "m AS v"))
         return _tag_cached_deps(out.filter("u <> v").distinct(), adj)
 
-    def checksum(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.expr("u * 1000003 + v")).alias("s1"),
-            F.sum(F.expr("u + v * 998244353")).alias("s2"),
-        ).first()
-        return (row["n"], row["s1"], row["s2"])
-
-    prev = checksum(edges)
     for _ in range(max_rounds):
         for large in (True, False):
             out = half_step(edges, large=large)
-            edges = out.localCheckpoint(eager=True)  # materializes adj...
+            # the checkpoint materializes adj...
+            edges, cur = _checkpoint_observed(out, **checksum)
             _release_cached_deps(out)  # ...which can be dropped at once
-        cur = checksum(edges)
         if cur == prev:
             break
         prev = cur

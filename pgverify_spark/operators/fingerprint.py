@@ -825,6 +825,25 @@ def _read_file_catalog(spark, path: str) -> list[list] | None:
     return _json.loads(raw)["files"]
 
 
+def _catalog_delta(
+    stored: list[list], current: list[list]
+) -> tuple[list[list], list[str]]:
+    """The file-catalog delta since a snapshot: the ``stored`` rows whose
+    file changed (path, size or mtime) or vanished, and the ``current``
+    paths that were added or changed."""
+    by_path = {row[0]: row for row in stored}
+    now = {row[0]: row for row in current}
+    changed_stored = [
+        row for p, row in by_path.items()
+        if p not in now or tuple(now[p][:3]) != tuple(row[:3])
+    ]
+    added = [
+        p for p, row in now.items()
+        if p not in by_path or tuple(by_path[p][:3]) != tuple(row)
+    ]
+    return changed_stored, added
+
+
 def snapshot_affected_day_bounds(
     spark, table_dir: str, path: str
 ) -> tuple[int, int] | None:
@@ -847,21 +866,9 @@ def snapshot_affected_day_bounds(
     stored = _read_file_catalog(spark, path)
     if stored is None or any(len(row) < 5 for row in stored):
         return None
-    by_path = {row[0]: row for row in stored}
-    current = {
-        row[0]: row
-        for row in _target_file_catalog(
-            spark, _list_table_files(spark, table_dir)
-        )
-    }
-    changed_stored = [
-        row for p, row in by_path.items()
-        if p not in current or tuple(current[p][:3]) != tuple(row[:3])
-    ]
-    new_files = [
-        p for p, row in current.items()
-        if p not in by_path or tuple(by_path[p][:3]) != tuple(row)
-    ]
+    changed_stored, new_files = _catalog_delta(
+        stored, _target_file_catalog(spark, _list_table_files(spark, table_dir))
+    )
     lo = hi = None
 
     def widen(a, b):
@@ -873,9 +880,8 @@ def snapshot_affected_day_bounds(
         if row[3] is None or row[4] is None:
             return None  # a changed file with no stored bound
         widen(int(row[3]), int(row[4]))
-    existing_new = [p for p in new_files if p in current]
-    if existing_new:
-        sub = spark.read.parquet(*existing_new)
+    if new_files:
+        sub = spark.read.parquet(*new_files)
         if "ts" not in sub.columns:
             return None
         bounds = _file_day_bounds(sub)
@@ -885,7 +891,7 @@ def snapshot_affected_day_bounds(
         # TypeError crash on int(None)).  Non-empty files with no bound
         # and genuinely empty files both land here; empty-file fallback
         # is conservative but costs only the scan we already avoided.
-        if len(bounds) < len(existing_new) and sub.count() > 0:
+        if len(bounds) < len(new_files) and sub.count() > 0:
             return None
         for a, b in bounds.values():
             widen(a, b)
@@ -929,24 +935,14 @@ def _catalog_delta_within_parts(
             d in part_days for d in range(lo, hi + 1)
         )
 
-    by_path = {row[0]: row for row in prev_catalog}
-    current = {
-        row[0]: row
-        for row in _target_file_catalog(spark, sorted(df.inputFiles()))
-    }
-    changed_stored = [
-        row for p, row in by_path.items()
-        if p not in current or tuple(current[p][:3]) != tuple(row[:3])
-    ]
+    changed_stored, added = _catalog_delta(
+        prev_catalog, _target_file_catalog(spark, sorted(df.inputFiles()))
+    )
     for row in changed_stored:
         if row[3] is None or row[4] is None:
             return False
         if not covered(int(row[3]), int(row[4])):
             return False
-    added = [
-        p for p, row in current.items()
-        if p not in by_path or tuple(by_path[p][:3]) != tuple(row)
-    ]
     if added:
         if "ts" not in df.columns:
             return False

@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -51,3 +52,30 @@ def few_state_partitions(spark):
     spark.conf.set(key, "4")
     yield
     spark.conf.set(key, old)
+
+
+@pytest.fixture
+def grouped_jobs(spark):
+    """``grouped_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns ``(result, job_ids)``: its result and the sorted ids of the
+    Spark jobs the group ran.  The thread's job-group properties are
+    restored afterwards."""
+    sc = spark.sparkContext
+    keys = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+
+    def run(fn):
+        saved = {k: sc.getLocalProperty(k) for k in keys}
+        group = f"grouped-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -245,23 +245,14 @@ def test_timetravel_read_previous_manifest_is_pristine(spark, sf_dir, tmp_path):
     assert prev == before
 
 
-def test_recorded_schema_pins_read_and_matches_inference(spark, tmp_path):
+def test_recorded_schema_pins_read_and_matches_inference(
+    spark, tmp_path, grouped_jobs
+):
     """A commit carrying read_back_schema() must (a) read back with the
     EXACT schema and rows footer inference would produce — partitioned,
     flat, and mixed-generation splices alike — and (b) plan the read
     with ZERO Spark jobs (the footer-inference job is the cost the
     recorded schema exists to remove)."""
-    sc = spark.sparkContext
-
-    def jobs(fn):
-        g = "t:pinned"
-        sc.setJobGroup(g, g)
-        before = len(sc.statusTracker().getJobIdsForGroup(g))
-        out = fn()
-        n = len(sc.statusTracker().getJobIdsForGroup(g)) - before
-        sc.setJobGroup(None, None)
-        return out, n
-
     # day-partitioned state across TWO generations (the splice shape)
     base = str(tmp_path / "state")
     df = spark.range(30).selectExpr(
@@ -275,8 +266,8 @@ def test_recorded_schema_pins_read_and_matches_inference(spark, tmp_path):
     manifest.commit(spark, base, entries)  # 1: no schema -> infers
     inferred = manifest.read_state(spark, base, 1)
     manifest.commit(spark, base, entries, schema_json=rec)  # 2: pinned
-    pinned, n_jobs = jobs(lambda: manifest.read_state(spark, base, 2))
-    assert n_jobs == 0, f"pinned read planned {n_jobs} jobs"
+    pinned, jobs = grouped_jobs(lambda: manifest.read_state(spark, base, 2))
+    assert len(jobs) == 0, f"pinned read planned {len(jobs)} jobs"
     assert pinned.schema == inferred.schema
     assert sorted(map(tuple, pinned.collect())) == sorted(
         map(tuple, inferred.collect())
@@ -290,8 +281,8 @@ def test_recorded_schema_pins_read_and_matches_inference(spark, tmp_path):
     manifest.commit(spark, fbase, [gen])
     finferred = manifest.read_state(spark, fbase, 1)
     manifest.commit(spark, fbase, [gen], schema_json=manifest.read_back_schema(fdf))
-    fpinned, fn_jobs = jobs(lambda: manifest.read_state(spark, fbase, 2))
-    assert fn_jobs == 0
+    fpinned, fjobs = grouped_jobs(lambda: manifest.read_state(spark, fbase, 2))
+    assert len(fjobs) == 0
     assert fpinned.schema == finferred.schema
     assert sorted(map(tuple, fpinned.collect())) == sorted(
         map(tuple, finferred.collect())

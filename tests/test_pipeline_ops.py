@@ -1035,15 +1035,13 @@ def test_dup_clusters_chain_transitivity(spark):
     assert {labels[i] for i in (20, 21)} == {20}
 
 
-def test_dup_clusters_schedules_at_most_30_jobs(spark):
+def test_dup_clusters_schedules_at_most_30_jobs(spark, grouped_jobs):
     """One warm ``dup_clusters`` call on a 6-node chain plus a 2-node
     component, run under a job group, schedules at most 30 jobs: the
     pairs' checkpoint, the initial labels' checkpoint, each of the six
     rounds' checkpoint and the result stage.  Each round's moved count
     is observed by its checkpoint job, so the convergence check
     schedules none."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (100, 101)],
         "doc_a bigint, doc_b bigint",
@@ -1053,16 +1051,30 @@ def test_dup_clusters_schedules_at_most_30_jobs(spark):
         return sorted(map(tuple, dedup.dup_clusters(pairs).collect()))
 
     want = run()  # warm-up: nothing below depends on a cold JVM
-    group = "dup-clusters-job-count"
-    sc.setJobGroup(group, "dup_clusters job-count guard")
-    try:
-        got = run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    got, jobs = grouped_jobs(run)
     assert got == want == [(i, 1) for i in range(1, 7)] + [(100, 100), (101, 100)]
-    jobs = tracker.getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 30, sorted(jobs)
+    assert 0 < len(jobs) <= 30, jobs
+
+
+def test_dup_clusters_star_schedules_at_most_103_jobs(spark, grouped_jobs):
+    """One warm ``dup_clusters_star`` call on a 6-node chain plus a
+    2-node component, run under a job group, schedules at most 103
+    jobs (113 with a checksum action after each round).  The
+    convergence checksum (the edge set's count and two weighted
+    sums) is observed by the checkpoint jobs of the initial edge set
+    and of each half-step, so it schedules none."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (100, 101)],
+        "doc_a bigint, doc_b bigint",
+    )
+
+    def run():
+        return sorted(map(tuple, dedup.dup_clusters_star(pairs).collect()))
+
+    want = run()  # warm-up: nothing below depends on a cold JVM
+    got, jobs = grouped_jobs(run)
+    assert got == want == [(i, 1) for i in range(1, 7)] + [(100, 100), (101, 100)]
+    assert 0 < len(jobs) <= 103, jobs
 
 
 def test_dedup_filters(docs, duck, spark):
@@ -3804,15 +3816,12 @@ def test_pagerank_rounds_read_edge_cache_in_place(docs, iterations):
             assert len(joins) == 1, walk
 
 
-def test_pagerank_schedules_at_most_13_jobs(spark, docs):
+def test_pagerank_schedules_at_most_13_jobs(spark, docs, grouped_jobs):
     """One warm ``pagerank(doc_term_edges(docs), 4)`` build plus collect,
     run under a job group, schedules at most 13 jobs: the pairs'
     checkpoint (its row count observed, no count job), the edge cache's
     exchange, one exchange per round and the result stage."""
     from pgverify_spark.operators import graph
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     def run():
         out = graph.pagerank(graph.doc_term_edges(docs), 4)
@@ -3821,16 +3830,9 @@ def test_pagerank_schedules_at_most_13_jobs(spark, docs):
         return rows
 
     want = run()  # warm-up: nothing below depends on a cold JVM
-    group = "pagerank-job-count"
-    sc.setJobGroup(group, "pagerank job-count guard")
-    try:
-        got = run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    got, jobs = grouped_jobs(run)
     assert sorted(got) == sorted(want)
-    jobs = tracker.getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 13, sorted(jobs)
+    assert 0 < len(jobs) <= 13, jobs
 
 
 def test_pagerank_weighted_matches_oracle(docs, duck):

@@ -113,7 +113,7 @@ def test_verify_corrupt_table_errs_without_aborting(spark, sf_dir, tmp_path):
     assert cells == {**want, **{("nation", m): "(err)" for m in cfg.test_modes}}
 
 
-def test_verify_small_tables_schedule_one_job_per_branch(spark, sf_dir):
+def test_verify_small_tables_schedule_one_job_per_branch(spark, sf_dir, grouped_jobs):
     """Two small tables on two agreeing targets with the four default
     modes: each (target, table) is one fused branch (one two-stage
     aggregate), so the union's execution, run under the caller's job
@@ -121,24 +121,16 @@ def test_verify_small_tables_schedule_one_job_per_branch(spark, sf_dir):
     runs on verify's per-target threads, outside the group; there each
     table is read once, and a parquet read's schema inference is at
     most one job."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    tracker = spark.sparkContext.statusTracker()
     targets = [ParquetTarget("a", sf_dir), ParquetTarget("b", sf_dir)]
     cfg = VerifyConfig(include_tables=("nation", "orders"))
     cells = len(targets) * 2
     verify(spark, targets, cfg)  # warm-up: nothing below depends on a cold JVM
     ungrouped = set(tracker.getJobIdsForGroup(None))
-    group = "verify-job-count"
-    sc.setJobGroup(group, "verify job-count guard")
-    try:
-        res = verify(spark, targets, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    res, executed = grouped_jobs(lambda: verify(spark, targets, cfg))
     assert res.ok, res.errors
     assert len(res.rows) == cells * 4
-    executed = tracker.getJobIdsForGroup(group)
-    assert 0 < len(executed) <= cells + 1, sorted(executed)
+    assert 0 < len(executed) <= cells + 1, executed
     built = set(tracker.getJobIdsForGroup(None)) - ungrouped
     assert len(built) <= cells, sorted(built)
 
