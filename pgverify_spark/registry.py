@@ -7,11 +7,14 @@ the driver's correctness gate compares at sf0.01 (see __spark_entry__.py).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import tempfile
+from collections.abc import Callable, Iterable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from pgverify_spark.config import VerifyConfig
 from pgverify_spark.functions import timecol
@@ -1460,6 +1463,59 @@ _SCHEMA_DRIFT_ORACLE = (
 )
 
 
+def _chunks_by(
+    df: DataFrame, key_sql: str, values: Iterable[int] | None = None
+) -> list[DataFrame]:
+    """``df`` split into one filter per value of the integer SQL expression
+    ``key_sql``, in ascending numeric order: ``values`` when given, else the
+    distinct values present (one collect)."""
+    if values is None:
+        values = sorted(r[0] for r in df.select(F.expr(key_sql)).distinct().collect())
+    return [df.filter(f"({key_sql}) = {v}") for v in values]
+
+
+def _replay(
+    spark: SparkSession,
+    chunks: list[DataFrame],
+    start: Callable[[DataFrame, str], DataStreamWriter],
+    tmp: str,
+) -> None:
+    """Replay ``chunks`` through a streaming query: one file and one
+    non-empty micro-batch per chunk, in list order.
+
+    The query ``start(sdf, tmp)`` reads a ``maxFilesPerTrigger=1`` parquet
+    file stream over the empty directory ``{tmp}/in`` and checkpoints to
+    ``{tmp}/ck``.  Each chunk is then appended as one single-partition
+    write, and the query processes it before the next is written.  Spark's
+    file commit renames the file out of the ignored ``_temporary``
+    directory, so the polling query never lists a partial file.
+
+    Chunk ``i`` is thus the ``i``-th non-empty micro-batch.  The stateful
+    fingerprint's per-bucket ``updates`` counter therefore equals the
+    number of chunks holding the bucket, ``count(DISTINCT chunk)`` in its
+    SQL twin; a hashed layout (``repartition(n, chunk)``) can fold two
+    chunks into one file and leave another empty, and breaks that.  An
+    operator whose state is exact only when micro-batches respect event
+    time is exact when the chunks are passed in time order, e.g. by week
+    (``_chunks_by(df, timecol.bucket_sql(df, timecol.US_PER_WEEK))``).
+    """
+    ensure_required_confs(spark)
+    src = f"{tmp}/in"
+    os.makedirs(src, exist_ok=True)
+    sdf = (
+        spark.readStream.schema(chunks[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = start(sdf, tmp).option("checkpointLocation", f"{tmp}/ck").start()
+    try:
+        for chunk in chunks:
+            chunk.coalesce(1).write.mode("append").parquet(src)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 _INGEST_COMPACT_ORACLE = (
     "SELECT event_id, user_id, event_type, value FROM events"
 )
@@ -1471,8 +1527,6 @@ def _run_streaming_ingest_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     batch (all of them — the stopped stream committed everything) is
     compacted into one generation directory; the logical table must
     equal the source through the whole dance."""
-    import tempfile
-
     from pgverify_spark.streaming.ingest import (
         _batch_dirs,
         read_ingested,
@@ -1480,31 +1534,15 @@ def _run_streaming_ingest_compact(spark: SparkSession, sf_dir: str) -> DataFrame
         streaming_ingest,
     )
 
-    ensure_required_confs(spark)
     ev = ParquetTarget("t", sf_dir).read(spark, "events")
     tmp = tempfile.mkdtemp(prefix="pgvs_singest_")
-    for c in range(4):
-        (
-            ev.filter(F.col("event_id") % 4 == c)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(f"{tmp}/src")
-        )
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/src")
-    )
     store = f"{tmp}/store"
-    q = (
-        streaming_ingest(sdf, store)
-        .option("checkpointLocation", f"{tmp}/ck")
-        .start()
+    _replay(
+        spark,
+        _chunks_by(ev, "event_id % 4", range(4)),
+        lambda sdf, _: streaming_ingest(sdf, store),
+        tmp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     seal_and_compact(spark, store, max(_batch_dirs(store)) + 1)
     return read_ingested(spark, store).select(
         "event_id", "user_id", "event_type", "value"
@@ -3893,18 +3931,19 @@ def _pipeline_entries() -> dict[str, tuple[Callable, str]]:
 
 
 def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
-    """Custom stateful streaming operator (applyInPandasWithState) driven
-    to completion over a deterministic 4-chunk file stream of ``events``.
-    The operator is not SQL-expressible, but the registered drive's final
-    latest-state-per-bucket output is (see
-    stateful_bucket_fingerprint_oracle_sql) — so it carries a full hash
-    oracle; equality with the batch ``additive`` fingerprint is also
+    """Streaming operators, each driven to completion by :func:`_replay`
+    over a deterministic chunking of a testdata table.  The custom
+    stateful operator (applyInPandasWithState) is not SQL-expressible,
+    but the registered drive's final latest-state-per-bucket output is
+    (see stateful_bucket_fingerprint_oracle_sql) — so it carries a full
+    hash oracle; equality with the batch ``additive`` fingerprint is also
     asserted in tests/test_streaming.py.
     """
 
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
+    def week_chunks(df: DataFrame) -> list[DataFrame]:
+        return _chunks_by(df, timecol.bucket_sql(df, timecol.US_PER_WEEK))
 
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pgverify_spark.streaming.incremental import (
             streaming_stateful_bucket_fingerprint,
         )
@@ -3912,37 +3951,16 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         src = ParquetTarget("t", sf_dir)
         df = src.read(spark, "events")
         tschema = src.table_schema(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_stream_")
-        # One file per chunk — bijectively (sequential appends of
-        # single-partition writes), NOT repartition(4, "chunk"), whose
-        # hash can fold two chunk values into one file and leave another
-        # empty.  Bijective chunk->file makes the emitted per-bucket
-        # `updates` counter equal count(DISTINCT chunk) under
-        # maxFilesPerTrigger=1, which is what the SQL twin computes.
-        for c in range(4):
-            (
-                df.filter(F.col("event_id") % 4 == c)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(f"{tmp}/src")
-            )
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(df, "event_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_stateful_bucket_fingerprint(sdf, tschema, _CFG, buckets=16)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_bucket_state")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_stream_"),
         )
-        emitted = streaming_stateful_bucket_fingerprint(sdf, tschema, _CFG, buckets=16)
-        q = (
-            emitted.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_bucket_state")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # latest state per bucket (deterministic given the chunking)
         latest: dict[int, tuple] = {}
         for r in spark.table("registry_bucket_state").collect():
@@ -3953,41 +3971,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         )
 
     def run_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.incremental import streaming_dedup
 
-        ensure_required_confs(spark)
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
         dup = docs.filter("doc_id % 3 = 0").selectExpr(
             "doc_id + 1000000 AS doc_id", "text", "lang", "source", "n_chars"
         )
         both = docs.unionByName(dup)
-        tmp = tempfile.mkdtemp(prefix="pgvs_sdedup_")
-        (
-            both.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(both, "doc_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_dedup(sdf).writeStream.outputMode("append")
+                .format("memory").queryName("registry_sdedup")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sdedup_"),
         )
-        sdf = (
-            spark.readStream.schema(both.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_dedup(sdf)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("registry_sdedup")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # which duplicate survived is arrival-order-dependent; the kept
         # hash set is deterministic — report that
         return spark.table("registry_sdedup").select("content_md5").distinct()
@@ -4004,51 +4003,18 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         "SELECT text FROM documents WHERE doc_id % 3 = 0) u"
     )
     def run_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.incremental import streaming_session_rollup
 
-        ensure_required_confs(spark)
         df = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_sess_")
-        # weekly time-ordered replay: the watermark contract is "rare,
-        # bounded disorder" — feeding week k+1 only after week k keeps
-        # every event ahead of the watermark (week boundaries dominate
-        # the 1s delay), so no input is ever late-dropped and the result
-        # is deterministic.  Arbitrary-order chunks (e.g. by event_id)
-        # make late-dropping a micro-batch-timing race.
-        import glob
-        import os as _os
-        import shutil
-
-        (
-            df.withColumn("wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int"))
-            .write.mode("overwrite")
-            .partitionBy("wk")
-            .parquet(f"{tmp}/weeks")
+        _replay(
+            spark,
+            week_chunks(df),
+            lambda sdf, _: (
+                streaming_session_rollup(sdf).writeStream.outputMode("complete")
+                .format("memory").queryName("registry_sessions")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sess_"),
         )
-        stream_in = f"{tmp}/in"
-        _os.makedirs(stream_in)
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_in)
-        )
-        q = (
-            streaming_session_rollup(sdf)
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("registry_sessions")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            for i, wd in enumerate(sorted(glob.glob(f"{tmp}/weeks/wk=*"))):
-                for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                    shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-                q.processAllAvailable()
-        finally:
-            q.stop()
         return spark.table("registry_sessions")
 
     sessions_oracle = (
@@ -4057,51 +4023,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         + ") s"
     )
     def run_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import glob
-        import shutil
-        import tempfile
-
         from pgverify_spark.streaming.funnel import (
             finalize_streaming_funnel,
             streaming_funnel_state,
         )
 
-        ensure_required_confs(spark)
         df = ParquetTarget("t", sf_dir).read(spark, "events")
-        gap = 86_400_000_000
-        tmp = tempfile.mkdtemp(prefix="pgvs_sfunnel_")
-        # weekly time-ordered chunks: the left-fold state is exact when
-        # micro-batches respect event-time order (streaming/funnel.py)
-        (
-            df.withColumn("wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int"))
-            .write.mode("overwrite")
-            .partitionBy("wk")
-            .parquet(f"{tmp}/weeks")
+        _replay(
+            spark,
+            week_chunks(df),
+            lambda sdf, _: (
+                streaming_funnel_state(sdf, max_gap_us=86_400_000_000)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_sfunnel")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sfunnel_"),
         )
-        stream_in = f"{tmp}/in"
-        import os as _os
-
-        _os.makedirs(stream_in)
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_in)
-        )
-        q = (
-            streaming_funnel_state(sdf, max_gap_us=gap)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_sfunnel")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            for i, wd in enumerate(sorted(glob.glob(f"{tmp}/weeks/wk=*"))):
-                for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                    shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-                q.processAllAvailable()
-        finally:
-            q.stop()
         rows = finalize_streaming_funnel(spark.table("registry_sfunnel"))
         return spark.createDataFrame(
             rows, "step int, step_name string, n_users bigint, conversion double"
@@ -4110,40 +4047,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     funnel_oracle = funnel_mod.funnel_oracle_sql("events", max_gap_us=86_400_000_000)
 
     def run_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_kmv,
             streaming_kmv_state,
         )
 
-        ensure_required_confs(spark)
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
-        tmp = tempfile.mkdtemp(prefix="pgvs_skmv_")
-        (
-            docs.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(docs, "doc_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_kmv_state(sdf, "text", "lang", 64)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_skmv")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_skmv_"),
         )
-        sdf = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_kmv_state(sdf, "text", "lang", 64)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_skmv")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         rows = finalize_streaming_kmv(spark.table("registry_skmv"))
         return spark.createDataFrame(
             rows, "grp string, n_sketch bigint, kth_min bigint, est_distinct double"
@@ -4154,40 +4073,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     kmv_oracle = sketch.kmv_sketch_oracle_sql("documents", "text", "lang", 64)
 
     def run_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_hll,
             streaming_hll_state,
         )
 
-        ensure_required_confs(spark)
         events = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_shll_")
-        (
-            events.withColumn("chunk", (F.col("event_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(events, "event_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_hll_state(sdf, "user_id", "event_type")
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_shll")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_shll_"),
         )
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_hll_state(sdf, "user_id", "event_type")
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_shll")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_hll(spark.table("registry_shll"))
 
     # element-wise-max registers are order-insensitive too, and the
@@ -4196,45 +4097,26 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     hll_oracle = sketch.hll_distinct_oracle_sql("events", "user_id", "event_type")
 
     def run_swau(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
+        from pgverify_spark.operators.sketch import hll_summary
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_hll_registers,
             streaming_hll_state,
         )
 
-        ensure_required_confs(spark)
         events = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_swau_")
-        (
-            events.withColumn("chunk", (F.col("event_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
-        )
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
         # group key = the DAY bucket: streamed per-day registers; the
         # trailing-WAU merge then runs UNCHANGED on the streamed state
         day = timecol.bucket_sql(events, timecol.US_PER_DAY)
-        q = (
-            streaming_hll_state(sdf, "user_id", day)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_swau")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
+        _replay(
+            spark,
+            _chunks_by(events, "event_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_hll_state(sdf, "user_id", day)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_swau")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_swau_"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        from pgverify_spark.operators.sketch import hll_summary
-
         regs = finalize_streaming_hll_registers(
             spark.table("registry_swau")
         ).selectExpr("CAST(grp AS BIGINT) AS grp", "bucket", "r")
@@ -4245,40 +4127,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     swau_oracle = rollup.hll_trailing_distinct_oracle_sql("events")
 
     def run_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_countmin,
             streaming_countmin,
         )
 
-        ensure_required_confs(spark)
         events = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_scm_")
-        (
-            events.withColumn("chunk", (F.col("event_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(events, "event_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_countmin(sdf, "user_id", 4, 64)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_scm")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_scm_"),
         )
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_countmin(sdf, "user_id", 4, 64)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_scm")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_countmin(spark.table("registry_scm"))
 
     # purely-additive cells => final streaming state equals the batch
@@ -4290,40 +4154,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     row_suite = [c for c in _ORDERS_SUITE if c.distinct_col is None]
 
     def run_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.constraints import (
             finalize_streaming_constraints,
             streaming_constraint_counts,
         )
 
-        ensure_required_confs(spark)
         orders = ParquetTarget("t", sf_dir).read(spark, "orders")
-        tmp = tempfile.mkdtemp(prefix="pgvs_scon_")
-        (
-            orders.withColumn("chunk", (F.col("o_orderkey") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(orders, "o_orderkey % 4", range(4)),
+            lambda sdf, _: (
+                streaming_constraint_counts(sdf, row_suite)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_scon")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_scon_"),
         )
-        sdf = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_constraint_counts(sdf, row_suite)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_scon")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_constraints(spark.table("registry_scon"), row_suite)
 
     constraints_stream_oracle = constraints.constraint_report_oracle_sql(
@@ -4336,35 +4182,17 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         so it streams in append mode with NO state at any volume (unique
         checks need per-value state and are excluded exactly as the
         streaming constraint monitor excludes them)."""
-        import tempfile
-
-        ensure_required_confs(spark)
         orders = ParquetTarget("t", sf_dir).read(spark, "orders")
-        tmp = tempfile.mkdtemp(prefix="pgvs_squar_")
-        (
-            orders.withColumn("chunk", (F.col("o_orderkey") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(orders, "o_orderkey % 4", range(4)),
+            lambda sdf, _: (
+                constraints.quarantine_rows(sdf, row_suite, ["o_orderkey"])
+                .writeStream.outputMode("append")
+                .format("memory").queryName("registry_squar")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_squar_"),
         )
-        sdf = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            constraints.quarantine_rows(sdf, row_suite, ["o_orderkey"])
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("registry_squar")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return spark.table("registry_squar")
 
     squarantine_oracle = constraints.quarantine_rows_oracle_sql(
@@ -4372,42 +4200,24 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     )
 
     def run_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.incremental import (
             bloom_words,
             streaming_bloom_decontaminate,
         )
 
-        ensure_required_confs(spark)
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
         words = bloom_words(docs)  # static side: built once from eval split
         train = docs.filter("doc_id % 10 <> 0")
-        tmp = tempfile.mkdtemp(prefix="pgvs_sbloom_")
-        (
-            train.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(train, "doc_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_bloom_decontaminate(sdf, words)
+                .writeStream.outputMode("update")
+                .format("memory").queryName("registry_sbloom")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sbloom_"),
         )
-        sdf = (
-            spark.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_bloom_decontaminate(sdf, words)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_sbloom")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # each doc arrives whole in one micro-batch => exactly one update
         # row per doc; the memory table IS the final per-doc report
         return spark.table("registry_sbloom")
@@ -4417,37 +4227,19 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     bloom_oracle = contamination.bloom_decontaminate_oracle_sql("documents")
 
     def run_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.incremental import streaming_windowed_counts
 
-        ensure_required_confs(spark)
         ev = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_swin_")
-        (
-            ev.withColumn("chunk", (F.col("event_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(ev, "event_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_windowed_counts(sdf, window="6 hours", watermark="1 hour")
+                .writeStream.outputMode("complete")
+                .format("memory").queryName("registry_swin")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_swin_"),
         )
-        sdf = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_windowed_counts(sdf, window="6 hours", watermark="1 hour")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("registry_swin")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # epoch-micros window bounds: engine-neutral for the value hash
         return spark.table("registry_swin").selectExpr(
             "unix_micros(win_start) AS win_start_us",
@@ -4458,39 +4250,20 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         )
 
     def run_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.operators.lm import bigram_model
         from pgverify_spark.streaming.incremental import streaming_lm_scores
 
-        ensure_required_confs(spark)
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
         model = bigram_model(docs)  # static side: trained offline once
-        tmp = tempfile.mkdtemp(prefix="pgvs_slm_")
-        (
-            docs.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(docs, "doc_id % 4", range(4)),
+            lambda sdf, _: (
+                streaming_lm_scores(sdf, model).writeStream.outputMode("update")
+                .format("memory").queryName("registry_slm")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_slm_"),
         )
-        sdf = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_lm_scores(sdf, model)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_slm")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # docs arrive whole => one update row per doc = the final report
         return spark.table("registry_slm")
 
@@ -4499,38 +4272,22 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     lm_stream_oracle = lm.bigram_lm_scores_oracle_sql("documents")
 
     def run_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.incremental import streaming_lsh_ingest_probe
 
-        ensure_required_confs(spark)
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
         corpus = docs.filter("doc_id % 10 <> 7")
         new = docs.filter("doc_id % 10 = 7")
         tmp = tempfile.mkdtemp(prefix="pgvs_singest_")
         # standing-corpus artifact: written once, probed per batch
         dedup.write_lsh_index(corpus, "reg_stream_lsh", f"{tmp}/idx", n_buckets=16)
-        (
-            new.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(new, "doc_id % 4", range(4)),
+            lambda sdf, tmp: streaming_lsh_ingest_probe(
+                sdf, "reg_stream_lsh", f"{tmp}/out", 0.3
+            ),
+            tmp,
         )
-        sdf = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_lsh_ingest_probe(sdf, "reg_stream_lsh", f"{tmp}/out", 0.3)
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return spark.read.parquet(f"{tmp}/out")
 
     # per-doc probes are independent, so the per-batch union equals the
@@ -4542,37 +4299,23 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     )
 
     def run_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.incremental import streaming_ivf_ingest_probe
 
-        ensure_required_confs(spark)
         embs = ParquetTarget("t", sf_dir).read(spark, "embeddings")
         corpus = embs.filter("vec_id % 10 <> 7")
         new = embs.filter("vec_id % 10 = 7")
         tmp = tempfile.mkdtemp(prefix="pgvs_sivf_")
         similarity.write_ivf_index(corpus, "reg_stream_ivf", f"{tmp}/idx")
-        (
-            new.withColumn("chunk", (F.col("vec_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
-        )
-        sdf = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_ivf_ingest_probe(sdf, "reg_stream_ivf", f"{tmp}/out", 0.4, 2)
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
         try:
-            q.processAllAvailable()
+            _replay(
+                spark,
+                _chunks_by(new, "vec_id % 4", range(4)),
+                lambda sdf, tmp: streaming_ivf_ingest_probe(
+                    sdf, "reg_stream_ivf", f"{tmp}/out", 0.4, 2
+                ),
+                tmp,
+            )
         finally:
-            q.stop()
             spark.sql("DROP TABLE IF EXISTS reg_stream_ivf_cells")
         return spark.read.parquet(f"{tmp}/out")
 
@@ -4584,97 +4327,37 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     )
 
     def run_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import glob
-        import os as _os
-        import shutil
-        import tempfile
-
         from pgverify_spark.streaming.incremental import streaming_debounce
 
-        ensure_required_confs(spark)
         df = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_sdeb_")
-        # weekly time-ordered chunks: the per-key last-seen fold is
-        # exact when micro-batches respect event-time order
-        (
-            df.withColumn(
-                "wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int")
-            )
-            .write.mode("overwrite")
-            .partitionBy("wk")
-            .parquet(f"{tmp}/weeks")
+        _replay(
+            spark,
+            week_chunks(df),
+            lambda sdf, _: (
+                streaming_debounce(sdf, 4 * 3600 * 1_000_000)
+                .writeStream.outputMode("append")
+                .format("memory").queryName("registry_sdebounce")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sdeb_"),
         )
-        stream_in = f"{tmp}/in"
-        _os.makedirs(stream_in)
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_in)
-        )
-        q = (
-            streaming_debounce(sdf, 4 * 3600 * 1_000_000)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("registry_sdebounce")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            for i, wd in enumerate(sorted(glob.glob(f"{tmp}/weeks/wk=*"))):
-                for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                    shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-                q.processAllAvailable()
-        finally:
-            q.stop()
         return spark.table("registry_sdebounce")
 
     # append-mode kept events == the batch debounce over the same data
     debounce_stream_oracle = rollup.debounce_oracle_sql("events", 4 * 3600 * 1_000_000)
 
     def run_sattrib(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import glob
-        import os as _os
-        import shutil
-        import tempfile
-
         from pgverify_spark.streaming.funnel import streaming_attribution
 
-        ensure_required_confs(spark)
         df = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_sattr_")
-        # weekly time-ordered replay: last-touch state is exact when
-        # micro-batches respect event-time order (same contract as
-        # streaming_debounce above)
-        (
-            df.withColumn(
-                "wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int")
-            )
-            .write.mode("overwrite")
-            .partitionBy("wk")
-            .parquet(f"{tmp}/weeks")
+        _replay(
+            spark,
+            week_chunks(df),
+            lambda sdf, _: (
+                streaming_attribution(sdf).writeStream.outputMode("append")
+                .format("memory").queryName("registry_sattrib")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sattr_"),
         )
-        stream_in = f"{tmp}/in"
-        _os.makedirs(stream_in)
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_in)
-        )
-        q = (
-            streaming_attribution(sdf)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("registry_sattrib")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            for i, wd in enumerate(sorted(glob.glob(f"{tmp}/weeks/wk=*"))):
-                for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                    shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-                q.processAllAvailable()
-        finally:
-            q.stop()
         return spark.table("registry_sattrib")
 
     # append-mode credit rows == the batch last-touch attribution (the
@@ -4682,52 +4365,21 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     sattrib_oracle = funnel_mod.attribute_conversions_oracle_sql("events")
 
     def run_sscd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import glob
-        import os as _os
-        import shutil
-        import tempfile
-
         from pgverify_spark.streaming.scd2 import (
             finalize_streaming_scd2,
             streaming_scd2,
         )
 
-        ensure_required_confs(spark)
         df = ParquetTarget("t", sf_dir).read(spark, "events")
-        tmp = tempfile.mkdtemp(prefix="pgvs_sscd2_")
-        # weekly time-ordered replay: interval chaining is exact when
-        # micro-batches respect event-time order (the same contract as
-        # streaming_attribution above)
-        (
-            df.withColumn(
-                "wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int")
-            )
-            .write.mode("overwrite")
-            .partitionBy("wk")
-            .parquet(f"{tmp}/weeks")
+        _replay(
+            spark,
+            week_chunks(df),
+            lambda sdf, _: (
+                streaming_scd2(sdf).writeStream.outputMode("update")
+                .format("memory").queryName("registry_sscd2")
+            ),
+            tempfile.mkdtemp(prefix="pgvs_sscd2_"),
         )
-        stream_in = f"{tmp}/in"
-        _os.makedirs(stream_in)
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_in)
-        )
-        q = (
-            streaming_scd2(sdf)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("registry_sscd2")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            for i, wd in enumerate(sorted(glob.glob(f"{tmp}/weeks/wk=*"))):
-                for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                    shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-                q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_scd2(spark.table("registry_sscd2"))
 
     # closed intervals + latest open snapshot == the batch SCD2 build,
@@ -4735,39 +4387,21 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     sscd2_oracle = rollup.scd2_intervals_oracle_sql("events")
 
     def run_squant(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_quantiles,
             streaming_sample_quantiles,
         )
 
-        ensure_required_confs(spark)
         orders = ParquetTarget("t", sf_dir).read(spark, "orders")
         tmp = tempfile.mkdtemp(prefix="pgvs_squant_")
-        (
-            orders.withColumn("chunk", (F.col("o_orderkey") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
-        )
-        sdf = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_sample_quantiles(
+        _replay(
+            spark,
+            _chunks_by(orders, "o_orderkey % 4", range(4)),
+            lambda sdf, tmp: streaming_sample_quantiles(
                 sdf, "o_totalprice", "o_orderkey", f"{tmp}/sample"
-            )
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
+            ),
+            tmp,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_quantiles(spark, f"{tmp}/sample")
 
     # sample membership is a pure row predicate => union of per-batch
@@ -4777,74 +4411,38 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     )
 
     def run_strailq(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_trailing_quantiles,
             streaming_day_sample,
         )
 
-        ensure_required_confs(spark)
         events = ParquetTarget("t", sf_dir).read(spark, "events")
         tmp = tempfile.mkdtemp(prefix="pgvs_strailq_")
-        (
-            events.withColumn("chunk", (F.col("event_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        _replay(
+            spark,
+            _chunks_by(events, "event_id % 4", range(4)),
+            lambda sdf, tmp: streaming_day_sample(sdf, f"{tmp}/sample"),
+            tmp,
         )
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_day_sample(sdf, f"{tmp}/sample")
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_trailing_quantiles(spark, f"{tmp}/sample")
 
     def run_strailq_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             compact_sample_store,
             finalize_streaming_trailing_quantiles,
             streaming_day_sample,
         )
 
-        ensure_required_confs(spark)
         events = ParquetTarget("t", sf_dir).read(spark, "events")
         tmp = tempfile.mkdtemp(prefix="pgvs_strailqc_")
-        (
-            events.withColumn("chunk", (F.col("event_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
-        )
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-        q = (
-            streaming_day_sample(
+        _replay(
+            spark,
+            _chunks_by(events, "event_id % 4", range(4)),
+            lambda sdf, tmp: streaming_day_sample(
                 sdf, f"{tmp}/sample", rate_ppm=300_000, cap_per_day=50
-            )
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
+            ),
+            tmp,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # capped compaction of the sealed batches runs IN the certified
         # path: it may only drop rows provably outside every future
         # bottom-k, so the finalize after it must still hash-match the
@@ -4877,7 +4475,7 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     # The OPERATOR is not SQL-expressible (per-micro-batch state), but
     # the registered query's FINAL latest-state-per-bucket output is:
     # modular hsum folding is associative and `updates` equals
-    # count(DISTINCT chunk) under the bijective chunk->file write — so
+    # count(DISTINCT chunk) under _replay's one-file-per-chunk feed — so
     # the last rows-only streaming entry now hash-certifies.
     from pgverify_spark.streaming.incremental import (
         stateful_bucket_fingerprint_oracle_sql,
@@ -4889,42 +4487,24 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
     )
 
     def run_skmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from pgverify_spark.streaming.sketch import (
             finalize_streaming_kmv_overlap,
             streaming_kmv_overlap,
         )
 
-        ensure_required_confs(spark)
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
         tmp = tempfile.mkdtemp(prefix="pgvs_skmvov_")
-        (
-            docs.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-            .repartition(4, "chunk")
-            .drop("chunk")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/src")
+        # _shingle_overlap_sides carries the shingle persist's deps tag so
+        # the foreachBatch writer's release_cached_deps actually releases
+        # it per batch
+        _replay(
+            spark,
+            _chunks_by(docs, "doc_id % 4", range(4)),
+            lambda sdf, tmp: streaming_kmv_overlap(
+                sdf, f"{tmp}/store", 256, _shingle_overlap_sides
+            ),
+            tmp,
         )
-        sdf = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/src")
-        )
-
-        # carries the shingle persist's deps tag so the foreachBatch
-        # writer's release_cached_deps actually releases it per batch
-        to_sides = _shingle_overlap_sides
-
-        q = (
-            streaming_kmv_overlap(sdf, f"{tmp}/store", 256, to_sides)
-            .option("checkpointLocation", f"{tmp}/ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return finalize_streaming_kmv_overlap(spark, f"{tmp}/store", 256)
 
     # union-of-survivors re-aggregated == the batch operator over the

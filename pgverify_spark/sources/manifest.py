@@ -19,9 +19,9 @@ shared commit protocol instead of deferring to "deploy Delta":
   create is NOT exclusive (no O_EXCL) — there the protocol's safety
   rests entirely on the single-writer discipline below, and a deployment
   with genuinely concurrent writers needs a store with conditional
-  puts or an external lock.  Readers take the highest N present, so
-  there is never an instant with no committed manifest and never a
-  reader that sees half a commit.
+  puts or an external lock.  Readers take the highest N whose body is
+  complete (see :func:`_latest`), so there is never an instant with no
+  committed manifest and never a reader that sees half a commit.
 - GC runs inside :func:`commit` with a ONE-COMMIT GRACE WINDOW: only
   entries (and manifest files) last referenced two or more commits ago
   are deleted, so a reader that resolved manifest N keeps every file it
@@ -40,9 +40,11 @@ from __future__ import annotations
 
 import json
 import posixpath
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST_PREFIX = "_manifest-"
 
@@ -101,18 +103,27 @@ def _read_manifest(spark: SparkSession, base: str, n: int) -> dict:
     return json.loads(raw)
 
 
-def _read_entries(spark: SparkSession, base: str, n: int) -> list[str]:
-    return list(_read_manifest(spark, base, n)["entries"])
+def _latest(spark: SparkSession, base: str) -> dict | None:
+    """The committed state's manifest, or None for a legacy layout.
+    :func:`commit` creates ``_manifest-N`` before writing its body, so a
+    reader can list N while it is empty or a JSON prefix, which never
+    parses; N is not committed yet, and N-1 survives until commit N+1."""
+    nums = manifest_numbers(spark, base)
+    if not nums:
+        return None
+    try:
+        return _read_manifest(spark, base, nums[-1])
+    except ValueError:
+        if len(nums) == 1:
+            raise
+    return _read_manifest(spark, base, nums[-2])
 
 
 def current_entries(spark: SparkSession, base: str) -> list[str] | None:
     """The committed state's base-relative entries, or None when ``base``
     has no manifest (legacy layout — read ``base`` directly)."""
-    base = _norm(base)
-    nums = manifest_numbers(spark, base)
-    if not nums:
-        return None
-    return _read_entries(spark, base, nums[-1])
+    m = _latest(spark, _norm(base))
+    return None if m is None else list(m["entries"])
 
 
 def new_generation() -> str:
@@ -141,7 +152,6 @@ def read_back_schema(df: DataFrame, part_cols: tuple[str, ...] = ()) -> str | No
         LongType,
         ShortType,
         StructField,
-        StructType,
     )
 
     fields = []
@@ -186,19 +196,15 @@ def read_state(
     """
     base = _norm(base)
     if manifest_no is None:
-        nums = manifest_numbers(spark, base)
-        if not nums:
+        m = _latest(spark, base)
+        if m is None:
             return spark.read.parquet(base)
-        manifest_no = nums[-1]
-    m = _read_manifest(spark, base, manifest_no)
+    else:
+        m = _read_manifest(spark, base, manifest_no)
     entries = list(m["entries"])
-    pinned = None
-    if entries and m.get("schema"):
-        from pyspark.sql.types import StructType
-
-        # schema recorded at commit (:func:`read_back_schema`): plan
-        # every relation from metadata — no footer-inference jobs
-        pinned = StructType.fromJson(json.loads(m["schema"]))
+    # schema recorded at commit (:func:`read_back_schema`): plan every
+    # relation from metadata — no footer-inference jobs
+    pinned = StructType.fromJson(json.loads(m["schema"])) if m.get("schema") else None
 
     def reader():
         return spark.read.schema(pinned) if pinned is not None else spark.read
@@ -220,12 +226,8 @@ def read_state(
             reader().option("basePath", base_path).parquet(*paths)
         )
     if not parts:  # a committed EMPTY state (everything deleted)
-        if m.get("schema"):
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
-            )
+        if pinned is not None:
+            return spark.createDataFrame([], pinned)
         raise ValueError(
             f"manifest at {base!r} commits an empty state with no "
             "recorded schema (pre-r12 manifest)"
@@ -317,24 +319,19 @@ def commit(
     # and the older manifest files themselves.
     keep: set[str] = set(entries)
     if nums:
-        keep |= set(_read_entries(spark, base, nums[-1]))
+        keep |= set(_read_manifest(spark, base, nums[-1])["entries"])
     for old in nums[:-1]:
-        for e in _read_entries(spark, base, old):
+        for e in _read_manifest(spark, base, old)["entries"]:
             if e not in keep:
                 fs.delete(P(f"{base}/{e}"), True)
         fs.delete(P(f"{base}/{MANIFEST_PREFIX}{old:020d}"), False)
     return n
 
 
-_GEN_RE = None
+_GEN_RE = re.compile(r"^gen-[0-9a-f]{12}$")
 
 
 def is_generation_name(name: str) -> bool:
-    global _GEN_RE
-    if _GEN_RE is None:
-        import re
-
-        _GEN_RE = re.compile(r"^gen-[0-9a-f]{12}$")
     return _GEN_RE.match(name) is not None
 
 

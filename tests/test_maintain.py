@@ -91,6 +91,7 @@ def test_streaming_ingest_replay_idempotent_and_compacts(spark, sf_dir, tmp_path
     """streaming/ingest.py: batch partitions are replay-idempotent
     (re-running a batch's sink overwrites, never duplicates); sealed
     batches compact into one generation; unsealed batches survive."""
+    from pgverify_spark.registry import _chunks_by, _replay
     from pgverify_spark.streaming.ingest import (
         _batch_dirs,
         read_ingested,
@@ -99,24 +100,13 @@ def test_streaming_ingest_replay_idempotent_and_compacts(spark, sf_dir, tmp_path
     )
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = str(tmp_path / "src")
-    for c in range(4):
-        ev.filter(f"event_id % 4 = {c}").coalesce(1).write.mode("append").parquet(src)
     store = str(tmp_path / "store")
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    _replay(
+        spark,
+        _chunks_by(ev, "event_id % 4", range(4)),
+        lambda sdf, _: streaming_ingest(sdf, store),
+        str(tmp_path),
     )
-    q = (
-        streaming_ingest(sdf, store)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     n = ev.count()
     assert sorted(_batch_dirs(store)) == [0, 1, 2, 3]
     assert read_ingested(spark, store).count() == n

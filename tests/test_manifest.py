@@ -176,6 +176,28 @@ def test_concurrent_reader_never_sees_partial_splice(spark, sf_dir, tmp_path):
     assert len(got) == len(want)
 
 
+def test_reader_skips_manifest_listed_before_its_body(spark, tmp_path):
+    """commit() creates ``_manifest-N`` before it writes the body, so a
+    racing reader can list N while it is still empty.  Such an N is not
+    committed yet: readers resolve N-1 instead of failing on the empty
+    body (the concurrent-splice test's ``reader error: Expecting
+    value``)."""
+    base = str(tmp_path / "state")
+    for k in range(2):
+        g = manifest.new_generation()
+        spark.range(3 + k).write.parquet(f"{base}/{g}")
+        manifest.commit(spark, base, [g])
+    committed = manifest.current_entries(spark, base)
+    _, fs, P = manifest._jfs(spark, base)
+    stream = fs.create(P(f"{base}/{manifest.MANIFEST_PREFIX}{3:020d}"), False)
+    try:
+        assert manifest.manifest_numbers(spark, base) == [1, 2, 3]
+        assert manifest.current_entries(spark, base) == committed
+        assert manifest.read_state(spark, base).count() == 4
+    finally:
+        stream.close()
+
+
 def test_empty_state_commit_reads_back_empty(spark, tmp_path):
     """A legitimately committed EMPTY state (maintenance dropped every
     entry) reads back as an empty DataFrame with the outgoing schema

@@ -1,13 +1,13 @@
 """Structured Streaming: incremental fingerprint equals batch fingerprint
 after ingesting the same rows in chunks; windowed counts match batch."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from pgverify_spark.config import VerifyConfig
+from pgverify_spark.functions.timecol import US_PER_WEEK, bucket_sql
 from pgverify_spark.operators.fingerprint import additive_fingerprint
+from pgverify_spark.registry import _chunks_by, _replay
 from pgverify_spark.sources.parquet import ParquetTarget
 from pgverify_spark.streaming.incremental import (
     finalize_additive_fingerprint,
@@ -22,98 +22,85 @@ CFG = VerifyConfig()
 pytestmark = pytest.mark.usefixtures("few_state_partitions")
 
 
-@pytest.fixture(scope="module")
-def chunked_events(spark, sf_dir, tmp_path_factory):
-    """events table split into 4 chunk files to drive a file stream."""
+def test_replay_feeds_one_batch_per_chunk_in_order(spark, tmp_path):
+    """The replay layout every streaming replay uses, pinned: each chunk
+    is its own non-empty micro-batch, fed in list order, and _chunks_by
+    orders its keys as numbers (key 9 before 10, which a string sort
+    feeds first).  A hashed ``repartition(4, "chunk")`` write folds three
+    of these four chunks into one file and runs 2 non-empty batches."""
+    df = spark.createDataFrame(
+        [(k, i) for k in (9, 10, 11, 12) for i in range(k - 8)], "k int, i int"
+    )
+    seen = []
+    _replay(
+        spark,
+        _chunks_by(df, "k"),
+        lambda sdf, _: sdf.writeStream.foreachBatch(
+            lambda b, bid: seen.append((bid, b.count()))
+        ),
+        str(tmp_path),
+    )
+    assert [n for _, n in sorted(seen) if n] == [1, 2, 3, 4]
+
+
+def test_streaming_additive_fingerprint_matches_batch(spark, sf_dir, tmp_path):
     src = ParquetTarget("t", sf_dir)
-    df = src.read(spark, "events")
-    out = str(tmp_path_factory.mktemp("stream_src"))
-    df.withColumn("chunk", (df.event_id % 4).cast("int")).repartition(
-        4, "chunk"
-    ).drop("chunk").write.mode("overwrite").parquet(out)
-    return out, df.schema, src.table_schema(spark, "events")
-
-
-def test_streaming_additive_fingerprint_matches_batch(spark, sf_dir, chunked_events, tmp_path):
-    src_dir, schema, tschema = chunked_events
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    events = src.read(spark, "events")
+    tschema = src.table_schema(spark, "events")
+    _replay(
+        spark,
+        _chunks_by(events, "event_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_additive_fingerprint(sdf, tschema, CFG, buckets=64)
+            .writeStream.outputMode("complete")
+            .format("memory").queryName("fp_state")
+        ),
+        str(tmp_path),
     )
-    state = streaming_additive_fingerprint(sdf, tschema, CFG, buckets=64)
-    q = (
-        state.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("fp_state")
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = finalize_additive_fingerprint(spark.table("fp_state"))
-    batch = additive_fingerprint(
-        ParquetTarget("t", sf_dir).read(spark, "events"), tschema, CFG
-    ).collect()[0].fp
+    batch = additive_fingerprint(events, tschema, CFG).collect()[0].fp
     assert streamed == batch
     # bounded state: at most `buckets` rows
     assert spark.table("fp_state").count() <= 64
 
 
-def test_stateful_bucket_fingerprint_matches_batch(spark, sf_dir, chunked_events, tmp_path):
+def test_stateful_bucket_fingerprint_matches_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState fold across micro-batches == batch additive."""
-    src_dir, schema, tschema = chunked_events
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    src = ParquetTarget("t", sf_dir)
+    events = src.read(spark, "events")
+    tschema = src.table_schema(spark, "events")
+    _replay(
+        spark,
+        _chunks_by(events, "event_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_stateful_bucket_fingerprint(sdf, tschema, CFG, buckets=16)
+            .writeStream.outputMode("update")
+            .format("memory").queryName("bucket_state")
+        ),
+        str(tmp_path),
     )
-    emitted = streaming_stateful_bucket_fingerprint(sdf, tschema, CFG, buckets=16)
-    q = (
-        emitted.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("bucket_state")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = finalize_stateful_bucket_fingerprint(spark.table("bucket_state"))
-    batch = additive_fingerprint(
-        ParquetTarget("t", sf_dir).read(spark, "events"), tschema, CFG
-    ).collect()[0].fp
+    batch = additive_fingerprint(events, tschema, CFG).collect()[0].fp
     assert streamed == batch
     # emit-on-change: multiple micro-batches touched at least one bucket
     assert spark.table("bucket_state").selectExpr("max(updates)").collect()[0][0] >= 2
 
 
-def test_streaming_windowed_counts_matches_batch(spark, chunked_events, tmp_path):
-    src_dir, schema, _ = chunked_events
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
+def test_streaming_windowed_counts_matches_batch(spark, sf_dir, tmp_path):
+    events = ParquetTarget("t", sf_dir).read(spark, "events")
+    _replay(
+        spark,
+        _chunks_by(events, "event_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_windowed_counts(sdf, window="6 hours", watermark="1 hour")
+            .writeStream.outputMode("complete")
+            .format("memory").queryName("win_counts")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_windowed_counts(sdf, window="6 hours", watermark="1 hour")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_counts")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = sorted(map(tuple, spark.table("win_counts").collect()))
-    batch_df = spark.read.parquet(src_dir)
     want = sorted(
-        map(tuple, streaming_windowed_counts(batch_df, window="6 hours").collect())
+        map(tuple, streaming_windowed_counts(events, window="6 hours").collect())
     )
     assert got == want and got
 
@@ -126,29 +113,20 @@ def test_streaming_dedup_matches_batch_distinct(spark, sf_dir, tmp_path):
     from pgverify_spark.streaming.incremental import streaming_dedup
 
     docs = ParquetTarget("t", sf_dir).read(spark, "documents")
+    # doc_id + 1000001: each duplicate lands one chunk after its original
     dup = docs.filter("doc_id % 3 = 0").selectExpr(
-        "doc_id + 1000000 AS doc_id", "text", "lang", "source", "n_chars"
+        "doc_id + 1000001 AS doc_id", "text", "lang", "source", "n_chars"
     )
     both = docs.unionByName(dup)
-    src = str(tmp_path / "src")
-    # duplicates land in a different chunk than their originals
-    both.withColumn("chunk", (both.doc_id % 4).cast("int")).repartition(
-        4, "chunk"
-    ).drop("chunk").write.mode("overwrite").parquet(src)
-
-    sdf = spark.readStream.schema(both.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        streaming_dedup(sdf)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
+    _replay(
+        spark,
+        _chunks_by(both, "doc_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_dedup(sdf).writeStream.outputMode("append")
+            .format("memory").queryName("dedup_out")
+        ),
+        str(tmp_path),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     kept = spark.table("dedup_out")
     batch_hashes = {
         r.h
@@ -217,42 +195,23 @@ def test_streaming_session_rollup_matches_batch_sessionize(spark, sf_dir, tmp_pa
     feeding week k+1 only after week k means no event is ever behind the
     watermark, so nothing can be late-dropped and the result is
     deterministic — arbitrary-order chunks make dropping a timing race)."""
-    import glob
-    import shutil
-
-    from pgverify_spark.functions import timecol
     from pgverify_spark.operators.rollup import sessionize
     from pgverify_spark.streaming.incremental import streaming_session_rollup
 
     df = ParquetTarget("t", sf_dir).read(spark, "events")
-    (
-        df.withColumn("wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("wk")
-        .parquet(str(tmp_path / "weeks"))
+    _replay(
+        spark,
+        _chunks_by(df, bucket_sql(df, US_PER_WEEK)),
+        lambda sdf, _: (
+            streaming_session_rollup(sdf).writeStream.outputMode("complete")
+            .format("memory").queryName("sess_state")
+        ),
+        str(tmp_path),
     )
-    stream_in = tmp_path / "in"
-    stream_in.mkdir()
-    sdf = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(str(stream_in))
-    q = (
-        streaming_session_rollup(sdf)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_state")
-        .option("checkpointLocation", str(tmp_path / "ck_sess"))
-        .start()
-    )
-    try:
-        for i, wd in enumerate(sorted(glob.glob(str(tmp_path / "weeks" / "wk=*")))):
-            for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                shutil.copy(f, str(stream_in / f"wk{i}_{j}.parquet"))
-            q.processAllAvailable()
-        streamed = {
-            (r.user_id, r.start_us, r.end_us, r.n_events, r.sum_value)
-            for r in spark.table("sess_state").collect()
-        }
-    finally:
-        q.stop()
+    streamed = {
+        (r.user_id, r.start_us, r.end_us, r.n_events, r.sum_value)
+        for r in spark.table("sess_state").collect()
+    }
     batch = {
         (r.user_id, r.start_us, r.end_us, r.n_events, r.sum_value)
         for r in sessionize(df).collect()
@@ -270,53 +229,29 @@ def test_streaming_funnel_matches_batch(spark, sf_dir, tmp_path):
         streaming_funnel_state,
     )
 
-    src = ParquetTarget("t", sf_dir)
-    df = src.read(spark, "events")
-    out = str(tmp_path / "weekly_src")
-    # weekly time-ordered chunk files (type-adaptive week bucket)
-    from pgverify_spark.functions.timecol import US_PER_WEEK, bucket_sql
-
-    df.withColumn(
-        "wk", F.expr(bucket_sql(df, US_PER_WEEK)).cast("int")
-    ).write.mode("overwrite").partitionBy("wk").parquet(out)
+    df = ParquetTarget("t", sf_dir).read(spark, "events")
     gap = 86_400_000_000
-    import glob
-
-    week_dirs = sorted(glob.glob(f"{out}/wk=*"))
-    assert len(week_dirs) >= 4
-    stream_in = str(tmp_path / "stream_in")
-    os.makedirs(stream_in)
-    sdf = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_in)
+    # weekly time-ordered chunks (type-adaptive week bucket), one
+    # micro-batch each so micro-batches can't reorder them
+    weeks = _chunks_by(df, bucket_sql(df, US_PER_WEEK))
+    assert len(weeks) >= 4
+    _replay(
+        spark,
+        weeks,
+        lambda sdf, _: (
+            streaming_funnel_state(sdf, max_gap_us=gap)
+            .writeStream.outputMode("update")
+            .format("memory").queryName("funnel_state")
+        ),
+        str(tmp_path),
     )
-    state = streaming_funnel_state(sdf, max_gap_us=gap)
-    q = (
-        state.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("funnel_state")
-        .option("checkpointLocation", str(tmp_path / "ckf"))
-        .start()
-    )
-    try:
-        # feed week chunks strictly in time order, one processAllAvailable
-        # per week so micro-batches can't reorder them
-        import shutil
-
-        for i, wd in enumerate(week_dirs):
-            for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-            q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = finalize_streaming_funnel(spark.table("funnel_state"))
     batch = [tuple(r) for r in funnel(df, max_gap_us=gap).collect()]
     assert sorted(streamed) == sorted(batch)
     # state emits only on change: every user's final stage came from a
     # bounded number of updates (at most one per week + initial)
     em = spark.table("funnel_state").groupBy("user_id").count().collect()
-    assert all(r["count"] <= len(week_dirs) + 1 for r in em)
+    assert all(r["count"] <= len(weeks) + 1 for r in em)
 
 
 def test_streaming_windowed_counts_late_data_within_watermark(
@@ -491,27 +426,16 @@ def test_streaming_kmv_matches_batch(spark, sf_dir, tmp_path):
     )
 
     docs = ParquetTarget("t", sf_dir).read(spark, "documents")
-    out = str(tmp_path / "kmv_src")
-    docs.withColumn("chunk", (docs.doc_id % 4).cast("int")).repartition(
-        4, "chunk"
-    ).drop("chunk").write.mode("overwrite").parquet(out)
-    sdf = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(out)
+    _replay(
+        spark,
+        _chunks_by(docs, "doc_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_kmv_state(sdf, "text", "lang", 64)
+            .writeStream.outputMode("update")
+            .format("memory").queryName("kmv_state")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_kmv_state(sdf, "text", "lang", 64)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("kmv_state")
-        .option("checkpointLocation", str(tmp_path / "ckk"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = finalize_streaming_kmv(spark.table("kmv_state"))
     batch = sorted(map(tuple, kmv_sketch(docs, "text", "lang", 64).collect()))
     assert streamed == batch
@@ -531,27 +455,16 @@ def test_streaming_hll_matches_batch(spark, sf_dir, tmp_path):
     )
 
     events = ParquetTarget("t", sf_dir).read(spark, "events")
-    out = str(tmp_path / "hll_src")
-    events.withColumn("chunk", (events.event_id % 4).cast("int")).repartition(
-        4, "chunk"
-    ).drop("chunk").write.mode("overwrite").parquet(out)
-    sdf = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(out)
+    _replay(
+        spark,
+        _chunks_by(events, "event_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_hll_state(sdf, "user_id", "event_type")
+            .writeStream.outputMode("update")
+            .format("memory").queryName("hll_state")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_hll_state(sdf, "user_id", "event_type")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("hll_state")
-        .option("checkpointLocation", str(tmp_path / "ckh"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = sorted(map(tuple, finalize_streaming_hll(spark.table("hll_state")).collect()))
     batch = sorted(map(tuple, hll_distinct(events, "user_id", "event_type").collect()))
     assert streamed == batch
@@ -563,48 +476,20 @@ def test_streaming_hll_matches_batch(spark, sf_dir, tmp_path):
 def test_streaming_debounce_matches_batch(spark, sf_dir, tmp_path):
     """Per-key last-seen left fold: streamed kept events equal the batch
     debounce under time-ordered weekly replay."""
-    import glob
-    import os
-    import shutil
-
-    from pgverify_spark.functions import timecol
     from pgverify_spark.operators.rollup import debounce
     from pgverify_spark.streaming.incremental import streaming_debounce
 
     events = ParquetTarget("t", sf_dir).read(spark, "events")
     win = 4 * 3600 * 1_000_000
-    tmp = tmp_path
-    (
-        events.withColumn(
-            "wk",
-            F.expr(timecol.bucket_sql(events, timecol.US_PER_WEEK)).cast("int"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("wk")
-        .parquet(str(tmp / "weeks"))
+    _replay(
+        spark,
+        _chunks_by(events, bucket_sql(events, US_PER_WEEK)),
+        lambda sdf, _: (
+            streaming_debounce(sdf, win).writeStream.outputMode("append")
+            .format("memory").queryName("sdeb_state")
+        ),
+        str(tmp_path),
     )
-    stream_in = str(tmp / "in")
-    os.makedirs(stream_in)
-    sdf = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_in)
-    )
-    q = (
-        streaming_debounce(sdf, win)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sdeb_state")
-        .option("checkpointLocation", str(tmp / "ck"))
-        .start()
-    )
-    try:
-        for i, wd in enumerate(sorted(glob.glob(f"{tmp}/weeks/wk=*"))):
-            for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-            q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = sorted(map(tuple, spark.table("sdeb_state").collect()))
     batch = sorted(map(tuple, debounce(events, win).collect()))
     assert streamed == batch
@@ -628,34 +513,23 @@ def test_streaming_constraint_report_matches_batch(spark, sf_dir, tmp_path):
         con.in_range("o_totalprice", 0, 200000),
         con.matches("o_orderpriority", "^[1-3]-"),
     ]
-    out = str(tmp_path / "scon_src")
-    orders.withColumn("chunk", (orders.o_orderkey % 4).cast("int")).repartition(
-        4, "chunk"
-    ).drop("chunk").write.mode("overwrite").parquet(out)
-    sdf = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(out)
+    _replay(
+        spark,
+        _chunks_by(orders, "o_orderkey % 4", range(4)),
+        lambda sdf, _: (
+            streaming_constraint_counts(sdf, suite)
+            .writeStream.outputMode("update")
+            .format("memory").queryName("scon_state")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_constraint_counts(sdf, suite)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("scon_state")
-        .option("checkpointLocation", str(tmp_path / "ckscon"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = sorted(map(tuple, finalize_streaming_constraints(
         spark.table("scon_state"), suite
     ).collect()))
     batch = sorted(map(tuple, con.constraint_report(orders, suite).collect()))
     assert streamed == batch
     with _pytest.raises(ValueError, match="unique"):
-        streaming_constraint_counts(sdf, [con.unique("o_orderkey")])
+        streaming_constraint_counts(orders, [con.unique("o_orderkey")])
 
 
 def test_streaming_countmin_matches_batch(spark, sf_dir, tmp_path):
@@ -669,27 +543,16 @@ def test_streaming_countmin_matches_batch(spark, sf_dir, tmp_path):
     )
 
     events = ParquetTarget("t", sf_dir).read(spark, "events")
-    out = str(tmp_path / "scm_src")
-    events.withColumn("chunk", (events.event_id % 4).cast("int")).repartition(
-        4, "chunk"
-    ).drop("chunk").write.mode("overwrite").parquet(out)
-    sdf = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(out)
+    _replay(
+        spark,
+        _chunks_by(events, "event_id % 4", range(4)),
+        lambda sdf, _: (
+            streaming_countmin(sdf, "user_id", 4, 64)
+            .writeStream.outputMode("update")
+            .format("memory").queryName("scm_state")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_countmin(sdf, "user_id", 4, 64)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("scm_state")
-        .option("checkpointLocation", str(tmp_path / "ckscm"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = sorted(
         map(tuple, finalize_streaming_countmin(spark.table("scm_state")).collect())
     )
@@ -711,27 +574,16 @@ def test_streaming_bloom_decontaminate_matches_batch(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = bloom_words(docs)
     train = docs.filter("doc_id % 10 <> 0")
-    src = tmp_path / "src"
-    (
-        train.withColumn("chunk", (train.doc_id % 3).cast("int"))
-        .repartition(3, "chunk")
-        .drop("chunk")
-        .write.mode("overwrite")
-        .parquet(str(src))
+    _replay(
+        spark,
+        _chunks_by(train, "doc_id % 3", range(3)),
+        lambda sdf, _: (
+            streaming_bloom_decontaminate(sdf, words)
+            .writeStream.outputMode("update")
+            .format("memory").queryName("sbloom_test")
+        ),
+        str(tmp_path),
     )
-    sdf = spark.readStream.schema(train.schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    q = (
-        streaming_bloom_decontaminate(sdf, words)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sbloom_test")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = {tuple(r) for r in spark.table("sbloom_test").collect()}
     batch = {tuple(r) for r in bloom_decontaminate(docs).collect()}
     assert streamed == batch
@@ -746,27 +598,15 @@ def test_streaming_lm_scores_matches_batch(spark, sf_dir, tmp_path):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     model = bigram_model(docs)
-    src = tmp_path / "src"
-    (
-        docs.withColumn("chunk", (docs.doc_id % 3).cast("int"))
-        .repartition(3, "chunk")
-        .drop("chunk")
-        .write.mode("overwrite")
-        .parquet(str(src))
+    _replay(
+        spark,
+        _chunks_by(docs, "doc_id % 3", range(3)),
+        lambda sdf, _: (
+            streaming_lm_scores(sdf, model).writeStream.outputMode("update")
+            .format("memory").queryName("slm_test")
+        ),
+        str(tmp_path),
     )
-    sdf = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    q = (
-        streaming_lm_scores(sdf, model)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("slm_test")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = {tuple(r) for r in spark.table("slm_test").collect()}
     batch = {tuple(r) for r in bigram_lm_scores(docs).collect()}
     assert streamed == batch
@@ -783,27 +623,14 @@ def test_streaming_lsh_ingest_probe_matches_batch(spark, sf_dir, tmp_path):
     corpus = docs.filter("doc_id % 10 <> 7")
     new = docs.filter("doc_id % 10 = 7")
     dedup.write_lsh_index(corpus, "t_stream_lsh", str(tmp_path / "idx"), 16)
-    (
-        new.withColumn("chunk", (F.col("doc_id") % 4).cast("int"))
-        .repartition(4, "chunk")
-        .drop("chunk")
-        .write.mode("overwrite")
-        .parquet(str(tmp_path / "src"))
+    _replay(
+        spark,
+        _chunks_by(new, "doc_id % 4", range(4)),
+        lambda sdf, tmp: streaming_lsh_ingest_probe(
+            sdf, "t_stream_lsh", f"{tmp}/out", 0.3
+        ),
+        str(tmp_path),
     )
-    sdf = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "src"))
-    )
-    q = (
-        streaming_lsh_ingest_probe(sdf, "t_stream_lsh", str(tmp_path / "out"), 0.3)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = sorted(
         map(tuple, spark.read.parquet(str(tmp_path / "out")).collect())
     )
@@ -824,31 +651,17 @@ def test_streaming_sample_quantiles_match_batch(spark, sf_dir, tmp_path):
     )
 
     orders = ParquetTarget("t", sf_dir).read(spark, "orders")
-    (
-        orders.withColumn("chunk", (orders.o_orderkey % 4).cast("int"))
-        .repartition(4, "chunk")
-        .drop("chunk")
-        .write.mode("overwrite")
-        .parquet(str(tmp_path / "src"))
-    )
-    sdf = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "src"))
-    )
+    chunks = _chunks_by(orders, "o_orderkey % 4", range(4))
     # high rate: sf0.001 orders is small, keep the sample non-trivial
-    q = (
-        streaming_sample_quantiles(
-            sdf, "o_totalprice", "o_orderkey", str(tmp_path / "sample"),
+    _replay(
+        spark,
+        chunks,
+        lambda sdf, tmp: streaming_sample_quantiles(
+            sdf, "o_totalprice", "o_orderkey", f"{tmp}/sample",
             rate_ppm=500_000,
-        )
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
+        ),
+        str(tmp_path),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = sorted(
         map(tuple, finalize_streaming_quantiles(spark, str(tmp_path / "sample")).collect())
     )
@@ -869,9 +682,7 @@ def test_streaming_sample_quantiles_match_batch(spark, sf_dir, tmp_path):
     # contract just asserted.
     from pgverify_spark.streaming.sketch import _write_sample_batch
 
-    replay_input = spark.read.parquet(str(tmp_path / "src")).filter(
-        "o_orderkey % 4 = 2"
-    )
+    replay_input = chunks[2]  # micro-batch 2 is chunk 2
     _write_sample_batch(
         replay_input, 2, "o_totalprice", "o_orderkey",
         str(tmp_path / "sample"), 500_000,
@@ -890,12 +701,12 @@ def test_streaming_sample_quantiles_match_batch(spark, sf_dir, tmp_path):
 
 
 def test_stateful_bucket_registry_query_matches_oracle(spark, duck, sf_dir):
-    """The REGISTERED stateful-fingerprint drive (bijective chunk->file
-    write, latest state per bucket) == its deterministic final-state
-    DuckDB twin — the r8 closure of the formerly rows-only streaming
-    entry.  Pins both the oracle math (associative modular hsum,
-    updates == count(DISTINCT chunk)) and the bijective write the
-    `updates` equality depends on."""
+    """The REGISTERED stateful-fingerprint drive (one file per chunk,
+    latest state per bucket) == its deterministic final-state DuckDB
+    twin — the r8 closure of the formerly rows-only streaming entry.
+    Pins both the oracle math (associative modular hsum,
+    updates == count(DISTINCT chunk)) and the one-file-per-chunk replay
+    the `updates` equality depends on."""
     import __spark_entry__ as entry
 
     fn = entry.queries()["streaming_stateful_bucket_fingerprint_events"]
@@ -911,8 +722,6 @@ def test_streaming_kmv_overlap_equals_batch(spark, sf_dir, tmp_path):
     """Streaming KMV set-ops: survivors merged across micro-batches and
     re-aggregated == the one-shot batch operator (the merge-then-trim
     subset argument), and batch replay is idempotent."""
-    from pyspark.sql import functions as F
-
     from pgverify_spark.operators import graph, sketch
     from pgverify_spark.streaming.sketch import (
         _write_kmv_overlap_batch,
@@ -930,32 +739,19 @@ def test_streaming_kmv_overlap_equals_batch(spark, sf_dir, tmp_path):
             edges, edges.selectExpr("doc_a % 2 = 0 AS side_a", "doc_b AS v")
         )
 
-    (
-        docs.withColumn("chunk", (F.col("doc_id") % 3).cast("int"))
-        .repartition(3, "chunk")
-        .drop("chunk")
-        .write.parquet(str(tmp_path / "src"))
+    chunks = _chunks_by(docs, "doc_id % 3", range(3))
+    _replay(
+        spark,
+        chunks,
+        lambda sdf, tmp: streaming_kmv_overlap(sdf, f"{tmp}/store", 64, to_sides),
+        str(tmp_path),
     )
-    sdf = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "src"))
-    )
-    q = (
-        streaming_kmv_overlap(sdf, str(tmp_path / "store"), 64, to_sides)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = finalize_streaming_kmv_overlap(spark, str(tmp_path / "store"), 64).collect()
     want = sketch.kmv_overlap(to_sides(docs), "v", "side_a", 64).collect()
     assert list(map(tuple, got)) == list(map(tuple, want))
 
     # replay idempotency: same batch_id re-fired replaces its partition
-    replay = spark.read.parquet(str(tmp_path / "src")).filter("doc_id % 3 = 1")
+    replay = chunks[1]  # micro-batch 1 is chunk 1
     _write_kmv_overlap_batch(replay, 1, str(tmp_path / "store"), 64, to_sides)
     once = sorted(map(tuple, spark.read.parquet(str(tmp_path / "store")).collect()))
     _write_kmv_overlap_batch(replay, 1, str(tmp_path / "store"), 64, to_sides)
@@ -967,41 +763,19 @@ def test_streaming_attribution_matches_batch(spark, sf_dir, tmp_path):
     """Per-user last-touch state replayed in weekly event-time order
     equals the batch attribution row-for-row, direct bucket included;
     credit rows are append-mode final."""
-    import glob
-    import os
-    import shutil
-
-    from pgverify_spark.functions import timecol
     from pgverify_spark.operators.funnel import attribute_conversions
     from pgverify_spark.streaming.funnel import streaming_attribution
 
     df = ParquetTarget("t", sf_dir).read(spark, "events")
-    weeks = str(tmp_path / "weeks")
-    df.withColumn(
-        "wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int")
-    ).write.mode("overwrite").partitionBy("wk").parquet(weeks)
-    stream_in = str(tmp_path / "in")
-    os.makedirs(stream_in)
-    sdf = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_in)
+    _replay(
+        spark,
+        _chunks_by(df, bucket_sql(df, US_PER_WEEK)),
+        lambda sdf, _: (
+            streaming_attribution(sdf).writeStream.outputMode("append")
+            .format("memory").queryName("sattr_test")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_attribution(sdf)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sattr_test")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        for i, wd in enumerate(sorted(glob.glob(f"{weeks}/wk=*"))):
-            for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-            q.processAllAvailable()
-    finally:
-        q.stop()
     streamed = sorted(map(tuple, spark.table("sattr_test").collect()))
     batch = sorted(map(tuple, attribute_conversions(df).collect()))
     assert streamed == batch
@@ -1013,11 +787,6 @@ def test_streaming_scd2_matches_batch(spark, sf_dir, tmp_path):
     once (final), and a user whose run spans several micro-batches
     leaves ONE latest open snapshot after finalize — superseded
     snapshots from earlier batches drop out."""
-    import glob
-    import os
-    import shutil
-
-    from pgverify_spark.functions import timecol
     from pgverify_spark.operators.rollup import scd2_intervals
     from pgverify_spark.streaming.scd2 import (
         finalize_streaming_scd2,
@@ -1025,32 +794,15 @@ def test_streaming_scd2_matches_batch(spark, sf_dir, tmp_path):
     )
 
     df = ParquetTarget("t", sf_dir).read(spark, "events")
-    weeks = str(tmp_path / "weeks")
-    df.withColumn(
-        "wk", F.expr(timecol.bucket_sql(df, timecol.US_PER_WEEK)).cast("int")
-    ).write.mode("overwrite").partitionBy("wk").parquet(weeks)
-    stream_in = str(tmp_path / "in")
-    os.makedirs(stream_in)
-    sdf = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_in)
+    _replay(
+        spark,
+        _chunks_by(df, bucket_sql(df, US_PER_WEEK)),
+        lambda sdf, _: (
+            streaming_scd2(sdf).writeStream.outputMode("update")
+            .format("memory").queryName("sscd2_test")
+        ),
+        str(tmp_path),
     )
-    q = (
-        streaming_scd2(sdf)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sscd2_test")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        for i, wd in enumerate(sorted(glob.glob(f"{weeks}/wk=*"))):
-            for j, f in enumerate(sorted(glob.glob(f"{wd}/*.parquet"))):
-                shutil.copy(f, f"{stream_in}/wk{i}_{j}.parquet")
-            q.processAllAvailable()
-    finally:
-        q.stop()
     emitted = spark.table("sscd2_test")
     streamed = sorted(
         map(tuple, finalize_streaming_scd2(emitted).collect()),
