@@ -66,8 +66,15 @@ def _ordered_digest(arr: str, field: str = "h") -> str:
     """md5 over the ``field`` values of a struct array sorted by all of
     its fields in order.  The sort makes the digest independent of the
     order ``collect_list`` saw the rows in (a sort-based aggregate
-    fallback does not keep an upstream sort)."""
-    return f"md5(array_join(transform(array_sort({arr}), x -> x.{field}), ''))"
+    fallback does not keep an upstream sort).
+
+    ``sort_array`` and the field projection ``arr.field`` are generated
+    code; ``array_sort``'s default comparator and ``transform`` are
+    lambdas evaluated interpreted on every comparison and element.  The
+    order is the same: both sorts compare structs field by field,
+    ascending, and a ``collect_list(struct(...))`` holds no null element
+    for their null placements to disagree on."""
+    return f"md5(array_join(sort_array({arr}).{field}, ''))"
 
 
 #: Ordered fingerprint over (k, h) pairs as a single aggregate expression:
@@ -298,7 +305,7 @@ def bookend_fingerprint(
     cols = config.typed_cols(schema.hashed_cols(config.valid_column))
     r = row_concat_sql(cols, DIALECT_SPARK, config.trunc_unit)
     kr = _parallelize(df).selectExpr(f"{k} AS k", f"{r} AS r")
-    half = _bookend_half("array_sort(collect_list(struct(k, r)))")
+    half = _bookend_half("sort_array(collect_list(struct(k, r)))")
     start = (
         kr.orderBy(F.col("k").asc(), F.col("r").asc())
         .limit(n)
@@ -1173,7 +1180,7 @@ def cardinality_fingerprint(
     percol = regs.groupBy("grp").agg(
         F.expr(
             "concat(grp, ':', count(1), ':', md5(array_join(transform("
-            "array_sort(collect_list(struct(bucket, r))), "
+            "sort_array(collect_list(struct(bucket, r))), "
             "x -> concat(x.bucket, ':', x.r)), ','))) "
         ).alias("s")
     )
@@ -1294,7 +1301,7 @@ def _small_fused(
             f"CASE WHEN count(1) FILTER (WHERE sampled) = 0 THEN 'no rows' "
             f"ELSE {_ordered_digest(sampled_kh)} END"
         ),
-        "bookend": "array_sort(collect_list(struct(k, r)))",
+        "bookend": "sort_array(collect_list(struct(k, r)))",
     }
     fps = rows.selectExpr(*[f"{outs[m]} AS fp_{m}" for m in modes])
     if "bookend" not in want:

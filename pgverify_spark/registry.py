@@ -53,10 +53,10 @@ class ParquetTarget(_ParquetTarget):
     """Registry-scoped ParquetTarget over the driver's WRITE-ONCE
     testdata, with a session-scoped read/schema memo.
 
-    ``spark.read.parquet`` lists files and reads footers on every call
-    (~0.1 s warm), and a bench/correctness pass issues hundreds of reads
-    of the same immutable tables — 15-25 s of pure listing overhead in a
-    ~60 s suite.  A cached DataFrame bakes its file listing at creation,
+    ``sources.parquet.ParquetTarget.read`` lists files and reads a footer
+    on every call (~0.02 s warm on a 4-core host), and a bench or
+    correctness pass issues hundreds of reads of the same immutable
+    tables.  A cached DataFrame bakes its file listing at creation,
     so this memo is ONLY safe for write-once data; the library
     ``sources.parquet.ParquetTarget`` keeps fresh listings for mutable
     targets, and every registry target points at the driver's testdata
@@ -3974,8 +3974,11 @@ def _streaming_entry() -> dict[str, tuple[Callable, str | None]]:
         from pgverify_spark.streaming.incremental import streaming_dedup
 
         docs = ParquetTarget("t", sf_dir).read(spark, "documents")
+        # doc_id + 1000001: under the doc_id % 4 chunks each duplicate
+        # lands one chunk after its original (chunk 3's in chunk 0), so
+        # the dedup state must carry it across micro-batches
         dup = docs.filter("doc_id % 3 = 0").selectExpr(
-            "doc_id + 1000000 AS doc_id", "text", "lang", "source", "n_chars"
+            "doc_id + 1000001 AS doc_id", "text", "lang", "source", "n_chars"
         )
         both = docs.unionByName(dup)
         _replay(

@@ -242,6 +242,41 @@ def test_fused_fingerprints_match_standalone_ops(spark, duck, sf_dir):
         fused_fingerprints(orders, TESTDATA_TABLES["orders"], large, ("bookend",))
 
 
+def _expression_names(df) -> set[str]:
+    """Class names of every expression node in ``df``'s optimized
+    logical plan, walked through py4j (every plan node's expressions and
+    their children, every plan child)."""
+    names, nodes = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while nodes:
+        node = nodes.pop()
+        exprs = node.expressions()
+        stack = [exprs.apply(i) for i in range(exprs.size())]
+        while stack:
+            e = stack.pop()
+            names.add(e.getClass().getSimpleName())
+            kids = e.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_small_fused_digests_are_lambda_free(spark, sf_dir):
+    """The small-input ordered digests sort with ``sort_array`` and
+    project the struct field directly: no ``array_sort`` comparator or
+    ``transform`` lambda, which Spark evaluates interpreted per
+    comparison and per element, is left in the plan."""
+    from pgverify_spark.operators.fingerprint import _small_fused
+
+    df = ParquetTarget("t", sf_dir).read(spark, "nation")
+    fused = _small_fused(
+        df, TESTDATA_TABLES["nation"], VerifyConfig(), ("full", "sparse", "rowcount")
+    )
+    names = _expression_names(fused)
+    assert not names & {"ArraySort", "ArrayTransform", "LambdaFunction"}, sorted(names)
+    assert {"SortArray", "GetArrayStructFields", "Md5"} <= names, sorted(names)
+
+
 def test_verify_fuses_modes_into_one_scan(spark, sf_dir):
     """A (full, rowcount, additive) verify run must not scan the table
     once per mode: the union plan's scan count stays at one per
